@@ -9,11 +9,9 @@ Each query is materialized with the no-op sink (full execution, no
 driver-side result transfer), so timings reflect the distributed plan,
 not collect() serialization.
 
-Methodology (round-4 fixes for the two recorded bench failures):
-- HEADLINE is a FIXED ~20-query representative set — one per operator
-  family — so the JSON line stays well under the ~4 KB stdout tail the
-  driver retains (the full 92-query line overflowed it and recorded
-  "parsed": null). `SPARK_GRAFT_BENCH_ALL=1` sweeps every registered
+Methodology:
+- HEADLINE is a FIXED representative set, one or more keys per
+  operator family. `SPARK_GRAFT_BENCH_ALL=1` sweeps every registered
   query instead (single pass, for local use).
 - Median of 3 runs per query, in fixed list order, with the Spark
   cache cleared before every run: unchanged pure-builtin queries were
@@ -133,7 +131,7 @@ REPEATS = 3
 
 # Host-health canary (VERDICT r13 item 2): tpch_q1's idle median on
 # this host is 0.35-0.39 s (measured across r11-r13 isolated repeats
-# and both full-registry soaks; tools/bench_canary_r13_*.json). The
+# and both full-registry soaks). The
 # canary runs BEFORE the timed set and its reading is emitted in the
 # SAME driver-parseable JSON line, so any consumer of BENCH_rN.json
 # can discount a stall-inflated window (r13: driver total 104.6 s vs
@@ -264,8 +262,7 @@ def main() -> None:
     # r8/r9 both spent judge time on sub-0.15 s "regressions" that were
     # single-shot swing — recording the observed spread per key lets
     # the next reader mechanically separate noise from regression
-    # (VERDICT r9 item 7). Written to a SIDE file so the driver's
-    # single-JSON-line stdout contract (≲4 KB tail) stays untouched.
+    # (VERDICT r9 item 7). Written to the side file only.
     noise: dict[str, float] = {}
     for qi, name in enumerate(names):
         if qi and qi % recycle == 0:
@@ -293,22 +290,7 @@ def main() -> None:
         timings[name] = round(statistics.median(runs), 3)
         noise[name] = round(max(runs) - min(runs), 3)
 
-    # -1.0 marks a crashed query: exclude it from the headline total
-    # (a crasher must read as a loud failure, not a silent -1 s
-    # discount) and surface the names in their own key.
-    failed = sorted(k for k, v in timings.items() if v < 0)
-    total = round(sum(v for v in timings.values() if v >= 0), 3)
-    payload = {
-        "metric": "headline_total_wall",
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "sf": sf,
-    }
-    if failed:
-        payload["failed"] = failed
-    if canary:
-        payload["canary"] = canary
+    payload = _payload(timings, sf, canary)
 
     # Full 3-decimal per-key detail ALWAYS goes to a side file (env
     # override for soak/adjudication runs; a fixed default otherwise so
@@ -321,89 +303,33 @@ def main() -> None:
     with open(side, "w") as fh:
         json.dump({**payload, "noise_floor": noise}, fh, indent=1)
 
-    # The driver tail-captures only the LAST 2000 characters of stdout;
-    # BENCH_r11/r12 both recorded "parsed": null because the 64-75-key
-    # JSON line overflowed that window and lost its head (VERDICT r12
-    # item 2). Keep the driver-facing line < ~1870 chars. Which keys to
-    # drop when it overflows is governed by tools/bench_line_pinned.json
-    # (VERDICT r14 item 2): r14's smallest-first truncation made the
-    # driver's PERF diff misread 8 measured keys as dropped_from_bench.
-    # Now keys the driver saw LAST round, plus keys touched by the
-    # current round, are pinned (never dropped → 0 phantom drops), and
-    # any spare budget is filled from a rotation list of the previously
-    # omitted keys so every key becomes driver-visible within ~2 rounds.
-    # The headline TOTAL always covers every key; the full map lives in
-    # the side file above.
-    # Stop the session BEFORE writing the driver line: every JVM/py4j
-    # shutdown log then precedes the JSON, guaranteeing the line is the
-    # final bytes of the driver's exactly-2000-char combined-output tail
-    # (measured: BENCH_r12/r13/r14 all captured len==2000 tails ending
-    # at the line). That guarantee is what lets max_line sit at 1950
-    # instead of 1870, buying ~3 rotation keys of per-key visibility.
+    # Stop the session BEFORE writing the line, so every JVM/py4j
+    # shutdown log precedes the JSON on the combined output.
     spark.stop()
-    line = _fit_driver_line(payload, timings)
     sys.stdout.flush()
-    os.write(real_stdout, (line + "\n").encode())
+    os.write(real_stdout, (json.dumps(payload) + "\n").encode())
     os.close(real_stdout)
 
 
-def _fit_driver_line(
-    payload: dict,
-    timings: dict[str, float],
-    max_line: int = 1950,
-    pin_path: str | None = None,
-) -> str:
-    """Render the single driver-facing JSON line, dropping per-key
-    entries per the pinned/rotation policy (module comment above) until
-    it fits. Pure function of (payload, timings, pin file) — unit
-    tested offline in tests/test_bench_line.py."""
-    qline = {k: round(v, 2) for k, v in timings.items()}
-    if pin_path is None:
-        pin_path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)),
-            "tools",
-            "bench_line_pinned.json",
-        )
-    pinned: set[str] = set()
-    rotate: list[str] = []
-    if os.path.exists(pin_path):
-        with open(pin_path) as fh:
-            _p = json.load(fh)
-        pinned = set(_p.get("pinned", []))
-        rotate = _p.get("rotate_priority", [])
-    rot_rank = {k: i for i, k in enumerate(rotate)}
-    droppable = [k for k in qline if qline[k] >= 0]
-    # Drop order (first element dropped first):
-    #   1. unpinned, not in the rotation window — smallest timing first
-    #   2. unpinned, in the rotation window — lowest rotation priority
-    #      first (so the head of rotate_priority survives longest)
-    #   3. pinned — smallest first, only if pinned alone overflows
-    #      (loud: that means the pin set itself must shrink next round)
-    drop_order = (
-        sorted(
-            (k for k in droppable if k not in pinned and k not in rot_rank),
-            key=lambda k: (qline[k], k),
-        )
-        + sorted(
-            (k for k in droppable if k not in pinned and k in rot_rank),
-            key=lambda k: -rot_rank[k],
-        )
-        + sorted(
-            (k for k in droppable if k in pinned), key=lambda k: (qline[k], k)
-        )
-    )
-    omitted = 0
-    while True:
-        out = dict(payload)
-        out["queries"] = qline
-        if omitted:
-            out["queries_omitted"] = omitted
-            out["detail_file"] = "tools/bench_headline_last.json"
-        line = json.dumps(out, separators=(",", ":"))
-        if len(line) <= max_line or not drop_order:
-            return line
-        qline.pop(drop_order.pop(0))
-        omitted += 1
+def _payload(
+    timings: dict[str, float], sf: float | None, canary: dict | None
+) -> dict:
+    """The stdout/side-file payload. -1.0 marks a crashed query: it is
+    excluded from the total (a crasher must read as a loud failure,
+    not a silent -1 s discount) and listed under ``failed``."""
+    failed = sorted(k for k, v in timings.items() if v < 0)
+    payload = {
+        "metric": "headline_total_wall",
+        "value": round(sum(v for v in timings.values() if v >= 0), 3),
+        "unit": "sec",
+        "queries": timings,
+        "sf": sf,
+    }
+    if failed:
+        payload["failed"] = failed
+    if canary:
+        payload["canary"] = canary
+    return payload
 
 
 if __name__ == "__main__":

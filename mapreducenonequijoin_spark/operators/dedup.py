@@ -462,7 +462,9 @@ def connected_components(
     re-checkpointed so the temp files are droppable.
 
     Output: (vertex_col, cluster_rep) for ALL vertices; singletons
-    map to themselves without entering the loop.
+    map to themselves without entering the loop. Edges with a NULL
+    endpoint are dropped before the edge count that picks the arm:
+    NULL is no vertex, so such an edge connects nothing.
 
     Small-graph fast path (round 8, the dedup_clusters perf-watch
     item): when the symmetrized edge list is at most
@@ -485,7 +487,7 @@ def connected_components(
     ).unionByName(
         edges.select(F.col(dst_col).alias("__src"), F.col(src_col).alias("__dst"))
     )
-    sym = sym.localCheckpoint(eager=True)  # edges reused every round
+    sym = sym.dropna().localCheckpoint(eager=True)  # edges reused every round
     # In-plan shuffle sizing (the pagerank lesson, VERDICT r6), made
     # DATA-AWARE: the loop below runs ~6 shuffles × O(log diameter)
     # rounds, all materialized INSIDE this function by the eager

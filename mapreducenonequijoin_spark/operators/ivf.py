@@ -103,7 +103,8 @@ def kmeans_lite(
     1 MB input). Same gated-fast-path pattern as _cc_local and the
     exact-kNN router: past the gate the distributed kernel runs
     unchanged, so a 100 TB corpus never touches this branch. The
-    local accumulation order (ascending id) sits inside the SAME
+    local accumulation order (the order in which the collected
+    partitions arrive, not ascending id) sits inside the SAME
     float-summation-order envelope as the distributed combine
     (arrival-order partials); equality of resulting ASSIGNMENTS vs
     the distributed kernel is pinned by tests/test_ivf_kernel_equiv.py

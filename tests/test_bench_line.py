@@ -1,9 +1,6 @@
-"""Unit tests for bench.py's driver-line truncation policy (VERDICT
-r14 item 2): keys the driver saw last round are pinned — never dropped
-from the stdout JSON line — so PERF's round diff records zero phantom
-dropped_from_bench; spare budget is filled from the rotation list head.
-Offline (no Spark): _fit_driver_line is a pure function of its inputs.
-"""
+"""Offline test (no Spark) of bench.py's stdout payload: the headline
+total covers every measured key, and crashed keys are excluded from it
+and listed by name."""
 
 from __future__ import annotations
 
@@ -15,78 +12,17 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-PIN_PATH = os.path.join(REPO, "tools", "bench_line_pinned.json")
 
-
-def _payload(timings):
-    return {
-        "metric": "headline_total_wall",
-        "value": round(sum(timings.values()), 3),
-        "unit": "sec",
-        "queries": timings,
-        "sf": 0.1,
-        "canary": {"median": 0.4, "idle_floor": 0.39, "ratio": 1.03},
-    }
-
-
-def _r14_like_timings():
-    """The actual r14 full per-key map — the realistic overflow case."""
-    side = json.load(open(os.path.join(REPO, "tools", "bench_headline_last.json")))
-    return dict(side["queries"])
-
-
-def test_pinned_keys_never_dropped():
-    timings = _r14_like_timings()
-    pins = json.load(open(PIN_PATH))
-    line = bench._fit_driver_line(_payload(timings), timings)
+def test_total_covers_every_key_and_lists_failed():
+    timings = {f"q{i:02d}_{'x' * 40}": round(0.1 * i, 3) for i in range(90)}
+    timings["q_crashed_a"] = -1.0
+    timings["q_crashed_b"] = -1.0
+    canary = {"median": 0.4, "idle_floor": 0.39, "ratio": 1.03}
+    line = json.dumps(bench._payload(timings, 0.1, canary))
+    assert "\n" not in line
     parsed = json.loads(line)
-    # 1950 cap: the line must stay the final bytes of the driver's
-    # exactly-2000-char tail (bench.py stops Spark before writing it)
-    assert len(line) <= 1950
-    for k in pins["pinned"]:
-        if k in timings:
-            assert k in parsed["queries"], f"pinned key {k} was dropped"
-
-
-def test_rotation_head_fills_spare_budget():
-    timings = _r14_like_timings()
-    pins = json.load(open(PIN_PATH))
-    line = bench._fit_driver_line(_payload(timings), timings)
-    parsed = json.loads(line)
-    present_rot = [k for k in pins["rotate_priority"] if k in parsed["queries"]]
-    dropped_rot = [
-        k
-        for k in pins["rotate_priority"]
-        if k in timings and k not in parsed["queries"]
-    ]
-    # whatever fits comes from the HEAD of rotate_priority: no dropped
-    # rotation key may rank ahead of a kept one
-    if present_rot and dropped_rot:
-        order = {k: i for i, k in enumerate(pins["rotate_priority"])}
-        assert max(order[k] for k in present_rot) < min(
-            order[k] for k in dropped_rot
-        )
-
-
-def test_no_pin_file_falls_back_to_smallest_first():
-    timings = {f"q{i:02d}_{'x' * 40}": float(i) for i in range(60)}
-    line = bench._fit_driver_line(
-        _payload(timings), timings, max_line=1200, pin_path="/nonexistent"
-    )
-    parsed = json.loads(line)
-    assert len(line) <= 1200
-    kept = sorted(float(v) for v in parsed["queries"].values())
-    # smallest-timing keys dropped first => kept set is the top tail
-    assert kept[0] >= 60 - len(kept) - 1
-    assert parsed["queries_omitted"] == 60 - len(parsed["queries"])
-
-
-def test_total_covers_every_key_even_when_omitted():
-    timings = _r14_like_timings()
-    payload = _payload(timings)
-    line = bench._fit_driver_line(payload, timings)
-    parsed = json.loads(line)
-    assert parsed["value"] == payload["value"]
-    if parsed.get("queries_omitted"):
-        assert parsed["detail_file"] == "tools/bench_headline_last.json"
+    assert parsed["queries"] == timings
+    assert parsed["value"] == round(sum(v for v in timings.values() if v >= 0), 3)
+    assert parsed["failed"] == ["q_crashed_a", "q_crashed_b"]
+    assert parsed["canary"] == canary
+    assert parsed["sf"] == 0.1

@@ -595,17 +595,19 @@ def test_connected_components_high_diameter_path(spark):
 def test_connected_components_local_path_matches_distributed(spark):
     """The gated driver union-find must be label-identical to the
     distributed contract-and-broadcast kernel on a mixed graph
-    (path + clique + stars + singletons)."""
+    (path + clique + stars + singletons + a NULL-endpoint edge)."""
     import pyspark.sql.functions as F
 
     from mapreducenonequijoin_spark.operators.dedup import connected_components
 
-    # path 0-..-49, clique 100..109, stars 200-(201..205), 300-(301..303)
+    # path 0-..-49, clique 100..109, stars 200-(201..205), 300-(301..303),
+    # and an edge with a NULL endpoint that must connect nothing
     pairs = (
         [(i, i + 1) for i in range(49)]
         + [(a, b) for a in range(100, 110) for b in range(a + 1, 110)]
         + [(200, x) for x in range(201, 206)]
         + [(300, x) for x in range(301, 304)]
+        + [(350, None)]
     )
     edges = spark.createDataFrame(pairs, "a long, b long")
     verts = spark.range(0, 400).select(F.col("id").alias("v"))
@@ -624,6 +626,8 @@ def test_connected_components_local_path_matches_distributed(spark):
     reps = dict(local)
     assert reps[49] == 0 and reps[109] == 100 and reps[205] == 200
     assert reps[310] == 310  # singleton maps to itself
+    assert reps[350] == 350  # its only edge has a NULL endpoint
+    assert set(reps) == set(range(400))  # no None vertex
 
 
 def test_image_phash_brightness_invariance(spark, sf_dir):

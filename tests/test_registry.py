@@ -17,7 +17,7 @@ import re
 import duckdb
 import pytest
 
-from mapreducenonequijoin_spark.plans import QUERIES, oracle_sql_map
+from mapreducenonequijoin_spark.plans import QUERIES
 from mapreducenonequijoin_spark.sources.io import TABLES
 
 SF = "/root/testdata/sf0.001"
@@ -40,13 +40,30 @@ def duck():
     return con
 
 
+@pytest.fixture(scope="module")
+def built(spark):
+    """Every lazily-planned query built once, in registry order, for the
+    three censuses below: name → (columns, executed-plan string). Both
+    are read right after the build, under the session conf it ran with."""
+    out = {}
+    for name, qd in QUERIES.items():
+        if _EAGER.match(name):
+            continue
+        df = qd.fn(spark, SF)
+        out[name] = (
+            df.columns,
+            df._jdf.queryExecution().executedPlan().toString(),
+        )
+    return out
+
+
 @pytest.mark.slow
-def test_oracle_columns_match_spark_aliases(spark, duck):
+def test_oracle_columns_match_spark_aliases(built, duck):
     mismatches = []
     for name, qd in QUERIES.items():
         if qd.oracle is None or _EAGER.match(name):
             continue
-        spark_cols = sorted(qd.fn(spark, SF).columns)
+        spark_cols = sorted(built[name][0])
         duck_cols = sorted(
             r[0] for r in duck.execute(f"DESCRIBE {qd.oracle}").fetchall()
         )
@@ -101,12 +118,12 @@ _SCALAR_BROADCAST_OK = {
 
 
 @pytest.mark.slow
-def test_no_cartesian_or_bnlj_in_plans(spark):
+def test_no_cartesian_or_bnlj_in_plans(built):
     offenders = []
     for name, qd in QUERIES.items():
         if _EAGER.match(name) or name in _SCALAR_BROADCAST_OK:
             continue
-        plan = qd.fn(spark, SF)._jdf.queryExecution().executedPlan().toString()
+        plan = built[name][1]
         if "CartesianProduct" in plan or "BroadcastNestedLoopJoin" in plan:
             offenders.append(name)
     assert not offenders, offenders
@@ -317,14 +334,14 @@ def test_census_rejects_synthetic_global_window(spark):
 
 
 @pytest.mark.slow
-def test_no_unexplained_global_windows(spark):
+def test_no_unexplained_global_windows(built):
     from tools.explain_audit import global_window_lines
 
     offenders = []
     for name, qd in QUERIES.items():
         if _EAGER.match(name) or name in _GLOBAL_WINDOW_OK:
             continue
-        plan = qd.fn(spark, SF)._jdf.queryExecution().executedPlan().toString()
+        plan = built[name][1]
         hits = global_window_lines(plan)
         if hits:
             offenders.append((name, hits[0][:120]))
@@ -391,48 +408,6 @@ def test_survey_registry_index_sync():
         sorted(survey_ids ^ set(QUERIES)),
         "run tools/survey_sync.py",
     )
-
-
-def test_priority_matches_frozen_rotation():
-    """The registry head (the driver's 50-key correctness window) must
-    equal the frozen rotation window written by
-    `tools/rotation.py --freeze N` (VERDICT r11 items 1+5: the
-    "oldest driver-green first" cadence is generated, not hand-picked).
-    Mid-round additions register AFTER the window, so this stays green
-    until the next round-start freeze."""
-    import json
-
-    frozen = json.load(open("tools/rotation_window.json"))["window"]
-    head = list(QUERIES)[: len(frozen)]
-    assert head == frozen, (
-        "registry head != tools/rotation_window.json — re-run "
-        "tools/rotation.py --freeze at round start and mirror into "
-        "_PRIORITY",
-        [i for i, (a, b) in enumerate(zip(head, frozen)) if a != b],
-    )
-
-
-def test_rotation_window_is_fresh_and_well_formed():
-    """The frozen window derives from the committed CORRECTNESS history:
-    slot 1 is the flagship, every key is oracled, no duplicates, and no
-    key the driver has NEVER seen green is left out while an
-    already-green key occupies a slot (the generator's core invariant)."""
-    import json
-
-    from tools.rotation import FLAGSHIP, last_green_rounds
-
-    frozen = json.load(open("tools/rotation_window.json"))["window"]
-    assert frozen[0] == FLAGSHIP
-    assert len(frozen) == len(set(frozen)) == 50
-    oracled = set(oracle_sql_map())
-    assert set(frozen) <= oracled
-    green = last_green_rounds()
-    never = {k for k in oracled if k not in green and k != FLAGSHIP}
-    # every never-green key present at freeze time must be in the window
-    # (keys added after the freeze are exempt: they registered after
-    # the window and enter at the next freeze)
-    missing = never - set(frozen) - set(list(QUERIES)[50:])
-    assert not missing, f"never-driver-green keys absent from window: {missing}"
 
 
 def test_mad_outliers_bounded_and_robust(spark, sf_dir):
