@@ -2,8 +2,7 @@
 queries at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 
-    {"metric": "...", "value": N, "unit": "sec", "queries": {...},
-     "sf": ..., "canary": {"median": ..., "idle_floor": ..., "ratio": ...}}
+    {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 Each query is materialized with the no-op sink (full execution, no
 driver-side result transfer), so timings reflect the distributed plan,
@@ -129,22 +128,6 @@ HEADLINE: list[str] = [
 
 REPEATS = 3
 
-# Host-health canary (VERDICT r13 item 2): tpch_q1's idle median on
-# this host is 0.35-0.39 s (measured across r11-r13 isolated repeats
-# and both full-registry soaks). The
-# canary runs BEFORE the timed set and its reading is emitted in the
-# SAME driver-parseable JSON line, so any consumer of BENCH_rN.json
-# can discount a stall-inflated window (r13: driver total 104.6 s vs
-# 78.7 s clean = 1.33x, distinguishable only via side files) without
-# access to this repo's side artifacts. ratio = median / idle_floor;
-# ratio > ~1.5 means the window was measured under host stalls and
-# per-key numbers should be adjudicated via min-of-runs, not taken as
-# plan regressions.
-CANARY_QUERY = "tpch_q1_pricing_summary"
-CANARY_IDLE_FLOOR = 0.39
-CANARY_REPEATS = 3
-
-
 def main() -> None:
     # The driver parses stdout as EXACTLY ONE JSON line (BENCH_r01 was
     # recorded "parsed": null because JVM/py4j startup chatter shares
@@ -226,25 +209,6 @@ def main() -> None:
 
     warmup(spark)
 
-    # Canary first (see CANARY_* above): 3 warm repeats of tpch_q1,
-    # timed exactly like a headline key (clearCache + noop sink).
-    canary = None
-    if CANARY_QUERY in qs:
-        cruns = []
-        for _ in range(CANARY_REPEATS):
-            spark.catalog.clearCache()
-            t0 = time.time()
-            qs[CANARY_QUERY](spark, sf_dir).write.mode("overwrite").format(
-                "noop"
-            ).save()
-            cruns.append(time.time() - t0)
-        cmed = round(statistics.median(cruns), 3)
-        canary = {
-            "median": cmed,
-            "idle_floor": CANARY_IDLE_FLOOR,
-            "ratio": round(cmed / CANARY_IDLE_FLOOR, 2),
-        }
-
     # Recycle the session every N queries in BOTH modes: measured r6,
     # queries read up to 3x slower after ~100 prior executions in one
     # JVM (accumulated heap/codegen-cache pressure — AUDIT.md round-6
@@ -290,15 +254,15 @@ def main() -> None:
         timings[name] = round(statistics.median(runs), 3)
         noise[name] = round(max(runs) - min(runs), 3)
 
-    payload = _payload(timings, sf, canary)
+    payload = _payload(timings, sf)
 
-    # Full 3-decimal per-key detail ALWAYS goes to a side file (env
-    # override for soak/adjudication runs; a fixed default otherwise so
-    # driver rounds keep a machine-readable per-key record on disk).
+    # Full 3-decimal per-key detail ALWAYS goes to a side file: the
+    # env override, or an untracked default, so no run rewrites the
+    # committed record tools/bench_headline_last.json.
     side = os.environ.get("SPARK_GRAFT_BENCH_NOISE") or os.path.join(
         os.path.dirname(os.path.abspath(__file__)),
         "tools",
-        "bench_headline_last.json",
+        "bench_last_run.json",
     )
     with open(side, "w") as fh:
         json.dump({**payload, "noise_floor": noise}, fh, indent=1)
@@ -311,9 +275,7 @@ def main() -> None:
     os.close(real_stdout)
 
 
-def _payload(
-    timings: dict[str, float], sf: float | None, canary: dict | None
-) -> dict:
+def _payload(timings: dict[str, float], sf: float | None) -> dict:
     """The stdout/side-file payload. -1.0 marks a crashed query: it is
     excluded from the total (a crasher must read as a loud failure,
     not a silent -1 s discount) and listed under ``failed``."""
@@ -327,8 +289,6 @@ def _payload(
     }
     if failed:
         payload["failed"] = failed
-    if canary:
-        payload["canary"] = canary
     return payload
 
 

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import shingles_expr, simhash_frame
+from .joins import _SALT_COLS, _salt_hot_split
 
 __all__ = [
     "dedup_exact",
@@ -121,42 +122,38 @@ def minhash_near_dup_pairs(
     (|∩|/|∪| of distinct shingles — integer ratio, bit-exact across
     engines). Output: (a_id, b_id, jaccard).
 
-    ``salt_hot`` (opt-in, r12): power-law corpora put one hot cluster
-    of m near-identical texts into the SAME (band, key) bucket in
-    every band, and the self-join then emits C(m, 2) pairs from ONE
-    sort-merge task — an OUTPUT skew AQE's skew-join split cannot see
-    (its trigger reads input partition bytes; the hot bucket's input
-    is small — measured in tools/dedup_skew.py). With ``salt_hot = s``,
-    buckets holding > ``hot_bucket_min`` rows are block-decomposed:
-    the probe side keeps one deterministic salt u = pmod(hash(id), s),
-    the build side replicates hot rows to all s salts, and the join
-    key grows to (band, key, salt) — every a<b pair still matches
-    EXACTLY once (at the a-row's salt), so the pair set is unchanged
-    (tests/test_llm_ops.py asserts set equality), while the hot
-    bucket's max task drops from m² to m²/s pair tests. Hot-key
-    detection is one wordcount-shape count over the banded frame;
-    the hot set is duplicate-cluster-sized, hence broadcastable."""
+    ``salt_hot = s`` (opt-in) splits (band, key) buckets holding more
+    than ``hot_bucket_min`` rows ``s`` ways (see
+    ``joins._salt_hot_split``): a power-law corpus puts one hot cluster
+    of near-identical texts into the same bucket in every band."""
     bands = num_perms // rows_per_band
     sig = minhash_signatures(df, id_col, text_col, num_perms).cache()
     raw = banded_candidates_raw(
         sig, id_col, rows_per_band, bands, salt_hot, hot_bucket_min
     )
-    cand = (
-        raw.select("a_id", "b_id")
-        .distinct()  # a pair may collide in several bands
-    )
+    return _verify_jaccard(raw, sig, sig, id_col, "a_id", "b_id", threshold)
 
-    a_sh = sig.select(F.col(id_col).alias("a_id"), F.col("shingles").alias("a_sh"))
-    b_sh = sig.select(F.col(id_col).alias("b_id"), F.col("shingles").alias("b_sh"))
-    inter = F.size(F.array_intersect("a_sh", "b_sh"))
-    union = F.size("a_sh") + F.size("b_sh") - inter
-    jac = inter.cast("double") / union.cast("double")
-    return (
-        cand.join(a_sh, "a_id")
-        .join(b_sh, "b_id")
-        .withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select("a_id", "b_id", "jaccard")
+
+def _band_keys(
+    sig: DataFrame, id_col: str, side: str, rows_per_band: int, bands: int
+) -> DataFrame:
+    """(<side>_id, <side>_band, <side>_key): one row per signature and
+    band, keyed by the band's slice of the signature. Band keys only —
+    the shingle arrays stay out of the ×bands explode shuffle and join
+    back on the candidate set."""
+    key = F.concat_ws(
+        ",",
+        F.transform(
+            F.slice("mh", F.col("__band") * rows_per_band + 1, rows_per_band),
+            lambda x: x.cast("string"),
+        ),
+    )
+    return sig.withColumn(
+        "__band", F.explode(F.sequence(F.lit(0), F.lit(bands - 1)))
+    ).select(
+        F.col(id_col).alias(f"{side}_id"),
+        F.col("__band").alias(f"{side}_band"),
+        key.alias(f"{side}_key"),
     )
 
 
@@ -169,86 +166,22 @@ def banded_candidates_raw(
     hot_bucket_min: int = 256,
 ) -> DataFrame:
     """The banded LSH candidate self-join BEFORE the distinct —
-    (a_id, b_id) with a_id < b_id, one row per colliding band. Split
-    out of minhash_near_dup_pairs so tools/dedup_skew.py measures the
-    EXACT production join shape (including the opt-in hot-bucket salt
-    decomposition documented there)."""
-
-    def banded(side: str) -> DataFrame:
-        key = F.concat_ws(
-            ",",
-            F.transform(
-                F.slice("mh", F.col("__band") * rows_per_band + 1, rows_per_band),
-                lambda x: x.cast("string"),
-            ),
-        )
-        return (
-            sig.withColumn(
-                "__band", F.explode(F.sequence(F.lit(0), F.lit(bands - 1)))
-            )
-            .select(
-                F.col(id_col).alias(f"{side}_id"),
-                F.col("__band").alias(f"{side}_band"),
-                key.alias(f"{side}_key"),
-            )
-        )
-
+    (a_id, a_band, a_key, b_id, b_band, b_key) with a_id < b_id, one
+    row per colliding band, with or without ``salt_hot``."""
+    a = _band_keys(sig, id_col, "a", rows_per_band, bands)
+    b = _band_keys(sig, id_col, "b", rows_per_band, bands)
+    on = (
+        (F.col("a_band") == F.col("b_band"))
+        & (F.col("a_key") == F.col("b_key"))
+        & (F.col("a_id") < F.col("b_id"))
+    )
     if salt_hot > 1:
-        a, b = banded("a"), banded("b")
-        hot = F.broadcast(
-            a.groupBy("a_band", "a_key")
-            .count()
-            .filter(F.col("count") > hot_bucket_min)
-            .select(
-                F.col("a_band").alias("h_band"),
-                F.col("a_key").alias("h_key"),
-            )
+        a, b, salted = _salt_hot_split(
+            a, b, ["a_band", "a_key"], ["b_band", "b_key"], ["a_id"],
+            salt_hot, hot_bucket_min,
         )
-        a_salted = a.join(
-            hot,
-            (F.col("a_band") == F.col("h_band"))
-            & (F.col("a_key") == F.col("h_key")),
-            "left",
-        ).withColumn(
-            "a_salt",
-            F.when(
-                F.col("h_band").isNotNull(),
-                F.pmod(F.hash("a_id"), F.lit(salt_hot)),
-            ).otherwise(F.lit(0)),
-        ).drop("h_band", "h_key")
-        b_salted = (
-            b.join(
-                hot,
-                (F.col("b_band") == F.col("h_band"))
-                & (F.col("b_key") == F.col("h_key")),
-                "left",
-            )
-            .withColumn(
-                "b_salt",
-                F.explode(
-                    F.when(
-                        F.col("h_band").isNotNull(),
-                        F.sequence(F.lit(0), F.lit(salt_hot - 1)),
-                    ).otherwise(F.array(F.lit(0)))
-                ),
-            )
-            .drop("h_band", "h_key")
-        )
-        raw = a_salted.join(
-            b_salted,
-            (F.col("a_band") == F.col("b_band"))
-            & (F.col("a_key") == F.col("b_key"))
-            & (F.col("a_salt") == F.col("b_salt"))
-            & (F.col("a_id") < F.col("b_id")),
-        )
-    else:
-        raw = banded("a").join(
-            banded("b"),
-            (F.col("a_band") == F.col("b_band"))
-            & (F.col("a_key") == F.col("b_key"))
-            & (F.col("a_id") < F.col("b_id")),
-        )
-    return raw
+        return a.join(b, on & salted).drop(*_SALT_COLS)
+    return a.join(b, on)
 
 
 def incremental_candidates_raw(
@@ -261,94 +194,48 @@ def incremental_candidates_raw(
     hot_bucket_min: int = 256,
 ) -> DataFrame:
     """The asymmetric (delta×base) banded LSH candidate join BEFORE
-    the distinct — (delta_id, base_id), one row per colliding band.
-    Split out of minhash_incremental_pairs so tools/dedup_skew.py
-    measures the EXACT production join shape (VERDICT r12 item 5 —
-    the banded_candidates_raw pattern for the delta×base skeleton).
-
-    ``salt_hot`` (opt-in): a power-law BASE corpus puts one hot
-    cluster's identical signatures in the same (band, key) bucket in
-    every band; if the delta also carries copies of that cluster, the
-    bucket emits |delta∩cluster|·|base∩cluster| pairs per band into
-    ONE task — output skew AQE's byte-based input trigger cannot see.
-    With ``salt_hot = s``, BASE rows in buckets holding >
-    ``hot_bucket_min`` rows split into s blocks by hash(base_id) and
-    the matching DELTA rows replicate across all s blocks, so every
-    delta×base pair still meets exactly once per band (pair-set
-    equality property-tested) while max task output drops ×s."""
-
-    def banded(sig: DataFrame, side: str) -> DataFrame:
-        # band keys only — the shingle arrays stay out of the ×bands
-        # explode shuffle and join back on the verified candidate set
-        key = F.concat_ws(
-            ",",
-            F.transform(
-                F.slice("mh", F.col("__band") * rows_per_band + 1, rows_per_band),
-                lambda x: x.cast("string"),
-            ),
-        )
-        return (
-            sig.withColumn(
-                "__band", F.explode(F.sequence(F.lit(0), F.lit(bands - 1)))
-            )
-            .select(
-                F.col(id_col).alias(f"{side}_id"),
-                F.col("__band").alias(f"{side}_band"),
-                key.alias(f"{side}_key"),
-            )
-        )
-
-    d, b = banded(sig_d, "delta"), banded(sig_b, "base")
+    the distinct — (delta_id, delta_band, delta_key, base_id,
+    base_band, base_key), one row per colliding band. ``salt_hot``
+    splits the BASE side's hot buckets (see ``joins._salt_hot_split``)
+    and replicates the matching delta rows."""
+    d = _band_keys(sig_d, id_col, "delta", rows_per_band, bands)
+    b = _band_keys(sig_b, id_col, "base", rows_per_band, bands)
+    on = (F.col("delta_band") == F.col("base_band")) & (
+        F.col("delta_key") == F.col("base_key")
+    )
     if salt_hot > 1:
-        hot = F.broadcast(
-            b.groupBy("base_band", "base_key")
-            .count()
-            .filter(F.col("count") > hot_bucket_min)
-            .select(
-                F.col("base_band").alias("h_band"),
-                F.col("base_key").alias("h_key"),
-            )
+        b, d, salted = _salt_hot_split(
+            b, d, ["base_band", "base_key"], ["delta_band", "delta_key"],
+            ["base_id"], salt_hot, hot_bucket_min,
         )
-        b_salted = b.join(
-            hot,
-            (F.col("base_band") == F.col("h_band"))
-            & (F.col("base_key") == F.col("h_key")),
-            "left",
-        ).withColumn(
-            "b_salt",
-            F.when(
-                F.col("h_band").isNotNull(),
-                F.pmod(F.hash("base_id"), F.lit(salt_hot)),
-            ).otherwise(F.lit(0)),
-        ).drop("h_band", "h_key")
-        d_salted = (
-            d.join(
-                hot,
-                (F.col("delta_band") == F.col("h_band"))
-                & (F.col("delta_key") == F.col("h_key")),
-                "left",
-            )
-            .withColumn(
-                "d_salt",
-                F.explode(
-                    F.when(
-                        F.col("h_band").isNotNull(),
-                        F.sequence(F.lit(0), F.lit(salt_hot - 1)),
-                    ).otherwise(F.array(F.lit(0)))
-                ),
-            )
-            .drop("h_band", "h_key")
-        )
-        return d_salted.join(
-            b_salted,
-            (F.col("delta_band") == F.col("base_band"))
-            & (F.col("delta_key") == F.col("base_key"))
-            & (F.col("d_salt") == F.col("b_salt")),
-        )
-    return d.join(
-        b,
-        (F.col("delta_band") == F.col("base_band"))
-        & (F.col("delta_key") == F.col("base_key")),
+        return d.join(b, on & salted).drop(*_SALT_COLS)
+    return d.join(b, on)
+
+
+def _verify_jaccard(
+    raw: DataFrame,
+    sig_a: DataFrame,
+    sig_b: DataFrame,
+    id_col: str,
+    a_id: str,
+    b_id: str,
+    threshold: float,
+) -> DataFrame:
+    """(a_id, b_id, jaccard) for the distinct candidate pairs of
+    ``raw`` whose EXACT shingle Jaccard reaches ``threshold``; each
+    pair is verified once, however many bands it collided in."""
+    cand = raw.select(a_id, b_id).distinct()
+    a_sh = sig_a.select(F.col(id_col).alias(a_id), F.col("shingles").alias("__sh_a"))
+    b_sh = sig_b.select(F.col(id_col).alias(b_id), F.col("shingles").alias("__sh_b"))
+    inter = F.size(F.array_intersect("__sh_a", "__sh_b"))
+    union = F.size("__sh_a") + F.size("__sh_b") - inter
+    jac = inter.cast("double") / union.cast("double")
+    return (
+        cand.join(a_sh, a_id)
+        .join(b_sh, b_id)
+        .withColumn("jaccard", jac)
+        .filter(F.col("jaccard") >= threshold)
+        .select(a_id, b_id, "jaccard")
     )
 
 
@@ -377,36 +264,17 @@ def minhash_incremental_pairs(
     set, not with the corpus; the base signature frame is computed once
     and is reusable across ingest batches (persist it in production).
     Candidates verify with exact shingle Jaccard before reporting.
-    ``salt_hot`` opts in to the hot-bucket block decomposition (see
-    incremental_candidates_raw) for power-law duplicate corpora.
+    ``salt_hot`` opts in to the hot-bucket split (see
+    ``joins._salt_hot_split``) for power-law duplicate corpora.
     """
     bands = num_perms // rows_per_band
     sig_b = minhash_signatures(base, id_col, text_col, num_perms).cache()
     sig_d = minhash_signatures(delta, id_col, text_col, num_perms).cache()
-
-    cand = (
-        incremental_candidates_raw(
-            sig_d, sig_b, id_col, rows_per_band, bands, salt_hot,
-            hot_bucket_min,
-        )
-        .select("delta_id", "base_id")
-        .distinct()
+    raw = incremental_candidates_raw(
+        sig_d, sig_b, id_col, rows_per_band, bands, salt_hot, hot_bucket_min
     )
-    d_sh = sig_d.select(
-        F.col(id_col).alias("delta_id"), F.col("shingles").alias("d_sh")
-    )
-    b_sh = sig_b.select(
-        F.col(id_col).alias("base_id"), F.col("shingles").alias("b_sh")
-    )
-    inter = F.size(F.array_intersect("d_sh", "b_sh"))
-    union = F.size("d_sh") + F.size("b_sh") - inter
-    jac = inter.cast("double") / union.cast("double")
-    return (
-        cand.join(d_sh, "delta_id")
-        .join(b_sh, "base_id")
-        .withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select("delta_id", "base_id", "jaccard")
+    return _verify_jaccard(
+        raw, sig_d, sig_b, id_col, "delta_id", "base_id", threshold
     )
 
 
@@ -674,18 +542,9 @@ def blocked_self_pairs(
     master-data dimension): pair mass is sum-of-block-sizes², bounded
     by the key design — UNLESS one block runs hot.
 
-    ``salt_hot`` (opt-in, r14 — VERDICT r13 item 6): the
-    banded_candidates_raw hot-bucket decomposition applied to plain
-    blocking keys. Blocks whose row count exceeds ``hot_block_min``
-    (found by one cheap count-aggregate, broadcast back) are split s
-    ways: the a-side picks ONE salt lane by id hash, the b-side
-    REPLICATES into all s lanes, so every original pair survives in
-    exactly one lane (pair-set equality pinned by
-    tests/test_llm_ops.py::test_blocked_er_salt_pair_equality) while
-    the hot block's C(m,2) pair mass spreads across s tasks instead
-    of serializing one reducer. Cold blocks pay nothing (salt 0, no
-    replication). Measured max/median partition loads in
-    tools/dedup_skew.py --er; SCALE.md carries the row."""
+    ``salt_hot = s`` (opt-in) splits blocks holding more than
+    ``hot_block_min`` rows ``s`` ways (see ``joins._salt_hot_split``).
+    """
     a = df.select(*[F.col(x).alias(f"a_{x}") for x in df.columns])
     b = df.select(*[F.col(x).alias(f"b_{x}") for x in df.columns])
     cond = F.col(f"a_{id_col}") < F.col(f"b_{id_col}")
@@ -693,49 +552,11 @@ def blocked_self_pairs(
         cond = (F.col(f"a_{k}") == F.col(f"b_{k}")) & cond
     if salt_hot <= 1:
         return a.join(b, cond)
-    hot = F.broadcast(
-        a.groupBy(*[f"a_{k}" for k in block_cols])
-        .count()
-        .filter(F.col("count") > hot_block_min)
-        .select(
-            *[F.col(f"a_{k}").alias(f"h_{k}") for k in block_cols]
-        )
+    a, b, salted = _salt_hot_split(
+        a, b, [f"a_{k}" for k in block_cols], [f"b_{k}" for k in block_cols],
+        [f"a_{id_col}"], salt_hot, hot_block_min,
     )
-
-    def hot_match(side: str):
-        m = F.lit(True)
-        for k in block_cols:
-            m = m & (F.col(f"{side}_{k}") == F.col(f"h_{k}"))
-        return m
-
-    a_salted = (
-        a.join(hot, hot_match("a"), "left")
-        .withColumn(
-            "a_salt",
-            F.when(
-                F.col(f"h_{block_cols[0]}").isNotNull(),
-                F.pmod(F.hash(f"a_{id_col}"), F.lit(salt_hot)),
-            ).otherwise(F.lit(0)),
-        )
-        .drop(*[f"h_{k}" for k in block_cols])
-    )
-    b_salted = (
-        b.join(hot, hot_match("b"), "left")
-        .withColumn(
-            "b_salt",
-            F.explode(
-                F.when(
-                    F.col(f"h_{block_cols[0]}").isNotNull(),
-                    F.sequence(F.lit(0), F.lit(salt_hot - 1)),
-                ).otherwise(F.array(F.lit(0)))
-            ),
-        )
-        .drop(*[f"h_{k}" for k in block_cols])
-    )
-    return (
-        a_salted.join(b_salted, cond & (F.col("a_salt") == F.col("b_salt")))
-        .drop("a_salt", "b_salt")
-    )
+    return a.join(b, cond & salted).drop(*_SALT_COLS)
 
 
 def simhash_near_dup_pairs(

@@ -121,6 +121,7 @@ def kmeans_lite(
         .collect()
     )
     centroids = [list(map(float, r[0])) for r in init]
+    k = len(centroids)  # fewer than k rows: both arms fit n centroids
     if centroids:
         dim0 = len(centroids[0])
         # gate reads the memoized statistics count (no extra scan on

@@ -30,6 +30,8 @@ Scale notes (100 TB design):
 from __future__ import annotations
 
 import math
+from functools import reduce
+from operator import and_
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
@@ -105,6 +107,115 @@ def _pseudo_block(df: DataFrame, n_blocks: int, seed: int) -> Column:
     return F.pmod(
         F.xxhash64(F.struct(*df.columns), F.lit(seed)), F.lit(n_blocks)
     ).cast("long")
+
+
+def _one_bucket_regions(
+    left: DataFrame,
+    right: DataFrame,
+    n_left: int,
+    n_right: int,
+    num_regions: int | None,
+    seed: int,
+    region_cols: tuple[str, str],
+) -> tuple[DataFrame, DataFrame]:
+    """[OR11 §4] 1-Bucket-Theta region assignment for both join sides.
+
+    The |L|×|R| join matrix is tiled into ``cr × cs`` regions with
+    near-square blocks of side ≈ √(|L||R|/r), which minimizes the
+    per-region input ≈ 2√(|L||R|/r) [OR11 §4.1]; r defaults to the
+    shuffle width. Each left row draws a pseudo-random block-row and is
+    replicated to the ``cs`` regions of that row; each right row draws
+    a block-column and is replicated to its ``cr`` regions. Every (l, r)
+    pair meets in exactly one region, and the load is balanced under
+    any skew because the assignment ignores the join values. Returns
+    both sides with their region id in ``region_cols``.
+    """
+    r = num_regions or int(
+        left.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
+    )
+    side = math.sqrt(n_left * n_right / r)
+    cr = max(1, round(n_left / side))  # block-rows
+    cs = max(1, round(n_right / side))  # block-cols
+    lhs = (
+        left.withColumn("__tj_rb", _pseudo_block(left, cr, seed))
+        .withColumn("__tj_s", F.explode(F.sequence(F.lit(0), F.lit(cs - 1))))
+        .withColumn(region_cols[0], F.col("__tj_rb") * cs + F.col("__tj_s"))
+        .drop("__tj_rb", "__tj_s")
+    )
+    rhs = (
+        right.withColumn("__tj_cb", _pseudo_block(right, cs, seed + 1))
+        .withColumn("__tj_r", F.explode(F.sequence(F.lit(0), F.lit(cr - 1))))
+        .withColumn(region_cols[1], F.col("__tj_r") * cs + F.col("__tj_cb"))
+        .drop("__tj_cb", "__tj_r")
+    )
+    return lhs, rhs
+
+
+_SALT_COLS = ("__salt_k", "__salt_s")
+
+
+def _salt_hot_split(
+    keep: DataFrame,
+    spread: DataFrame,
+    keep_keys: Sequence[str],
+    spread_keys: Sequence[str],
+    hash_cols: Sequence[str],
+    salt_hot: int,
+    hot_min: int,
+) -> tuple[DataFrame, DataFrame, Column]:
+    """[OR11 §6] hot-cell split for an equi-keyed join (the ``salt_hot``
+    option of the band, LSH and blocking joins).
+
+    A key shared by m rows on each side is one join task emitting ~m²
+    pairs: output skew that AQE's skew-join split cannot see, because
+    its trigger reads input partition bytes and the hot key's input is
+    small. Keys holding more than ``hot_min`` rows on ``keep`` are
+    found by one count aggregate and broadcast back (the hot set is
+    small by definition). On those keys a ``keep`` row takes the ONE
+    salt ``pmod(hash(hash_cols), salt_hot)`` and a ``spread`` row is
+    replicated to every salt ``0..salt_hot-1``; cold keys keep salt 0 on
+    both sides and pay nothing. A matching pair therefore meets exactly
+    once, at the keep row's salt, so the join output is unchanged while
+    a hot key's pairs spread over ``salt_hot`` tasks.
+
+    Returns both salted sides and the salt-equality condition to AND
+    into the join; the caller drops ``_SALT_COLS`` from its result.
+    """
+    hks = [f"__hk{i}" for i in range(len(keep_keys))]
+    hot = F.broadcast(
+        keep.groupBy(*keep_keys)
+        .count()
+        .filter(F.col("count") > hot_min)
+        .select(*[F.col(k).alias(h) for k, h in zip(keep_keys, hks)])
+    )
+
+    def on_hot(keys: Sequence[str]) -> Column:
+        return reduce(and_, [F.col(k) == F.col(h) for k, h in zip(keys, hks)])
+
+    is_hot = F.col(hks[0]).isNotNull()
+    keep = (
+        keep.join(hot, on_hot(keep_keys), "left")
+        .withColumn(
+            _SALT_COLS[0],
+            F.when(is_hot, F.pmod(F.hash(*hash_cols), F.lit(salt_hot))).otherwise(
+                F.lit(0)
+            ),
+        )
+        .drop(*hks)
+    )
+    spread = (
+        spread.join(hot, on_hot(spread_keys), "left")
+        .withColumn(
+            _SALT_COLS[1],
+            F.explode(
+                F.when(is_hot, F.sequence(F.lit(0), F.lit(salt_hot - 1))).otherwise(
+                    F.array(F.lit(0))
+                )
+            ),
+        )
+        .drop(*hks)
+    )
+    return keep, spread, F.col(_SALT_COLS[0]) == F.col(_SALT_COLS[1])
 
 
 def _check_disjoint(left: DataFrame, right: DataFrame) -> None:
@@ -191,16 +302,9 @@ def band_join(
 
     The symmetric band |l − r| ≤ ε is ``lower=-ε, upper=ε``.
 
-    ``salt_hot`` (opt-in, r13 — VERDICT r12 item 5): a heavily-TIED
-    value (one price shared by m rows) puts m left rows and ~2m right
-    replicas in ONE bucket, whose task then emits ~m² result pairs —
-    output skew that AQE's byte-based input trigger cannot see
-    (measured in tools/dedup_skew.py --band). With ``salt_hot = s``,
-    left rows in buckets holding > ``hot_bucket_min`` rows split into
-    s blocks by a full-row hash and the right replicas covering those
-    buckets fan out across all s blocks, so every pair still meets
-    exactly once (the left row keeps ONE (bucket, salt) home) while
-    the max task output drops ×s. Cold buckets pay nothing.
+    ``salt_hot = s`` (opt-in) splits buckets holding more than
+    ``hot_bucket_min`` left rows ``s`` ways (see ``_salt_hot_split``):
+    a heavily tied value puts all its rows in one bucket.
     """
     if upper < lower:
         raise ValueError("upper must be >= lower")
@@ -248,53 +352,19 @@ def band_join(
 
     drop = ["__band_bl", "__band_br"]
     if salt_hot > 1:
-        lkeys = ["__band_bl"] + [lc for lc, _ in extra_equi]
-        rkeys = ["__band_br"] + [rc for _, rc in extra_equi]
-        hot = F.broadcast(
-            lhs.groupBy(*lkeys)
-            .count()
-            .filter(F.col("count") > hot_bucket_min)
-            .select(
-                *[F.col(c).alias(f"__hk{i}") for i, c in enumerate(lkeys)]
-            )
-        )
-
-        def hot_cond(keys: list[str]) -> Column:
-            c = F.lit(True)
-            for i, k in enumerate(keys):
-                c = c & (F.col(k) == F.col(f"__hk{i}"))
-            return c
-
-        hks = [f"__hk{i}" for i in range(len(lkeys))]
         # full-row hash: the band value is CONSTANT inside a tied hot
-        # bucket, so the block id must come from the other columns
-        row_hash = F.hash(*[F.col(c) for c in left.columns])
-        lhs = (
-            lhs.join(hot, hot_cond(lkeys), "left")
-            .withColumn(
-                "__salt_l",
-                F.when(
-                    F.col(hks[0]).isNotNull(),
-                    F.pmod(row_hash, F.lit(salt_hot)),
-                ).otherwise(F.lit(0)),
-            )
-            .drop(*hks)
+        # bucket, so the salt must come from the other columns
+        lhs, rhs, salted = _salt_hot_split(
+            lhs,
+            rhs,
+            ["__band_bl"] + [lc for lc, _ in extra_equi],
+            ["__band_br"] + [rc for _, rc in extra_equi],
+            left.columns,
+            salt_hot,
+            hot_bucket_min,
         )
-        rhs = (
-            rhs.join(hot, hot_cond(rkeys), "left")
-            .withColumn(
-                "__salt_r",
-                F.explode(
-                    F.when(
-                        F.col(hks[0]).isNotNull(),
-                        F.sequence(F.lit(0), F.lit(salt_hot - 1)),
-                    ).otherwise(F.array(F.lit(0)))
-                ),
-            )
-            .drop(*hks)
-        )
-        cond = cond & (F.col("__salt_l") == F.col("__salt_r"))
-        drop += ["__salt_l", "__salt_r"]
+        cond = cond & salted
+        drop += _SALT_COLS
 
     return lhs.join(rhs, cond, "inner").drop(*drop)
 
@@ -346,17 +416,10 @@ def theta_join(
     seed: int = 42,
     strategy: str = "auto",
 ) -> DataFrame:
-    """General theta join via the 1-Bucket-Theta rewrite [OR11 §4].
-
-    Conceptual model: the |L|×|R| join matrix is tiled into a grid of
-    ``cr × cs`` regions with near-square blocks of side ≈ √(|L||R|/r),
-    which minimizes per-region input ≈ 2√(|L||R|/r) [OR11 §4.1]. Each
-    left row draws a uniformly random block-row and is replicated to
-    the ``cs`` regions of that row; each right row draws a random
-    block-column and is replicated to its ``cr`` regions. Every (l, r)
-    pair meets in exactly one region → exactly-once semantics with NO
-    dedup, and the load is balanced under ANY skew because assignment
-    ignores the data values entirely (the paper's key insight).
+    """General theta join via the 1-Bucket-Theta rewrite [OR11 §4]
+    (region grid in ``_one_bucket_regions``): every (l, r) pair meets
+    in exactly one region, so there is no dedup, and the load is
+    balanced under any skew.
 
     Spark mapping: region id is a derived column; the region-equi-join
     is a shuffled hash/sort-merge join; θ is the residual filter. The
@@ -383,29 +446,13 @@ def theta_join(
         return left.join(right, condition, "inner")
     if strategy == "auto" and n_left * n_right <= _NAIVE_PAIR_THRESHOLD:
         return left.join(right, condition, "inner")
-
-    spark = left.sparkSession
-    r = num_regions or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    side = math.sqrt(n_left * n_right / r)
-    cr = max(1, round(n_left / side))  # block-rows
-    cs = max(1, round(n_right / side))  # block-cols
-
-    lhs = (
-        left.withColumn("__tj_rb", _pseudo_block(left, cr, seed))
-        .withColumn("__tj_s", F.explode(F.sequence(F.lit(0), F.lit(cs - 1))))
-        .withColumn("__tj_region", F.col("__tj_rb") * cs + F.col("__tj_s"))
-        .drop("__tj_rb", "__tj_s")
+    lhs, rhs = _one_bucket_regions(
+        left, right, n_left, n_right, num_regions, seed,
+        ("__tj_region", "__tj_region2"),
     )
-    rhs = (
-        right.withColumn("__tj_cb", _pseudo_block(right, cs, seed + 1))
-        .withColumn("__tj_r", F.explode(F.sequence(F.lit(0), F.lit(cr - 1))))
-        .withColumn("__tj_region2", F.col("__tj_r") * cs + F.col("__tj_cb"))
-        .drop("__tj_cb", "__tj_r")
-    )
-    out = lhs.join(
+    return lhs.join(
         rhs, (F.col("__tj_region") == F.col("__tj_region2")) & condition, "inner"
-    )
-    return out.drop("__tj_region", "__tj_region2")
+    ).drop("__tj_region", "__tj_region2")
 
 
 def inequality_join_2pred(
@@ -445,7 +492,6 @@ def inequality_join_2pred(
             raise ValueError(f"unsupported op {op!r}")
     _check_disjoint(left, right)
 
-    spark = left.sparkSession
     n_left, n_right = _stat_count(left), _stat_count(right)
     if n_left == 0 or n_right == 0:
         return left.join(
@@ -453,22 +499,8 @@ def inequality_join_2pred(
             _cmp(F.col(lx), F.col(rx), xop) & _cmp(F.col(ly), F.col(ry), yop),
             "inner",
         )
-    r = num_regions or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    side = math.sqrt(n_left * n_right / r)
-    cr = max(1, round(n_left / side))
-    cs = max(1, round(n_right / side))
-
-    lhs = (
-        left.withColumn("__rb", _pseudo_block(left, cr, seed))
-        .withColumn("__s", F.explode(F.sequence(F.lit(0), F.lit(cs - 1))))
-        .withColumn("__region", (F.col("__rb") * cs + F.col("__s")).cast("int"))
-        .drop("__rb", "__s")
-    )
-    rhs = (
-        right.withColumn("__cb", _pseudo_block(right, cs, seed + 1))
-        .withColumn("__r", F.explode(F.sequence(F.lit(0), F.lit(cr - 1))))
-        .withColumn("__region", (F.col("__r") * cs + F.col("__cb")).cast("int"))
-        .drop("__cb", "__r")
+    lhs, rhs = _one_bucket_regions(
+        left, right, n_left, n_right, num_regions, seed, ("__region", "__region")
     )
 
     l_cols, r_cols = left.columns, right.columns

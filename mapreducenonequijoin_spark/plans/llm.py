@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import STOPWORDS, duckdb_shingles, duckdb_simhash_cte
 from ..operators.dedup import (
+    banded_candidates_raw,
     dedup_exact as _dedup_exact,
     minhash_incremental_pairs,
     minhash_near_dup_pairs,
@@ -1698,35 +1699,7 @@ def dedup_minhash_estimate_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row output."""
     docs = load_table(spark, sf_dir, "documents")
     sig = minhash_signatures(docs, "doc_id", "text").cache()
-    bands, rpb = 16, 2
-
-    def banded(side: str) -> DataFrame:
-        key = F.concat_ws(
-            ",",
-            F.transform(
-                F.slice("mh", F.col("__band") * rpb + 1, rpb),
-                lambda x: x.cast("string"),
-            ),
-        )
-        return sig.withColumn(
-            "__band", F.explode(F.sequence(F.lit(0), F.lit(bands - 1)))
-        ).select(
-            F.col("doc_id").alias(f"{side}_id"),
-            F.col("__band").alias(f"{side}_band"),
-            key.alias(f"{side}_key"),
-        )
-
-    cand = (
-        banded("a")
-        .join(
-            banded("b"),
-            (F.col("a_band") == F.col("b_band"))
-            & (F.col("a_key") == F.col("b_key"))
-            & (F.col("a_id") < F.col("b_id")),
-        )
-        .select("a_id", "b_id")
-        .distinct()
-    )
+    cand = banded_candidates_raw(sig, "doc_id", 2, 16).select("a_id", "b_id").distinct()
     a = sig.select(
         F.col("doc_id").alias("a_id"),
         F.col("shingles").alias("a_sh"),

@@ -103,6 +103,18 @@ def test_local_kmeans_matches_distributed_kernel(spark, sf_dir, monkeypatch):
         }
         assert a_local == a_dist
 
+    # fewer rows than k: both arms fit the n rows as n centroids
+    tiny = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [0.6, 0.8])],
+        "vec_id long, embedding array<double>",
+    )
+    local = kmeans_lite(tiny, "vec_id", "embedding", k=8)
+    monkeypatch.setattr(ivf_mod, "_LOCAL_KMEANS_MAX_CELLS", 0)
+    dist = kmeans_lite(tiny, "vec_id", "embedding", k=8)
+    monkeypatch.undo()
+    assert len(local) == len(dist) == 3
+    assert np.allclose(np.array(local), np.array(dist), atol=1e-12)
+
 
 def test_fused_kmeans_empty_cluster_keeps_seed(spark):
     """A cluster that captures no member keeps its previous centroid

@@ -908,6 +908,23 @@ def test_minhash_salted_pairs_identical(spark, sf_dir):
     }
     assert base == salted and base
 
+    # the raw candidates (before any distinct) agree too: same schema,
+    # no salt column, and every (pair, band) row exactly once
+    from mapreducenonequijoin_spark.operators.dedup import (
+        banded_candidates_raw,
+        minhash_signatures,
+    )
+
+    sig = minhash_signatures(docs, "doc_id", "text")
+    plain_raw = banded_candidates_raw(sig, "doc_id", 2, 16)
+    salted_raw = banded_candidates_raw(
+        sig, "doc_id", 2, 16, salt_hot=16, hot_bucket_min=2
+    )
+    assert salted_raw.columns == plain_raw.columns
+    assert sorted(map(tuple, salted_raw.collect())) == sorted(
+        map(tuple, plain_raw.collect())
+    )
+
 
 def test_blocked_er_salt_pair_equality(spark, sf_dir):
     """blocked_self_pairs' hot-block salt decomposition (r14, VERDICT

@@ -149,6 +149,27 @@ def test_incremental_salt_hot_pairs_unchanged(spark, sf_dir):
     assert pairs(16) == plain
     assert plain  # the fixture must actually exercise the path
 
+    # the raw candidates (before any distinct) agree too: same schema,
+    # no salt column, and every (pair, band) row exactly once
+    from mapreducenonequijoin_spark.operators.dedup import (
+        incremental_candidates_raw,
+        minhash_signatures,
+    )
+
+    sig_d = minhash_signatures(delta, "doc_id", "text")
+    sig_b = minhash_signatures(base, "doc_id", "text")
+
+    def raw(salt):
+        return incremental_candidates_raw(
+            sig_d, sig_b, "doc_id", 2, 16, salt_hot=salt, hot_bucket_min=2
+        )
+
+    plain_raw, salted_raw = raw(0), raw(16)
+    assert salted_raw.columns == plain_raw.columns
+    assert sorted(map(tuple, salted_raw.collect())) == sorted(
+        map(tuple, plain_raw.collect())
+    )
+
 
 def test_band_join_salt_hot_pairs_unchanged(spark):
     """band_join's tied-value decomposition must not change the pair

@@ -408,12 +408,10 @@ def test_late_accounting_gate_measures_drops(spark, sf_dir):
     assert row.all_late_dropped == 1
 
 
-def test_epoch_replay_gate_red_on_append(spark, sf_dir):
+def test_epoch_replay_gate_red_on_append(spark, sf_dir, tmp_path):
     """The gate must actually discriminate: the overwrite writer is
     idempotent under replay; an APPEND writer would duplicate epoch 0
     and change the landed count."""
-    import uuid
-
     from mapreducenonequijoin_spark.plans import QUERIES
     from mapreducenonequijoin_spark.plans.streaming import (
         epoch_dirs,
@@ -425,7 +423,7 @@ def test_epoch_replay_gate_red_on_append(spark, sf_dir):
     assert got and all(r.replay_idempotent for r in got)
 
     # counterexample: land, then replay epoch 0 with APPEND semantics
-    out = f"/tmp/mrnej_stream/erg_test_{uuid.uuid4().hex[:8]}"
+    out = str(tmp_path / "erg")
     q = (
         events_stream(spark, sf_dir)
         .writeStream.foreachBatch(epoch_overwrite_writer(out))
