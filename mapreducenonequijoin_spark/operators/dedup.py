@@ -125,9 +125,13 @@ def minhash_near_dup_pairs(
     ``salt_hot = s`` (opt-in) splits (band, key) buckets holding more
     than ``hot_bucket_min`` rows ``s`` ways (see
     ``joins._salt_hot_split``): a power-law corpus puts one hot cluster
-    of near-identical texts into the same bucket in every band."""
+    of near-identical texts into the same bucket in every band.
+
+    ``sig`` is not cached: the pair plan executes once per action
+    (``connected_components`` reads it in one pass), so a cache has no
+    second execution to serve and only costs its columnar encoding."""
     bands = num_perms // rows_per_band
-    sig = minhash_signatures(df, id_col, text_col, num_perms).cache()
+    sig = minhash_signatures(df, id_col, text_col, num_perms)
     raw = banded_candidates_raw(
         sig, id_col, rows_per_band, bands, salt_hot, hot_bucket_min
     )
@@ -291,9 +295,34 @@ def connected_components(
     that turns near-dup PAIRS into dedup CLUSTERS (one representative
     per component).
 
-    Three-phase round, the contract-and-broadcast scheme distributed
-    CC implementations converge on (GraphX/GraphFrames family;
-    Kiveris et al. KDD'14 prove the star-contraction variant):
+    Output: (vertex_col, cluster_rep) for ALL vertices; singletons
+    map to themselves without entering either arm. Edges with a NULL
+    endpoint are dropped first: NULL is no vertex, so such an edge
+    connects nothing.
+
+    Arm choice. The gate is on the SYMMETRIZED edge count, which is
+    exactly twice the number of non-NULL raw edges, so one bounded
+    collect of at most ``local_edge_threshold // 2 + 1`` raw
+    (src, dst) pairs decides it. If that collect returns at most
+    ``local_edge_threshold // 2`` rows it IS the whole edge list, and
+    a driver union-find solves it (``_cc_local``; union-find needs
+    one direction per edge, so nothing is symmetrized). The collect is
+    the local arm's only execution of the upstream edge plan, and the
+    gate bounds driver memory (2 values × 100k pairs at the default),
+    never the data. Rationale: every distributed round costs ~6 tiny
+    shuffles + 2 driver actions of pure fixed overhead on a graph of
+    a few thousand edges, while union-by-min with path halving is
+    exact and O(E α(V)). Pass ``local_edge_threshold=0`` to force the
+    distributed kernel (the convergence tests do).
+
+    Distributed arm (``_cc_loop``). The edges are symmetrized from
+    ONE projection (an explode of both directions, so the upstream
+    plan runs once, not once per direction) and materialized by one
+    eager ``localCheckpoint`` that every round reuses; that frame's
+    count sizes the loop's shuffle width. Three-phase round, the
+    contract-and-broadcast scheme distributed CC implementations
+    converge on (GraphX/GraphFrames family; Kiveris et al. KDD'14
+    prove the star-contraction variant):
 
     1. MERGE  — every vertex takes the min label over itself and its
        graph neighbours (one edge⋈label join + grouped min).
@@ -310,7 +339,7 @@ def connected_components(
     3. DOWN — two path-compression jumps ``l(v) ← l(l(v))`` against
        the current mapping, FUSED LAZILY into the same plan.
 
-    The whole round is ONE plan materialized by ONE eager
+    Each round is ONE plan materialized by ONE eager
     ``localCheckpoint`` plus ONE convergence count — two driver
     actions per round; per-action fixed overhead, not data volume,
     dominates iterative loops at the contracted-label scale.
@@ -328,51 +357,38 @@ def connected_components(
     mode, and data size); the barrier caps that cost at a ~0.3 s
     write of the tiny contracted frame. At convergence the result is
     re-checkpointed so the temp files are droppable.
-
-    Output: (vertex_col, cluster_rep) for ALL vertices; singletons
-    map to themselves without entering the loop. Edges with a NULL
-    endpoint are dropped before the edge count that picks the arm:
-    NULL is no vertex, so such an edge connects nothing.
-
-    Small-graph fast path (round 8, the dedup_clusters perf-watch
-    item): when the symmetrized edge list is at most
-    ``local_edge_threshold`` rows, components are solved by a driver
-    union-find over the collected pairs — bounded model state exactly
-    like the IVF/PQ codebooks (2 longs × 200k default ≈ 3 MB), never
-    data-sized: the GATE is what keeps it scale-safe, and past it the
-    distributed contract-and-broadcast loop runs unchanged. The edge
-    count that decides is the same one that sizes the loop's shuffle
-    width, so the gate costs nothing. Rationale: every distributed
-    round costs ~6 tiny shuffles + 2 driver actions of pure fixed
-    overhead when the frame is a few thousand rows — a local
-    union-find with union-by-min + path halving is exact, O(E α(V)),
-    and microseconds at the gate size. Pass ``local_edge_threshold=0``
-    to force the distributed kernel (the convergence tests do).
     """
     spark = edges.sparkSession
-    sym = edges.select(
-        F.col(src_col).alias("__src"), F.col(dst_col).alias("__dst")
-    ).unionByName(
-        edges.select(F.col(dst_col).alias("__src"), F.col(src_col).alias("__dst"))
+    # both endpoints take their wider type, as a union of the two
+    # directions would coerce them
+    vt = edges.select(F.array(src_col, dst_col)).schema[0].dataType.elementType
+    pairs = edges.select(
+        F.col(src_col).cast(vt).alias("__src"), F.col(dst_col).cast(vt).alias("__dst")
+    ).dropna()
+    cap = local_edge_threshold // 2
+    local = pairs.limit(max(cap + 1, 0)).toPandas()
+    if len(local) <= cap:
+        return _cc_local(spark, vertices, local, vt, vertex_col)
+    both = F.array(
+        F.struct("__src", "__dst"),
+        F.struct(F.col("__dst").alias("__src"), F.col("__src").alias("__dst")),
     )
-    sym = sym.dropna().localCheckpoint(eager=True)  # edges reused every round
+    sym = pairs.select(F.explode(both).alias("__e")).select("__e.*")
+    sym = sym.localCheckpoint(eager=True)  # edges reused every round
     # In-plan shuffle sizing (the pagerank lesson, VERDICT r6), made
     # DATA-AWARE: the loop below runs ~6 shuffles × O(log diameter)
     # rounds, all materialized INSIDE this function by the eager
     # checkpoint + convergence count. Tiny-task scheduling overhead —
     # not data volume — dominates those rounds, so size the shuffle
     # width from the MEASURED edge count (the count is ~free on the
-    # just-checkpointed frame): a near-dup candidate graph of a few
-    # thousand edges runs its whole loop in 1-2 partitions, while a
-    # 100 TB corpus graph saturates cluster parallelism
-    # (defaultParallelism scales with executors). Pin the conf for
-    # the duration of the loop (every shuffle here is keyed
-    # differently, so one conf pin beats six explicit repartitions
-    # per round) and restore on exit; the only post-return lazy work
-    # is the one singleton anti-join.
+    # just-checkpointed frame): a graph of a few hundred thousand
+    # edges runs its whole loop in 1-2 partitions, while a 100 TB
+    # corpus graph saturates cluster parallelism (defaultParallelism
+    # scales with executors). Pin the conf for the duration of the
+    # loop (every shuffle here is keyed differently, so one conf pin
+    # beats six explicit repartitions per round) and restore on exit;
+    # the only post-return lazy work is the one singleton anti-join.
     n_edges = sym.count()
-    if n_edges <= local_edge_threshold:
-        return _cc_local(spark, vertices, sym, vertex_col)
     p = int(min(n_edges // 500_000 + 1, max(spark.sparkContext.defaultParallelism, 4)))
     conf_key = "spark.sql.shuffle.partitions"
     old_parts = spark.conf.get(conf_key, None)
@@ -385,24 +401,22 @@ def connected_components(
 
 
 def _cc_local(
-    spark, vertices: DataFrame, sym: DataFrame, vertex_col: str
+    spark, vertices: DataFrame, edges, vt, vertex_col: str
 ) -> DataFrame:
-    """Exact driver union-find over a GATED (≤ local_edge_threshold)
-    edge list: union-by-min keeps every root the minimum label of its
-    set, so after the final finds each vertex maps to its component
+    """Exact driver union-find over a GATED (≤ local_edge_threshold / 2)
+    pandas frame of (__src, __dst) pairs of type ``vt``, one row per
+    edge: union-by-min keeps every root the minimum label of its set,
+    so after the final finds each vertex maps to its component
     minimum — identical to the distributed kernel's fixpoint. Path
     halving bounds the walk; the result rides back as a tiny
     DataFrame, and the (usually vastly larger) singleton set joins
     via a broadcast anti-join without ever being collected.
 
-    r15-opt (guide §5/§6 Arrow driver transfers): the edge list rides
-    to the driver as ONE Arrow ``toPandas`` batch instead of
-    ``toLocalIterator`` — the iterator fetched the checkpointed
-    frame's ~64 tiny partitions as SEQUENTIAL jobs and materialized
-    every edge as a py4j Row (measured: the 117k-edge multimodal
-    graph spent most of its CC wall there). Same gated driver
-    footprint (≤ local_edge_threshold × 2 int64 ≈ 3 MB); the labels
-    frame rides back through Arrow the same way."""
+    Both transfers go through Arrow (``toPandas`` in the caller,
+    ``createDataFrame`` from pandas here): ``toLocalIterator`` fetched
+    partitions as SEQUENTIAL jobs and materialized every edge as a
+    py4j Row (measured: the 117k-edge multimodal graph spent most of
+    its CC wall there)."""
     import pandas as pd
     from pyspark.sql.types import StructField, StructType
 
@@ -414,7 +428,6 @@ def _cc_local(
             x = parent[x]
         return x
 
-    edges = sym.toPandas()
     # .tolist() yields native Python values (int for int64 columns,
     # str for string vertex ids) — dict keys must not be numpy scalars
     for a, b in zip(edges["__src"].tolist(), edges["__dst"].tolist()):
@@ -429,7 +442,6 @@ def _cc_local(
             ra, rb = rb, ra
         parent[rb] = ra  # union by min: root stays the set minimum
 
-    vt = sym.schema["__src"].dataType
     schema = StructType(
         [StructField("__v", vt), StructField("__label", vt)]
     )

@@ -895,35 +895,42 @@ def stream_epoch_replay_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the gate adds one epoch-0 re-write to the normal
     foreachBatch run; state is the file sink's directory layout —
-    O(epochs) metadata, no growing stream state."""
+    O(epochs) metadata, no growing stream state. The few grouped rows
+    are collected and returned as a local frame, so the sink directory
+    is removed on the way out, also when the run fails."""
+    import shutil
     import uuid
 
     ev = events_stream(spark, sf_dir)
     out = f"/tmp/mrnej_stream/erg_{uuid.uuid4().hex[:10]}"
-    writer = epoch_overwrite_writer(out)
-    q = (
-        ev.writeStream.foreachBatch(writer)
-        .option("checkpointLocation", f"{out}/_ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    dirs = epoch_dirs(out)
-    before = spark.read.parquet(*dirs).count()
-    # the retry: replay epoch 0's input (== its landed frame, by the
-    # overwrite contract) through the SAME writer path. Materialize
-    # BEFORE the overwrite — a lazy frame would read the very files
-    # the writer is replacing (FAILED_READ_FILE, caught live)
-    writer(spark.read.parquet(dirs[0]).localCheckpoint(), 0)
-    landed = spark.read.parquet(*epoch_dirs(out))
-    idempotent = landed.count() == before
-    return landed.groupBy("event_type").agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum(F.round(F.col("value") * 100).cast("long"))
-        .cast("long")
-        .alias("total_cents"),
-        F.lit(idempotent).alias("replay_idempotent"),
-    )
+    try:
+        writer = epoch_overwrite_writer(out)
+        q = (
+            ev.writeStream.foreachBatch(writer)
+            .option("checkpointLocation", f"{out}/_ckpt")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        dirs = epoch_dirs(out)
+        before = spark.read.parquet(*dirs).count()
+        # the retry: replay epoch 0's input (== its landed frame, by the
+        # overwrite contract) through the SAME writer path. Materialize
+        # BEFORE the overwrite — a lazy frame would read the very files
+        # the writer is replacing (FAILED_READ_FILE, caught live)
+        writer(spark.read.parquet(dirs[0]).localCheckpoint(), 0)
+        landed = spark.read.parquet(*epoch_dirs(out))
+        idempotent = landed.count() == before
+        totals = landed.groupBy("event_type").agg(
+            F.count("*").cast("long").alias("n"),
+            F.sum(F.round(F.col("value") * 100).cast("long"))
+            .cast("long")
+            .alias("total_cents"),
+            F.lit(idempotent).alias("replay_idempotent"),
+        )
+        return spark.createDataFrame(totals.collect(), totals.schema)
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
 
 
 @register(

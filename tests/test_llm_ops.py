@@ -630,6 +630,110 @@ def test_connected_components_local_path_matches_distributed(spark):
     assert set(reps) == set(range(400))  # no None vertex
 
 
+def _cc_test_graph(spark):
+    """(vertices, edges, non-NULL edge count): a path, a clique, a star
+    and one NULL-endpoint edge."""
+    import pyspark.sql.functions as F
+
+    pairs = (
+        [(i, i + 1) for i in range(19)]
+        + [(a, b) for a in range(50, 56) for b in range(a + 1, 56)]
+        + [(80, x) for x in range(81, 85)]
+        + [(90, None)]
+    )
+    edges = spark.createDataFrame(pairs, "a long, b long")
+    verts = spark.range(0, 100).select(F.col("id").alias("v"))
+    return verts, edges, len(pairs) - 1
+
+
+def test_connected_components_local_arm_runs_edge_plan_once(spark):
+    """The local arm executes the upstream edge plan exactly once: a
+    row-counting UDF on the edges reads the row count, not twice it
+    (a symmetrizing union runs the plan once per direction)."""
+    import pyspark.sql.functions as F
+
+    from mapreducenonequijoin_spark.operators.dedup import connected_components
+
+    verts, edges, _ = _cc_test_graph(spark)
+    seen = spark.sparkContext.accumulator(0)
+
+    def counted(x):
+        seen.add(1)
+        return x
+
+    tap = F.udf(counted, "long").asNondeterministic()
+    out = connected_components(
+        verts, edges.withColumn("a", tap("a")), "v", "a", "b"
+    ).collect()
+    assert len(out) == 100
+    assert seen.value == edges.count()
+
+
+def test_connected_components_gate_boundary(spark, monkeypatch):
+    """The gate counts both directions of each non-NULL edge: with n
+    such edges, ``local_edge_threshold = 2n`` takes the driver
+    union-find and ``2n - 1`` the distributed kernel, with the same
+    labels."""
+    from mapreducenonequijoin_spark.operators import dedup
+
+    verts, edges, n = _cc_test_graph(spark)
+    calls = []
+
+    def spy(name):
+        real = getattr(dedup, name)
+
+        def wrapped(*args, **kwargs):
+            calls.append(name)
+            return real(*args, **kwargs)
+
+        monkeypatch.setattr(dedup, name, wrapped)
+
+    spy("_cc_local")
+    spy("_cc_loop")
+
+    def labels(threshold):
+        calls.clear()
+        got = {
+            (r.v, r.cluster_rep)
+            for r in dedup.connected_components(
+                verts, edges, "v", "a", "b", local_edge_threshold=threshold
+            ).collect()
+        }
+        return got, list(calls)
+
+    local, local_calls = labels(2 * n)
+    dist, dist_calls = labels(2 * n - 1)
+    assert local_calls == ["_cc_local"]
+    assert dist_calls == ["_cc_loop"]
+    assert local == dist and len(local) == 100
+    reps = dict(local)
+    assert reps[19] == 0 and reps[55] == 50 and reps[84] == 80
+    assert reps[90] == 90  # its only edge has a NULL endpoint
+
+
+def _persistent_rdd_ids(spark) -> set[int]:
+    return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
+
+
+def test_minhash_pairs_and_local_cc_persist_nothing(spark, sf_dir):
+    """Neither the MinHash pair plan nor the local CC arm leaves a
+    persisted RDD or a cached frame behind."""
+    from mapreducenonequijoin_spark.operators.dedup import connected_components
+
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = _persistent_rdd_ids(spark)
+    pairs = minhash_near_dup_pairs(_docs(spark, sf_dir), "doc_id", "text")
+    assert pairs.collect()
+    assert _persistent_rdd_ids(spark) - before == set()
+    assert cache.isEmpty()
+
+    verts, edges, _ = _cc_test_graph(spark)
+    assert connected_components(verts, edges, "v", "a", "b").collect()
+    assert _persistent_rdd_ids(spark) - before == set()
+    assert cache.isEmpty()
+
+
 def test_image_phash_brightness_invariance(spark, sf_dir):
     """The planted brightness variants (doc_id and doc_id+250 share a
     base raster; the latter is +1-clipped) must collapse to one

@@ -360,6 +360,7 @@ def test_no_unexplained_global_windows(built):
 _COLLECT_CENSUS = {
     "plans/datapipe.py": 1,  # 1-row watermark agg (incremental ETL)
     "plans/scans.py": 1,  # blob staging ids, predicate-capped <= 512
+    "plans/streaming.py": 1,  # epoch replay gate: one row per event_type
     "streaming/windows.py": 2,  # 1-row max(ts) aggs (sentinel staging)
     "operators/similarity.py": 2,  # serving gates, <= max_queries rows
     # (knn_query_table + knn_query_table_biscore probe matrices)

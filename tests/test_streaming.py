@@ -440,6 +440,26 @@ def test_epoch_replay_gate_red_on_append(spark, sf_dir, tmp_path):
     assert after == before + df0.count()
 
 
+def test_epoch_replay_gate_leaves_no_sink_dir(spark, sf_dir):
+    """Building and collecting the gate leaves no new ``erg_*`` sink
+    directory behind."""
+    import os
+
+    from mapreducenonequijoin_spark.plans import QUERIES
+
+    root = "/tmp/mrnej_stream"
+
+    def erg_dirs():
+        if not os.path.isdir(root):
+            return set()
+        return {d for d in os.listdir(root) if d.startswith("erg_")}
+
+    before = erg_dirs()
+    got = QUERIES["stream_epoch_replay_gate"].fn(spark, sf_dir).collect()
+    assert got and all(r.replay_idempotent for r in got)
+    assert erg_dirs() - before == set()
+
+
 def test_transform_with_state_matches_batch(spark, sf_dir):
     """The per-(user, type) stateful accumulator must equal the batch
     groupBy on the bounded replay, with exactly one emission per cell
