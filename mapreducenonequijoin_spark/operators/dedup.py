@@ -266,14 +266,14 @@ def minhash_incremental_pairs(
     base×base pairs, the overwhelming majority at 100 TB, are never
     generated. Cost scales with |delta| × bands + the (tiny) collision
     set, not with the corpus; the base signature frame is computed once
-    and is reusable across ingest batches (persist it in production).
+    and is reusable across ingest batches.
     Candidates verify with exact shingle Jaccard before reporting.
     ``salt_hot`` opts in to the hot-bucket split (see
     ``joins._salt_hot_split``) for power-law duplicate corpora.
     """
     bands = num_perms // rows_per_band
-    sig_b = minhash_signatures(base, id_col, text_col, num_perms).cache()
-    sig_d = minhash_signatures(delta, id_col, text_col, num_perms).cache()
+    sig_b = minhash_signatures(base, id_col, text_col, num_perms)
+    sig_d = minhash_signatures(delta, id_col, text_col, num_perms)
     raw = incremental_candidates_raw(
         sig_d, sig_b, id_col, rows_per_band, bands, salt_hot, hot_bucket_min
     )

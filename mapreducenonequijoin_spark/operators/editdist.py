@@ -56,13 +56,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .joins import _check_disjoint
+
 __all__ = ["edit_distance_join"]
-
-
-def _check_disjoint(left: DataFrame, right: DataFrame) -> None:
-    dup = set(left.columns) & set(right.columns)
-    if dup:
-        raise ValueError(f"column collision between sides: {sorted(dup)}")
 
 
 def edit_distance_join(

@@ -72,43 +72,22 @@ def kmeans_lite(
     number of Lloyd iterations (assign via max-dot since vectors are
     L2-normalized ⇒ spherical k-means; update via per-cluster mean).
 
-    r14-opt (guide §2.3 "aggregate before you shuffle", §4.1 "pass
-    only the columns the function needs"): each iteration previously
-    re-assigned in one full-vector mapInPandas pass, SHUFFLED the
-    whole embedding table by cluster into a grouped-pandas mean, and
-    collected k rows — the vectors crossed the Python boundary twice
-    and the network once per iteration. The mean only needs per-
-    cluster SUM + COUNT, so assignment and partial sums now fuse into
-    ONE mapInPandas pass over the projected vector column emitting
-    ≤ k tiny (cluster, sum, n) rows per task; a grouped combine over
-    tasks×k partial rows (k×dim floats per task, never the data)
-    finishes the mean. Per iteration: full-vector shuffle → ~nothing
-    shuffled; two Python crossings of the vectors → one. The centroid
-    value is the same mean up to float summation ORDER — the same
-    envelope the old grouped mean already sat in (pandas group order =
-    shuffle arrival order, nondeterministic), which every downstream
-    gate is robust to by construction; assignment equality vs the old
-    kernel is asserted by tests/test_ivf_kernel_equiv.py (sf0.001
-    fixture, k=4 and 8), and every IVF/PQ-family registry key was
-    re-verified against its oracle at sf0.01 AND sf0.1.
-
-    r15-opt (guide §1.2 "per-task work" after the algorithm is right):
-    below ``_LOCAL_KMEANS_MAX_CELLS`` (rows × dim — driver model
-    state, ~16 MB of float64 at the bound) the fit collects the
-    projected vector column ONCE through Arrow and runs every Lloyd
-    iteration in local numpy: the distributed fit costs 1 + iterations
-    driver actions of pure fixed overhead (mapInPandas → grouped
-    combine → collect per iteration) that dominate the fit at small
-    n·dim (measured 1.7-1.9 s of every IVF-family key at sf0.1 for a
-    1 MB input). Same gated-fast-path pattern as _cc_local and the
-    exact-kNN router: past the gate the distributed kernel runs
-    unchanged, so a 100 TB corpus never touches this branch. The
-    local accumulation order (the order in which the collected
-    partitions arrive, not ascending id) sits inside the SAME
-    float-summation-order envelope as the distributed combine
-    (arrival-order partials); equality of resulting ASSIGNMENTS vs
-    the distributed kernel is pinned by tests/test_ivf_kernel_equiv.py
-    on every fixture."""
+    Two arms, same model. Below ``_LOCAL_KMEANS_MAX_CELLS`` (rows ×
+    dim — driver model state, ~16 MB of float64 at the bound) the fit
+    collects the projected vector column once through Arrow and runs
+    every Lloyd iteration in local numpy (_kmeans_local): the
+    distributed fit costs 1 + iterations driver actions of fixed
+    overhead, measured 1.7-1.9 s of every IVF-family key at sf0.1 for
+    a 1 MB input. Past the gate each iteration is ONE mapInPandas
+    pass over the projected vector column that fuses assignment with
+    per-cluster SUM + COUNT, emitting ≤ k tiny (cluster, sum, n) rows
+    per task; a grouped combine over those tasks×k partial rows (never
+    the data) finishes the mean, so nothing the size of the corpus is
+    shuffled. Both arms produce the same mean up to float summation
+    ORDER (partials combine in arrival order), which every downstream
+    consumer is robust to by construction; equality of the resulting
+    ASSIGNMENTS across the arms is pinned by
+    tests/test_ivf_kernel_equiv.py on every fixture."""
     import numpy as np
     import pandas as pd
 
@@ -202,6 +181,34 @@ def assign_clusters(
     return emb.mapInPandas(assign, schema=schema)
 
 
+def _probe_cells(
+    queries: DataFrame, id_col: str, vec_col: str, cmat, n_probe: int
+) -> DataFrame:
+    """Replicate each query row to its ``n_probe`` nearest centroid
+    cells (by dot product): (q_id, q_vec, __cell) — the bounded
+    ×n_probe small-side replication of the [OR11] rule."""
+    import numpy as np
+    import pandas as pd
+
+    def probes(batches):
+        for pdf in batches:
+            v = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            order = np.argsort(-(v @ cmat.T), axis=1)[:, :n_probe]
+            yield pd.DataFrame(
+                {
+                    "q_id": np.repeat(
+                        pdf[id_col].to_numpy().astype("int64"), n_probe
+                    ),
+                    "q_vec": [x for x in pdf[vec_col] for _ in range(n_probe)],
+                    "__cell": pd.array(order.ravel(), dtype="int32"),
+                }
+            )
+
+    return queries.mapInPandas(
+        probes, schema="q_id long, q_vec array<float>, __cell int"
+    )
+
+
 def ivf_query_search(
     corpus: DataFrame,
     queries: DataFrame,
@@ -224,69 +231,28 @@ def ivf_query_search(
     import numpy as np
     import pandas as pd
 
-    from pyspark.sql import Window as W
-
-    from .similarity import _fold_matmul
+    from .similarity import _cogroup_scored, _top_k_per_query, _topk_frame
 
     centroids = kmeans_lite(corpus, id_col, vec_col, k=n_clusters)
-    cmat = np.array(centroids, dtype=np.float64)
     n_probe = min(n_probe, n_clusters)
 
     members = assign_clusters(corpus, id_col, vec_col, centroids).select(
         F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_vec"),
         F.col("cluster").alias("__cell"),
     )
+    queries_rep = _probe_cells(
+        queries, id_col, vec_col, np.array(centroids, dtype=np.float64), n_probe
+    )
 
-    q_schema = "q_id long, q_vec array<float>, __cell int"
-
-    def probes(batches):
-        for pdf in batches:
-            v = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            order = np.argsort(-(v @ cmat.T), axis=1)[:, :n_probe]
-            rows = {
-                "q_id": np.repeat(
-                    pdf[id_col].to_numpy().astype("int64"), n_probe
-                ),
-                "q_vec": [x for x in pdf[vec_col] for _ in range(n_probe)],
-                "__cell": pd.array(order.ravel(), dtype="int32"),
-            }
-            yield pd.DataFrame(rows)
-
-    queries_rep = queries.mapInPandas(probes, schema=q_schema)
-
-    def cell_topk(qdf: pd.DataFrame, mdf: pd.DataFrame) -> pd.DataFrame:
-        if qdf.empty or mdf.empty:
-            return pd.DataFrame({"q_id": [], "n_id": [], "cosine": []}).astype(
-                {"q_id": "int64", "n_id": "int64", "cosine": "float64"}
-            )
-        qv = np.stack(qdf["q_vec"].to_numpy()).astype(np.float64)
-        mv = np.stack(mdf["n_vec"].to_numpy()).astype(np.float64)
-        s = _fold_matmul(qv, mv)
+    def cell_topk(qdf: pd.DataFrame, mdf: pd.DataFrame, s) -> pd.DataFrame:
         q_ids, n_ids = qdf["q_id"].to_numpy(), mdf["n_id"].to_numpy()
-        out_q, out_n, out_c = [], [], []
-        for i in range(len(q_ids)):
-            if exclude_self:
-                mask = n_ids != q_ids[i]
-                cand_n, cand_c = n_ids[mask], s[i][mask]
-            else:
-                cand_n, cand_c = n_ids, s[i]
-            order = np.lexsort((cand_n, -cand_c))[:k_neighbors]
-            out_q.extend([q_ids[i]] * len(order))
-            out_n.extend(cand_n[order])
-            out_c.extend(cand_c[order])
-        return pd.DataFrame({"q_id": out_q, "n_id": out_n, "cosine": out_c})
+        mask = (lambda i: n_ids != q_ids[i]) if exclude_self else None
+        return _topk_frame(q_ids, n_ids, s, k_neighbors, mask).drop(columns="rank")
 
-    partial = (
-        queries_rep.groupBy("__cell")
-        .cogroup(members.groupBy("__cell"))
-        .applyInPandas(cell_topk, schema="q_id long, n_id long, cosine double")
+    partial = _cogroup_scored(
+        queries_rep, members, "__cell", cell_topk, "q_id long, n_id long, cosine double"
     )
-    w = W.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("n_id"))
-    return (
-        partial.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k_neighbors)
-        .select("q_id", "n_id", "cosine", "rank")
-    )
+    return _top_k_per_query(partial, k_neighbors, F.desc("cosine"))
 
 
 def ivf_self_search(

@@ -28,6 +28,69 @@ from pyspark.sql import functions as F
 __all__ = ["pq_train", "pq_search", "ivfpq_search"]
 
 
+def _sub_sq_dists(X, codebooks, j: int):
+    """(n, ksub) squared L2 from each row's j-th subvector of ``X`` to
+    the centroids of codebook j (codebooks: m × ksub × d_sub)."""
+    d_sub = codebooks.shape[2]
+    Xj = X[:, j * d_sub : (j + 1) * d_sub]
+    return ((Xj[:, None, :] - codebooks[j][None, :, :]) ** 2).sum(-1)
+
+
+def _pq_encode(X, codebooks):
+    """(n, m) int64 PQ codes: per subspace, the nearest centroid
+    (numpy argmin — ties to the lower cell id)."""
+    import numpy as np
+
+    return np.stack(
+        [_sub_sq_dists(X, codebooks, j).argmin(axis=1) for j in range(len(codebooks))],
+        axis=1,
+    ).astype(np.int64)
+
+
+def _adc_tables(Q, codebooks):
+    """tables[qi, j, c] = ||Q[qi]_j − centroid_{j,c}||² (nq × m × ksub)."""
+    import numpy as np
+
+    return np.stack(
+        [_sub_sq_dists(Q, codebooks, j) for j in range(len(codebooks))], axis=1
+    )
+
+
+def _adc_rerank(q_ids, Q, n_ids, X, codes, tables, k, rerank_depth, rerank_frac):
+    """Two-stage PQ top-k per query row, self-matches masked: ADC
+    scores adc[qi, row] = Σ_j tables[qi, j, codes[row, j]] pick a
+    shortlist of ``max(rerank_depth, rerank_frac × candidates)`` rows,
+    which are re-scored with the exact squared L2 against the raw
+    vectors ``X`` (already in memory — FLOPs on a fixed fraction, not
+    a second data pass); the k best by (l2_sq, n_id) are emitted.
+    Output: (q_id, n_id, l2_sq)."""
+    import numpy as np
+    import pandas as pd
+
+    adc = tables[:, np.arange(codes.shape[1])[None, :], codes].sum(axis=2)
+    out_q, out_n, out_d = [], [], []
+    for qi in range(len(q_ids)):
+        mask = n_ids != q_ids[qi]
+        cand_n, cand_adc, cand_X = n_ids[mask], adc[qi][mask], X[mask]
+        depth = max(rerank_depth, int(rerank_frac * len(cand_n)))
+        short = np.lexsort((cand_n, cand_adc))[:depth]
+        exact = ((cand_X[short] - Q[qi]) ** 2).sum(axis=1)
+        order = np.lexsort((cand_n[short], exact))[:k]
+        out_q.extend([q_ids[qi]] * len(order))
+        out_n.extend(cand_n[short][order])
+        out_d.extend(exact[order])
+    return pd.DataFrame({"q_id": out_q, "n_id": out_n, "l2_sq": out_d})
+
+
+def _global_top_k(partial: DataFrame, k: int) -> DataFrame:
+    """Global k best per query by exact squared L2 (rounded to 6 dp)."""
+    from .similarity import _top_k_per_query
+
+    return _top_k_per_query(partial, k, F.asc("l2_sq")).select(
+        "q_id", "n_id", F.round("l2_sq", 6).alias("l2_sq"), "rank"
+    )
+
+
 def pq_train(
     emb: DataFrame,
     id_col: str,
@@ -63,13 +126,12 @@ def pq_train(
         def partials(batches):
             for pdf in batches:
                 X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+                codes = _pq_encode(X, cb)
                 rows = []
                 for j in range(m):
                     Xj = X[:, j * d_sub : (j + 1) * d_sub]
-                    d2 = ((Xj[:, None, :] - cb[j][None, :, :]) ** 2).sum(-1)
-                    a = d2.argmin(axis=1)
                     for c in range(ksub):
-                        mask = a == c
+                        mask = codes[:, j] == c
                         if mask.any():
                             rows.append(
                                 (j, c, int(mask.sum()), Xj[mask].sum(0).tolist())
@@ -118,22 +180,16 @@ def pq_search(
     approximately-selected candidate (monotone in cosine for
     L2-normalized inputs).
 
-    HISTORY (r14): the shortlist depth was a FIXED 100 rows per Arrow
-    batch, so the covered fraction shrank with batch size and recall
-    silently degraded with scale (measured 0.875 at sf0.01 but 0.725
-    at sf0.1, where one 10k-row batch made the shortlist 1%% of the
-    candidates — found by the r14 cross-scale recall sweep, the same
-    harness that caught the r13 minhash minwise bug). The depth is now
-    max(rerank_depth, rerank_frac x batch candidates): a constant
-    COVERED FRACTION, so P(true neighbour in shortlist) is scale-
-    stable on the i.i.d.-random worst case, at re-rank cost linear in
-    the same fraction (production trades rerank_frac vs latency)."""
+    The shortlist depth is max(rerank_depth, rerank_frac × batch
+    candidates), a constant COVERED FRACTION of each batch: a fixed
+    100-row depth shrank the covered fraction with batch size and
+    measured recall 0.875 at sf0.01 but 0.725 at sf0.1 (one 10k-row
+    batch made the shortlist 1 % of the candidates). With the
+    fraction, P(true neighbour in shortlist) is scale-stable on the
+    i.i.d.-random worst case, at re-rank cost linear in the same
+    fraction (production trades rerank_frac vs latency)."""
     import numpy as np
-    import pandas as pd
 
-    from pyspark.sql import Window as W
-
-    d_sub = dim // m
     codebooks = pq_train(emb, id_col, vec_col, m=m, ksub=ksub, dim=dim)
 
     q_rows = (
@@ -143,53 +199,21 @@ def pq_search(
     )
     q_ids = np.array([int(r[0]) for r in q_rows], dtype=np.int64)
     Q = np.array([list(map(float, r[1])) for r in q_rows], dtype=np.float64)
-    # tables[qi, j, c] = ||q_j − centroid_{j,c}||²
-    tables = np.stack(
-        [
-            ((Q[:, j * d_sub : (j + 1) * d_sub][:, None, :] - codebooks[j][None]) ** 2).sum(-1)
-            for j in range(m)
-        ],
-        axis=1,
-    )
-    cb = codebooks
+    tables = _adc_tables(Q, codebooks)
 
     def adc_scan(batches):
         for pdf in batches:
             X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            n_ids = pdf[id_col].to_numpy().astype(np.int64)
-            codes = np.empty((X.shape[0], m), dtype=np.int64)
-            for j in range(m):
-                Xj = X[:, j * d_sub : (j + 1) * d_sub]
-                codes[:, j] = (
-                    ((Xj[:, None, :] - cb[j][None, :, :]) ** 2).sum(-1).argmin(axis=1)
-                )
-            # adc[qi, row] = Σ_j tables[qi, j, codes[row, j]]
-            adc = tables[:, np.arange(m)[None, :], codes].sum(axis=2)
-            out_q, out_n, out_d = [], [], []
-            for qi in range(len(q_ids)):
-                mask = n_ids != q_ids[qi]
-                cand_n, cand_adc, cand_X = n_ids[mask], adc[qi][mask], X[mask]
-                depth = max(rerank_depth, int(rerank_frac * len(cand_n)))
-                short = np.lexsort((cand_n, cand_adc))[:depth]
-                # exact re-rank of the ADC shortlist — vectors are
-                # already in this Arrow batch, so this is FLOPs on
-                # a fixed fraction of the batch, not a second data pass
-                exact = ((cand_X[short] - Q[qi]) ** 2).sum(axis=1)
-                order = np.lexsort((cand_n[short], exact))[:k_neighbors]
-                out_q.extend([q_ids[qi]] * len(order))
-                out_n.extend(cand_n[short][order])
-                out_d.extend(exact[order])
-            yield pd.DataFrame({"q_id": out_q, "n_id": out_n, "l2_sq": out_d})
+            yield _adc_rerank(
+                q_ids, Q, pdf[id_col].to_numpy().astype(np.int64), X,
+                _pq_encode(X, codebooks), tables,
+                k_neighbors, rerank_depth, rerank_frac,
+            )
 
     partial = emb.select(id_col, vec_col).mapInPandas(
         adc_scan, schema="q_id long, n_id long, l2_sq double"
     )
-    w = W.partitionBy("q_id").orderBy(F.asc("l2_sq"), F.asc("n_id"))
-    return (
-        partial.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k_neighbors)
-        .select("q_id", "n_id", F.round("l2_sq", 6).alias("l2_sq"), "rank")
-    )
+    return _global_top_k(partial, k_neighbors)
 
 
 def ivfpq_search(
@@ -226,10 +250,9 @@ def ivfpq_search(
     group. Output: (q_id, n_id, l2_sq, rank) — l2_sq exact for the
     selected rows.
 
-    HISTORY (r14): like pq_search, the per-cell shortlist was a FIXED
-    50 rows, so the covered fraction of a cell shrank 10x when the
-    corpus grew 10x (recall 0.900 at sf0.01 -> 0.450 at sf0.1, r14
-    cross-scale recall sweep). Measured ladder at sf0.1 (probes=4):
+    The per-cell shortlist is a covered FRACTION for the same reason
+    as pq_search's (a fixed 50-row depth measured recall 0.900 at
+    sf0.01 but 0.450 at sf0.1). Measured ladder at sf0.1 (probes=4):
     frac 0.1 -> 0.475, 0.25 -> 0.50, 0.5 -> 0.80, 1.0 -> 0.95 — i.e.
     on the fixture's i.i.d.-random embeddings (nn-gap << quantization
     error, the documented PQ worst case) the residual-ADC ranking
@@ -243,12 +266,10 @@ def ivfpq_search(
     import numpy as np
     import pandas as pd
 
-    from pyspark.sql import Window as W
+    from .ivf import _probe_cells, assign_clusters, kmeans_lite
+    from .similarity import _empty_frame
 
-    from .ivf import assign_clusters, kmeans_lite
-
-    d_sub = dim // m
-    if d_sub * m != dim:
+    if (dim // m) * m != dim:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     n_probe = min(n_probe, n_clusters)
 
@@ -266,93 +287,44 @@ def ivfpq_search(
 
     res_df = members.mapInPandas(residuals, schema=f"{id_col} long, res array<double>")
     codebooks = pq_train(res_df, id_col, "res", m=m, ksub=ksub, dim=dim)
-    cb = codebooks
 
     def encode(batches):
         for pdf in batches:
             X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
             cells = pdf["cluster"].to_numpy().astype(np.int64)
-            R = X - cmat[cells]
-            codes = np.empty((X.shape[0], m), dtype=np.int64)
-            for j in range(m):
-                Rj = R[:, j * d_sub : (j + 1) * d_sub]
-                codes[:, j] = (
-                    ((Rj[:, None, :] - cb[j][None, :, :]) ** 2).sum(-1).argmin(axis=1)
-                )
             yield pd.DataFrame(
                 {
                     "n_id": pdf[id_col].to_numpy().astype("int64"),
                     "n_vec": pdf[vec_col],
                     "__cell": pd.array(cells, dtype="int32"),
-                    "codes": list(codes),
+                    "codes": list(_pq_encode(X - cmat[cells], codebooks)),
                 }
             )
 
     members_enc = members.mapInPandas(
         encode, schema="n_id long, n_vec array<float>, __cell int, codes array<long>"
     )
-
-    def probes(batches):
-        for pdf in batches:
-            v = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            order = np.argsort(-(v @ cmat.T), axis=1)[:, :n_probe]
-            yield pd.DataFrame(
-                {
-                    "q_id": np.repeat(
-                        pdf[id_col].to_numpy().astype("int64"), n_probe
-                    ),
-                    "q_vec": [x for x in pdf[vec_col] for _ in range(n_probe)],
-                    "__cell": pd.array(order.ravel(), dtype="int32"),
-                }
-            )
-
-    queries_rep = (
-        emb.filter(F.col(id_col).isin([int(q) for q in query_ids]))
-        .mapInPandas(probes, schema="q_id long, q_vec array<float>, __cell int")
+    queries_rep = _probe_cells(
+        emb.filter(F.col(id_col).isin([int(q) for q in query_ids])),
+        id_col, vec_col, cmat, n_probe,
     )
+    schema = "q_id long, n_id long, l2_sq double"
 
     def cell_adc_topk(qdf: pd.DataFrame, mdf: pd.DataFrame) -> pd.DataFrame:
         if qdf.empty or mdf.empty:
-            return pd.DataFrame({"q_id": [], "n_id": [], "l2_sq": []}).astype(
-                {"q_id": "int64", "n_id": "int64", "l2_sq": "float64"}
-            )
-        cell = int(qdf["__cell"].iloc[0])
+            return _empty_frame(schema)
         Q = np.stack(qdf["q_vec"].to_numpy()).astype(np.float64)
-        QR = Q - cmat[cell]
-        # tables[qi, j, c] = ||qr_j − codebook_{j,c}||²
-        tables = np.stack(
-            [
-                ((QR[:, j * d_sub : (j + 1) * d_sub][:, None, :] - cb[j][None]) ** 2).sum(-1)
-                for j in range(m)
-            ],
-            axis=1,
+        return _adc_rerank(
+            qdf["q_id"].to_numpy(), Q, mdf["n_id"].to_numpy(),
+            np.stack(mdf["n_vec"].to_numpy()).astype(np.float64),
+            np.stack(mdf["codes"].to_numpy()).astype(np.int64),
+            _adc_tables(Q - cmat[int(qdf["__cell"].iloc[0])], codebooks),
+            k_neighbors, rerank_depth, rerank_frac,
         )
-        X = np.stack(mdf["n_vec"].to_numpy()).astype(np.float64)
-        codes = np.stack(mdf["codes"].to_numpy()).astype(np.int64)
-        n_ids = mdf["n_id"].to_numpy()
-        adc = tables[:, np.arange(m)[None, :], codes].sum(axis=2)
-        q_ids = qdf["q_id"].to_numpy()
-        out_q, out_n, out_d = [], [], []
-        for qi in range(len(q_ids)):
-            mask = n_ids != q_ids[qi]
-            cand_n, cand_adc, cand_X = n_ids[mask], adc[qi][mask], X[mask]
-            depth = max(rerank_depth, int(rerank_frac * len(cand_n)))
-            short = np.lexsort((cand_n, cand_adc))[:depth]
-            exact = ((cand_X[short] - Q[qi]) ** 2).sum(axis=1)
-            order = np.lexsort((cand_n[short], exact))[:k_neighbors]
-            out_q.extend([q_ids[qi]] * len(order))
-            out_n.extend(cand_n[short][order])
-            out_d.extend(exact[order])
-        return pd.DataFrame({"q_id": out_q, "n_id": out_n, "l2_sq": out_d})
 
     partial = (
         queries_rep.groupBy("__cell")
         .cogroup(members_enc.groupBy("__cell"))
-        .applyInPandas(cell_adc_topk, schema="q_id long, n_id long, l2_sq double")
+        .applyInPandas(cell_adc_topk, schema=schema)
     )
-    w = W.partitionBy("q_id").orderBy(F.asc("l2_sq"), F.asc("n_id"))
-    return (
-        partial.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k_neighbors)
-        .select("q_id", "n_id", F.round("l2_sq", 6).alias("l2_sq"), "rank")
-    )
+    return _global_top_k(partial, k_neighbors)

@@ -20,6 +20,7 @@ from __future__ import annotations
 import hashlib
 import math
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, Window as W
@@ -57,13 +58,109 @@ def _fold_matmul(a64, b64):
     operation sequence as both engines — while staying vectorized
     (64 outer-product updates instead of 4M interpreted folds).
     """
-    import numpy as np
-
     m, dim = a64.shape
     s = np.zeros((m, b64.shape[0]), dtype=np.float64)
     for d in range(dim):
         s += np.outer(a64[:, d], b64[:, d])
     return s
+
+
+def _empty_frame(schema: str) -> pd.DataFrame:
+    """Zero-row pandas frame typed like the ``long``/``double`` DDL
+    ``schema`` — what a kernel returns for an empty group."""
+    cols = (f.split() for f in schema.split(","))
+    return pd.DataFrame(
+        {c: pd.Series(dtype={"long": "int64", "double": "float64"}[t]) for c, t in cols}
+    )
+
+
+def _topk_frame(q_ids, n_ids, s, k, mask=None) -> pd.DataFrame:
+    """Per-query top-k of one score block ``s`` (|q_ids| × |n_ids|):
+    for query row i, the candidates where ``mask(i)`` holds (all when
+    None), ordered by (score desc, n_id asc), first k, ranked 1..k.
+    Output: (q_id, n_id, cosine, rank)."""
+    out_q, out_n, out_c, out_r = [], [], [], []
+    for i in range(len(q_ids)):
+        if mask is None:
+            cand_n, cand_c = n_ids, s[i]
+        else:
+            keep = mask(i)
+            cand_n, cand_c = n_ids[keep], s[i][keep]
+        order = np.lexsort((cand_n, -cand_c))[:k]
+        out_q.extend([q_ids[i]] * len(order))
+        out_n.extend(cand_n[order])
+        out_c.extend(cand_c[order])
+        out_r.extend(range(1, len(order) + 1))
+    return pd.DataFrame(
+        {"q_id": out_q, "n_id": out_n, "cosine": out_c,
+         "rank": pd.array(out_r, dtype="int64")}
+    )
+
+
+def _threshold_pairs(a_ids, b_ids, s, tau: float) -> pd.DataFrame:
+    """(a_id, b_id, cosine) for every cell of the score block ``s``
+    with cosine >= tau and a_id < b_id (each unordered pair once)."""
+    ai, bi = np.nonzero((s >= tau) & (a_ids[:, None] < b_ids[None, :]))
+    return pd.DataFrame({"a_id": a_ids[ai], "b_id": b_ids[bi], "cosine": s[ai, bi]})
+
+
+def _top_k_per_query(df: DataFrame, k: int, score) -> DataFrame:
+    """Global merge of per-partition top-k lists: ``rank`` =
+    row_number over (q_id; ``score``, n_id asc), kept while <= k."""
+    w = W.partitionBy("q_id").orderBy(score, F.asc("n_id"))
+    return df.withColumn("rank", F.row_number().over(w).cast("long")).filter(
+        F.col("rank") <= k
+    )
+
+
+def _cogroup_scored(a: DataFrame, b: DataFrame, key: str, kernel, schema: str) -> DataFrame:
+    """Cogroup query rows ``a`` (q_id, q_vec, …) with candidate rows
+    ``b`` (n_id, n_vec, …) on ``key`` and call ``kernel(adf, bdf, s)``
+    per group, ``s`` the fold-exact score matrix (see _fold_matmul). A
+    group empty on either side returns a typed empty frame of
+    ``schema``."""
+
+    def run(adf: pd.DataFrame, bdf: pd.DataFrame) -> pd.DataFrame:
+        if adf.empty or bdf.empty:
+            return _empty_frame(schema)
+        a64 = np.stack(adf["q_vec"].to_numpy()).astype(np.float64)
+        b64 = np.stack(bdf["n_vec"].to_numpy()).astype(np.float64)
+        return kernel(adf, bdf, _fold_matmul(a64, b64))
+
+    return a.groupBy(key).cogroup(b.groupBy(key)).applyInPandas(run, schema=schema)
+
+
+def _block_grid(a: DataFrame, b: DataFrame, kernel, schema: str) -> DataFrame:
+    """The [OR11] replicate-one-side region: the query side ``a`` is
+    split into ``shuffle.partitions`` blocks by q_id, the candidate
+    side ``b`` is copied to every block, and each block is scored by
+    ``kernel`` (see _cogroup_scored)."""
+    nb = int(a.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    return _cogroup_scored(
+        a.withColumn("__blk", F.pmod(F.col("q_id"), F.lit(nb)).cast("int")),
+        b.withColumn("__blk", F.explode(F.sequence(F.lit(0), F.lit(nb - 1)))),
+        "__blk",
+        kernel,
+        schema,
+    )
+
+
+def _serving_queries(queries: DataFrame, id_col: str, vec_col: str, max_queries: int):
+    """The serving gate: ONE bounded collect of at most
+    ``max_queries + 1`` query rows decides the arm and, below the gate,
+    is the query matrix. Returns (q_ids int64, q_mat float64), or None
+    when the query set exceeds ``max_queries``; an empty set raises."""
+    rows = (
+        queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"))
+        .limit(max_queries + 1)
+        .collect()
+    )
+    if not rows:
+        raise ValueError("empty query set")
+    if len(rows) > max_queries:
+        return None
+    q_ids = np.array([r.q_id for r in rows], dtype=np.int64)
+    return q_ids, np.stack([np.asarray(r.q_vec) for r in rows]).astype(np.float64)
 
 
 def knn_cosine(
@@ -100,11 +197,8 @@ def knn_cosine_brute(
         .filter(F.col("q_id") != F.col("n_id"))
         .withColumn("cosine", dot_expr("q_vec", "n_vec"))
     )
-    w = W.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("n_id"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "cosine", "rank")
+    return _top_k_per_query(pairs, k, F.desc("cosine")).select(
+        "q_id", "n_id", "cosine", "rank"
     )
 
 
@@ -130,20 +224,19 @@ def knn_query_table(
     corpus is read once, map-side, and the shuffle carries only
     candidates — this is the optimal exact plan for |Q| ≪ |corpus|.
 
-    The collect is GATED: a limit-probe counts the query side first,
-    and anything past ``max_queries`` routes to the fully distributed
-    IVF cell-probe plan (``operators.ivf.ivf_query_search``: corpus
-    hashed to centroid cells, queries replicated ×n_probe to their
-    nearest cells, per-cell cogroup scoring) — no driver
-    materialization and no |C|·|Q| cross product on ANY path (the r5
-    fallback was a broadcast cross join; VERDICT r5 item 6). Above the
+    The collect is GATED: one collect of at most ``max_queries + 1``
+    query rows (_serving_queries), and a query set past
+    ``max_queries`` routes to the fully distributed IVF cell-probe
+    plan (``operators.ivf.ivf_query_search``: corpus hashed to
+    centroid cells, queries replicated ×n_probe to their nearest
+    cells, per-cell cogroup scoring) — no unbounded driver
+    materialization and no |C|·|Q| cross product on ANY path (a
+    broadcast cross join would be one). Above the
     gate results are approximate (IVF recall, measured in AUDIT.md);
     below it they are exact. Ids must be an integral type on both
     sides (they travel through int64 numpy kernels); anything else
     raises immediately rather than miscasting.
     """
-    import numpy as np
-
     for side, name in ((queries, "queries"), (corpus, "corpus")):
         dt = side.schema[id_col].dataType.simpleString()
         if dt not in ("tinyint", "smallint", "int", "bigint"):
@@ -152,20 +245,17 @@ def knn_query_table(
                 "cast string/decimal ids to long before the join"
             )
 
-    q_probe = queries.limit(max_queries + 1).count()
-    if not q_probe:
-        raise ValueError("empty query set")
-    if q_probe > max_queries:
+    served = _serving_queries(queries, id_col, vec_col, max_queries)
+    if served is None:
         # distributed fallback: IVF cell probing. Work per query drops
         # from |C| to ~|C|·n_probe/n_clusters; both sides stay
-        # DataFrames. 32 cells / 20 probes (round 8, VERDICT r7 item
-        # 3): measured recall@5 = 0.932 on the (near-random,
-        # worst-case-for-IVF) fixture embeddings at LOWER wall-clock
-        # than the old 16/8 config (2.0 s vs 2.3 s median — finer
-        # cells parallelize the per-cell cogroup better, and the
-        # 62.5 % probed fraction more than covers the targeting loss);
-        # clustered production embeddings recall far higher at the
-        # same probe fraction.
+        # DataFrames. 32 cells / 20 probes: measured recall@5 = 0.932
+        # on the (near-random, worst-case-for-IVF) fixture embeddings
+        # at LOWER wall-clock than a 16/8 config (2.0 s vs 2.3 s
+        # median — finer cells parallelize the per-cell cogroup
+        # better, and the 62.5 % probed fraction more than covers the
+        # targeting loss); clustered production embeddings recall far
+        # higher at the same probe fraction.
         from .ivf import ivf_query_search
 
         return ivf_query_search(
@@ -181,12 +271,7 @@ def knn_query_table(
             n_clusters=32,
             n_probe=20,
         )
-
-    q_rows = queries.select(
-        F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")
-    ).collect()
-    q_ids = np.array([r.q_id for r in q_rows], dtype=np.int64)
-    q_mat = np.stack([np.asarray(r.q_vec) for r in q_rows]).astype(np.float64)
+    q_ids, q_mat = served
 
     out_schema = "q_id long, n_id long, cosine double"
 
@@ -212,11 +297,7 @@ def knn_query_table(
     cand = corpus.select(
         F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_vec")
     ).mapInPandas(scan, out_schema)
-    w = W.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("n_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return _top_k_per_query(cand, k, F.desc("cosine"))
 
 
 def knn_cosine_blocked(
@@ -224,7 +305,6 @@ def knn_cosine_blocked(
     id_col: str,
     vec_col: str,
     k: int = 5,
-    num_blocks: int | None = None,
 ) -> DataFrame:
     """Exact k-NN, Arrow-vectorized: partition the query side into
     blocks, replicate the candidate side to every block (the [OR11]
@@ -236,52 +316,16 @@ def knn_cosine_blocked(
     math. Candidate-side replication is the scale limit; beyond
     ~10⁵ candidates switch to the LSH/IVF path.
     """
-    import pandas as pd
 
-    spark = emb.sparkSession
-    nb = num_blocks or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    def topk(adf: pd.DataFrame, bdf: pd.DataFrame, s) -> pd.DataFrame:
+        q_ids, n_ids = adf["q_id"].to_numpy(), bdf["n_id"].to_numpy()
+        return _topk_frame(q_ids, n_ids, s, k, lambda i: n_ids != q_ids[i])
 
-    a = emb.select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.pmod(F.col(id_col), F.lit(nb)).cast("int").alias("__blk"),
-    )
-    b = emb.select(
-        F.col(id_col).alias("n_id"),
-        F.col(vec_col).alias("n_vec"),
-        F.explode(F.sequence(F.lit(0), F.lit(nb - 1))).alias("__blk"),
-    )
-    def topk(adf: pd.DataFrame, bdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        if adf.empty or bdf.empty:
-            return pd.DataFrame(
-                {"q_id": [], "n_id": [], "cosine": [], "rank": []}
-            ).astype({"q_id": "int64", "n_id": "int64", "cosine": "float64", "rank": "int64"})
-        a64 = np.stack(adf["q_vec"].to_numpy()).astype(np.float64)
-        b64 = np.stack(bdf["n_vec"].to_numpy()).astype(np.float64)
-        s = _fold_matmul(a64, b64)
-        q_ids = adf["q_id"].to_numpy()
-        n_ids = bdf["n_id"].to_numpy()
-        out_q, out_n, out_c, out_r = [], [], [], []
-        for i in range(len(q_ids)):
-            row = s[i]
-            mask = n_ids != q_ids[i]
-            cand_n, cand_c = n_ids[mask], row[mask]
-            order = np.lexsort((cand_n, -cand_c))[:k]
-            out_q.extend([q_ids[i]] * len(order))
-            out_n.extend(cand_n[order])
-            out_c.extend(cand_c[order])
-            out_r.extend(range(1, len(order) + 1))
-        return pd.DataFrame(
-            {"q_id": out_q, "n_id": out_n, "cosine": out_c,
-             "rank": pd.array(out_r, dtype="int64")}
-        )
-
-    return (
-        a.groupBy("__blk")
-        .cogroup(b.groupBy("__blk"))
-        .applyInPandas(topk, schema="q_id long, n_id long, cosine double, rank long")
+    return _block_grid(
+        emb.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")),
+        emb.select(F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_vec")),
+        topk,
+        "q_id long, n_id long, cosine double, rank long",
     )
 
 
@@ -290,48 +334,19 @@ def threshold_similarity_blocked(
     id_col: str,
     vec_col: str,
     tau: float,
-    num_blocks: int | None = None,
 ) -> DataFrame:
     """Exact threshold self-similarity join with the same blocked
     numpy kernel; each unordered pair is scored once (in the block of
     its lower id) — the [OR11 §4] unique-region property."""
-    import pandas as pd
 
-    spark = emb.sparkSession
-    nb = num_blocks or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    a = emb.select(
-        F.col(id_col).alias("a_id"),
-        F.col(vec_col).alias("a_vec"),
-        F.pmod(F.col(id_col), F.lit(nb)).cast("int").alias("__blk"),
-    )
-    b = emb.select(
-        F.col(id_col).alias("b_id"),
-        F.col(vec_col).alias("b_vec"),
-        F.explode(F.sequence(F.lit(0), F.lit(nb - 1))).alias("__blk"),
-    )
+    def pairs(adf: pd.DataFrame, bdf: pd.DataFrame, s) -> pd.DataFrame:
+        return _threshold_pairs(adf["q_id"].to_numpy(), bdf["n_id"].to_numpy(), s, tau)
 
-    def pairs(adf: pd.DataFrame, bdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        if adf.empty or bdf.empty:
-            return pd.DataFrame({"a_id": [], "b_id": [], "cosine": []}).astype(
-                {"a_id": "int64", "b_id": "int64", "cosine": "float64"}
-            )
-        a64 = np.stack(adf["a_vec"].to_numpy()).astype(np.float64)
-        b64 = np.stack(bdf["b_vec"].to_numpy()).astype(np.float64)
-        s = _fold_matmul(a64, b64)
-        a_ids = adf["a_id"].to_numpy()[:, None]
-        b_ids = bdf["b_id"].to_numpy()[None, :]
-        keep = (s >= tau) & (a_ids < b_ids)
-        ai, bi = np.nonzero(keep)
-        return pd.DataFrame(
-            {"a_id": a_ids[ai, 0], "b_id": b_ids[0, bi], "cosine": s[ai, bi]}
-        )
-
-    return (
-        a.groupBy("__blk")
-        .cogroup(b.groupBy("__blk"))
-        .applyInPandas(pairs, schema="a_id long, b_id long, cosine double")
+    return _block_grid(
+        emb.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")),
+        emb.select(F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_vec")),
+        pairs,
+        "a_id long, b_id long, cosine double",
     )
 
 
@@ -369,8 +384,6 @@ def _band_sigs_udf(num_bands: int, planes_per_band: int, dim: int):
     """Arrow-batched UDF: all band signatures of a vector in ONE numpy
     matmul against the (num_bands·planes_per_band)×dim plane matrix;
     planes are the deterministic md5 ±1 hyperplanes."""
-    import numpy as np
-
     planes = np.array(
         _hyperplane_signs(num_bands * planes_per_band, dim), dtype=np.float64
     )
@@ -488,8 +501,6 @@ def hyperplane_lsh_pairs(
         "*", F.posexplode("b_sigs").alias("__band", "__sig")
     )
 
-    import numpy as np
-
     def kernel(ldf: pd.DataFrame, rdf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame({"a_id": [], "b_id": [], "cosine": []})
         if ldf.empty or rdf.empty:
@@ -527,7 +538,6 @@ def hard_negatives_blocked(
     vec_col: str,
     label_col: str,
     k: int = 5,
-    num_blocks: int | None = None,
 ) -> DataFrame:
     """Exact hard-negative mining: for every anchor vector, the k most
     cosine-similar vectors carrying a DIFFERENT label — the contrastive
@@ -539,61 +549,27 @@ def hard_negatives_blocked(
     label-inequality mask. Candidate-side replication is the scale
     limit; past ~10⁵ candidates route through the IVF path with a
     label filter on the probed cells."""
-    import pandas as pd
 
-    spark = emb.sparkSession
-    nb = num_blocks or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-
-    a = emb.select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.col(label_col).alias("q_lab"),
-        F.pmod(F.col(id_col), F.lit(nb)).cast("int").alias("__blk"),
-    )
-    b = emb.select(
-        F.col(id_col).alias("n_id"),
-        F.col(vec_col).alias("n_vec"),
-        F.col(label_col).alias("n_lab"),
-        F.explode(F.sequence(F.lit(0), F.lit(nb - 1))).alias("__blk"),
-    )
-
-    def topk(adf: pd.DataFrame, bdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        if adf.empty or bdf.empty:
-            return pd.DataFrame(
-                {"q_id": [], "n_id": [], "cosine": [], "rank": []}
-            ).astype(
-                {"q_id": "int64", "n_id": "int64",
-                 "cosine": "float64", "rank": "int64"}
-            )
-        a64 = np.stack(adf["q_vec"].to_numpy()).astype(np.float64)
-        b64 = np.stack(bdf["n_vec"].to_numpy()).astype(np.float64)
-        s = _fold_matmul(a64, b64)
-        q_ids = adf["q_id"].to_numpy()
-        q_labs = adf["q_lab"].to_numpy()
-        n_ids = bdf["n_id"].to_numpy()
-        n_labs = bdf["n_lab"].to_numpy()
-        out_q, out_n, out_c, out_r = [], [], [], []
-        for i in range(len(q_ids)):
-            mask = n_labs != q_labs[i]
-            cand_n, cand_c = n_ids[mask], s[i][mask]
-            order = np.lexsort((cand_n, -cand_c))[:k]
-            out_q.extend([q_ids[i]] * len(order))
-            out_n.extend(cand_n[order])
-            out_c.extend(cand_c[order])
-            out_r.extend(range(1, len(order) + 1))
-        return pd.DataFrame(
-            {"q_id": out_q, "n_id": out_n, "cosine": out_c,
-             "rank": pd.array(out_r, dtype="int64")}
+    def topk(adf: pd.DataFrame, bdf: pd.DataFrame, s) -> pd.DataFrame:
+        q_labs, n_labs = adf["q_lab"].to_numpy(), bdf["n_lab"].to_numpy()
+        return _topk_frame(
+            adf["q_id"].to_numpy(), bdf["n_id"].to_numpy(), s, k,
+            lambda i: n_labs != q_labs[i],
         )
 
-    return (
-        a.groupBy("__blk")
-        .cogroup(b.groupBy("__blk"))
-        .applyInPandas(
-            topk, schema="q_id long, n_id long, cosine double, rank long"
-        )
+    return _block_grid(
+        emb.select(
+            F.col(id_col).alias("q_id"),
+            F.col(vec_col).alias("q_vec"),
+            F.col(label_col).alias("q_lab"),
+        ),
+        emb.select(
+            F.col(id_col).alias("n_id"),
+            F.col(vec_col).alias("n_vec"),
+            F.col(label_col).alias("n_lab"),
+        ),
+        topk,
+        "q_id long, n_id long, cosine double, rank long",
     )
 
 
@@ -619,25 +595,17 @@ def knn_query_table_biscore(
     (_fold_matmul) so they are bit-identical to DuckDB's
     list_dot_product; ties break by n_id under both metrics.
 
-    The probe collect is the same gated model-state move as
-    knn_query_table's (≤ max_queries rows); past the gate this kernel
+    The probe collect is knn_query_table's serving gate
+    (_serving_queries, ≤ max_queries rows); past the gate this kernel
     refuses rather than degrade — rank-agreement metrics over huge
     query sets should sample probes, not shuffle the corpus."""
-    import numpy as np
-
-    q_probe = queries.limit(max_queries + 1).count()
-    if not q_probe:
-        raise ValueError("empty query set")
-    if q_probe > max_queries:
+    served = _serving_queries(queries, id_col, vec_col, max_queries)
+    if served is None:
         raise ValueError(
-            f"biscore probe set ({q_probe}) exceeds max_queries "
-            f"({max_queries}); sample the probes instead"
+            f"biscore probe set exceeds max_queries ({max_queries}); "
+            "sample the probes instead"
         )
-    q_rows = queries.select(
-        F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")
-    ).collect()
-    q_ids = np.array([r.q_id for r in q_rows], dtype=np.int64)
-    q_mat = np.stack([np.asarray(r.q_vec) for r in q_rows]).astype(np.float64)
+    q_ids, q_mat = served
 
     out_schema = "q_id long, n_id long, dot double, nn double"
 

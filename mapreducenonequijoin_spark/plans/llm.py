@@ -2201,21 +2201,14 @@ def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-pair interpreted fold leaves the plan entirely.
     import pandas as pd  # noqa: PLC0415
 
-    from ..operators.similarity import _fold_matmul
+    from ..operators.similarity import _fold_matmul, _threshold_pairs
 
     def cluster_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
 
-        if len(pdf) < 2:
-            return pd.DataFrame({"a_id": [], "b_id": []}).astype(
-                {"a_id": "int64", "b_id": "int64"}
-            )
         v = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-        s = _fold_matmul(v, v)
         ids = pdf["vec_id"].to_numpy().astype("int64")
-        keep = (s >= tau) & (ids[:, None] < ids[None, :])
-        ai, bi = np.nonzero(keep)
-        return pd.DataFrame({"a_id": ids[ai], "b_id": ids[bi]})
+        return _threshold_pairs(ids, ids, _fold_matmul(v, v), tau)[["a_id", "b_id"]]
 
     found = (
         clustered.groupBy("cluster")

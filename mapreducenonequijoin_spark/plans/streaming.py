@@ -915,10 +915,12 @@ def stream_epoch_replay_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         dirs = epoch_dirs(out)
         before = spark.read.parquet(*dirs).count()
         # the retry: replay epoch 0's input (== its landed frame, by the
-        # overwrite contract) through the SAME writer path. Materialize
-        # BEFORE the overwrite — a lazy frame would read the very files
-        # the writer is replacing (FAILED_READ_FILE, caught live)
-        writer(spark.read.parquet(dirs[0]).localCheckpoint(), 0)
+        # overwrite contract) through the SAME writer path. The replay
+        # reads a copy outside the epoch_* set: a frame over dirs[0]
+        # itself would read the very files the writer is replacing
+        # (FAILED_READ_FILE). The finally below removes the copy too.
+        shutil.copytree(dirs[0], f"{out}/_replay0")
+        writer(spark.read.parquet(f"{out}/_replay0"), 0)
         landed = spark.read.parquet(*epoch_dirs(out))
         idempotent = landed.count() == before
         totals = landed.groupBy("event_type").agg(

@@ -716,15 +716,28 @@ def _persistent_rdd_ids(spark) -> set[int]:
 
 
 def test_minhash_pairs_and_local_cc_persist_nothing(spark, sf_dir):
-    """Neither the MinHash pair plan nor the local CC arm leaves a
-    persisted RDD or a cached frame behind."""
-    from mapreducenonequijoin_spark.operators.dedup import connected_components
+    """Neither the MinHash pair plans (self and incremental) nor the
+    local CC arm leaves a persisted RDD or a cached frame behind."""
+    from mapreducenonequijoin_spark.operators.dedup import (
+        connected_components,
+        minhash_incremental_pairs,
+    )
 
     spark.catalog.clearCache()
     cache = spark._jsparkSession.sharedState().cacheManager()
     before = _persistent_rdd_ids(spark)
     pairs = minhash_near_dup_pairs(_docs(spark, sf_dir), "doc_id", "text")
     assert pairs.collect()
+    assert _persistent_rdd_ids(spark) - before == set()
+    assert cache.isEmpty()
+
+    docs = _docs(spark, sf_dir)
+    minhash_incremental_pairs(
+        docs.filter(F.col("doc_id") % 10 != 0),
+        docs.filter(F.col("doc_id") % 10 == 0),
+        "doc_id",
+        "text",
+    ).collect()
     assert _persistent_rdd_ids(spark) - before == set()
     assert cache.isEmpty()
 

@@ -351,31 +351,38 @@ def test_no_unexplained_global_windows(built):
     )
 
 
-#: every .collect() in the package, file → expected count. Each site
-#: is BOUNDED (codebook/centroid collects, 1-row scalar aggs, manifest
-#: paths O(#files), predicate-capped fixture staging) — the invariant
-#: is "no collect's row count grows with the data" (VERDICT r9 item
-#: 4). A new .collect() anywhere fails this census until its bound is
+#: every driver collect in the package — ``.collect()`` and the Arrow
+#: ``.toPandas()`` — file → expected count. Each site is BOUNDED
+#: (codebook/centroid collects, 1-row scalar aggs, manifest paths
+#: O(#files), predicate-capped fixture staging, size-gated local
+#: arms) — the invariant is "no collect's row count grows with the
+#: data". A new collect anywhere fails this census until its bound is
 #: argued here.
 _COLLECT_CENSUS = {
     "plans/datapipe.py": 1,  # 1-row watermark agg (incremental ETL)
     "plans/scans.py": 1,  # blob staging ids, predicate-capped <= 512
     "plans/streaming.py": 1,  # epoch replay gate: one row per event_type
     "streaming/windows.py": 2,  # 1-row max(ts) aggs (sentinel staging)
-    "operators/similarity.py": 2,  # serving gates, <= max_queries rows
-    # (knn_query_table + knn_query_table_biscore probe matrices)
+    "operators/similarity.py": 1,  # serving gate (_serving_queries):
+    # <= max_queries + 1 probe rows, shared by knn_query_table and
+    # knn_query_table_biscore
     "operators/pq.py": 3,  # PQ codebook/stats: ksub x M, O(1) model
-    "operators/ivf.py": 2,  # IVF centroids: nlist rows, O(1) model
+    "operators/ivf.py": 3,  # IVF centroids: nlist rows, O(1) model;
+    # plus the local k-means fit's toPandas, gated by
+    # _LOCAL_KMEANS_MAX_CELLS (rows x dim)
+    "operators/dedup.py": 1,  # CC local arm's toPandas: at most
+    # local_edge_threshold // 2 + 1 edge rows
     "operators/table_format.py": 2,  # manifest paths + per-file
     # commit stats (one row per written file), both O(#files)
 }
 
 
 def test_collect_census_is_closed():
-    """Grep-style census: the package's .collect() sites must match
-    the documented bounded whitelist exactly — a data-proportional
-    driver collect can't slip in silently (the companion gate to the
-    GLOBALWIN census above)."""
+    """Grep-style census: the package's driver-collect sites
+    (``.collect()`` and ``.toPandas()``) must match the documented
+    bounded whitelist exactly — a data-proportional driver collect
+    can't slip in silently (the companion gate to the GLOBALWIN
+    census above)."""
     import pathlib
 
     pkg = pathlib.Path(__file__).resolve().parents[1] / (
@@ -383,11 +390,12 @@ def test_collect_census_is_closed():
     )
     found: dict[str, int] = {}
     for py in sorted(pkg.rglob("*.py")):
-        n = py.read_text().count(".collect()")
+        text = py.read_text()
+        n = text.count(".collect()") + text.count(".toPandas()")
         if n:
             found[str(py.relative_to(pkg))] = n
     assert found == _COLLECT_CENSUS, (
-        "package .collect() census drifted — argue the new site's "
+        "package collect census drifted — argue the new site's "
         f"bound in _COLLECT_CENSUS: {found}"
     )
 

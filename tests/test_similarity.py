@@ -128,6 +128,33 @@ def test_hard_negatives_never_same_label(spark, sf_dir):
         cos = [c for _, c in rs]
         assert all(a >= b for a, b in zip(cos, cos[1:]))
 
+    # values: a brute-force masked top-k (cross join, label-inequality
+    # filter, (cosine desc, n_id asc) window) picks the same negatives
+    from pyspark.sql import Window as W
+    from pyspark.sql import functions as F
+
+    from mapreducenonequijoin_spark.functions.vectors import dot_expr
+
+    a = emb.select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("qv"),
+        F.col("label").alias("q_lab"),
+    )
+    b = emb.select(
+        F.col("vec_id").alias("n_id"), F.col("embedding").alias("nv"),
+        F.col("label").alias("n_lab"),
+    )
+    w = W.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("n_id"))
+    want = {
+        (r.q_id, r.rank): r.n_id
+        for r in a.crossJoin(b)
+        .filter(F.col("q_lab") != F.col("n_lab"))
+        .withColumn("cosine", dot_expr("qv", "nv"))
+        .withColumn("rank", F.row_number().over(w).cast("long"))
+        .filter(F.col("rank") <= 5)
+        .collect()
+    }
+    assert {(r.q_id, r.rank): r.n_id for r in rows} == want
+
 
 def test_diversified_topk_one_per_label(spark, sf_dir):
     """Diversity contract: distinct labels, descending scores, and

@@ -442,7 +442,7 @@ def test_epoch_replay_gate_red_on_append(spark, sf_dir, tmp_path):
 
 def test_epoch_replay_gate_leaves_no_sink_dir(spark, sf_dir):
     """Building and collecting the gate leaves no new ``erg_*`` sink
-    directory behind."""
+    directory and no new persistent RDD behind."""
     import os
 
     from mapreducenonequijoin_spark.plans import QUERIES
@@ -454,10 +454,14 @@ def test_epoch_replay_gate_leaves_no_sink_dir(spark, sf_dir):
             return set()
         return {d for d in os.listdir(root) if d.startswith("erg_")}
 
-    before = erg_dirs()
+    def persistent_rdds():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before, rdds_before = erg_dirs(), persistent_rdds()
     got = QUERIES["stream_epoch_replay_gate"].fn(spark, sf_dir).collect()
     assert got and all(r.replay_idempotent for r in got)
     assert erg_dirs() - before == set()
+    assert persistent_rdds() - rdds_before == set()
 
 
 def test_transform_with_state_matches_batch(spark, sf_dir):
