@@ -396,8 +396,16 @@ def connected_components(
     try:
         return _cc_loop(spark, vertices, sym, vertex_col, max_iterations)
     finally:
+        # the result reads only the final labels' checkpoint
+        _drop_checkpoint(sym)
         if old_parts is not None:
             spark.conf.set(conf_key, old_parts)
+
+
+def _drop_checkpoint(df: DataFrame) -> None:
+    """Release the blocks of an eager ``localCheckpoint`` frame (the
+    RDD under its LogicalRDD plan); nothing may read ``df`` after."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def _cc_local(
@@ -471,10 +479,14 @@ def _cc_loop(
 ) -> DataFrame:
     import shutil
     import tempfile
+    if max_iterations < 1:
+        # the result must come from a round's checkpoint, not from sym
+        raise ValueError("connected_components: max_iterations must be >= 1")
     # only vertices that touch an edge need propagation; the (usually
     # vastly larger) singleton set maps to itself without any work
-    touched = sym.select(F.col("__src").alias("__v")).distinct()
-    labels = touched.withColumn("__label", F.col("__v"))
+    labels = sym.select(F.col("__src").alias("__v")).distinct()
+    labels = labels.withColumn("__label", F.col("__v"))
+    ckpt = None  # the live round checkpoint; a superseded one is dropped
 
     def jump(cur: DataFrame) -> DataFrame:
         l2 = cur.select(F.col("__v").alias("__u"), F.col("__label").alias("__l2"))
@@ -518,6 +530,9 @@ def _cc_loop(
         # 3. DOWN: two lazy compression jumps, same plan
         cur = jump(jump(cur))
         cur = cur.localCheckpoint(eager=True)
+        if ckpt is not None:
+            _drop_checkpoint(ckpt)
+        ckpt = cur
         changed = cur.filter(F.col("__prev") != F.col("__label")).count()
         labels = cur.drop("__prev")
         if changed == 0:
@@ -531,9 +546,11 @@ def _cc_loop(
     if tmpdir is not None:
         # detach the result from the barrier files, then drop them
         labels = labels.localCheckpoint(eager=True)
+        _drop_checkpoint(ckpt)
         shutil.rmtree(tmpdir, ignore_errors=True)
+    # the labelled vertices are exactly the edge endpoints
     singles = vertices.select(F.col(vertex_col).alias("__v")).join(
-        touched, "__v", "left_anti"
+        labels.select("__v"), "__v", "left_anti"
     ).withColumn("__label", F.col("__v"))
     return labels.unionByName(singles).select(
         F.col("__v").alias(vertex_col), F.col("__label").alias("cluster_rep")

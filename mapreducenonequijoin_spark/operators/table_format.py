@@ -11,7 +11,17 @@ the Delta/Iceberg commit protocol (SURVEY.md §2, ACID-gap closure r7):
   the new manifest = untouched entries (SHARED with the previous
   version, byte-identical files) + rewritten entries;
 - **time travel** is reading an older manifest — old versions stay
-  valid because commits never mutate or delete referenced files.
+  valid because commits never mutate or delete referenced files;
+- a **schema file** per version (``_manifests/schema-v<N>.json``, the
+  Spark schema JSON with every field nullable, as Spark infers it on
+  read) is written before the manifest commits. Reads pass it to
+  ``spark.read.schema`` so no schema-inference job runs; a version
+  without one (written before schema files existed) falls back to
+  inference.
+
+Commit statistics (rows, key min/max) come from the parquet footers
+the commit just wrote, read with pyarrow; schemas come from the schema
+file. Neither takes a Spark job.
 
 What the real formats add beyond this miniature: optimistic-
 concurrency conflict detection between simultaneous committers, a
@@ -28,6 +38,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 __all__ = [
     "compact",
@@ -36,6 +47,7 @@ __all__ = [
     "read_snapshot",
     "current_version",
     "manifest_entries",
+    "stored_schema",
 ]
 
 _MANIFESTS = "_manifests"
@@ -43,6 +55,11 @@ _MANIFESTS = "_manifests"
 
 def _manifest_path(table_dir: str, version: int) -> str:
     return f"{table_dir}/{_MANIFESTS}/v{version}.json"
+
+
+def _schema_path(table_dir: str, version: int) -> str:
+    # not "v*.json": current_version() reads every v<N>.json as a version
+    return f"{table_dir}/{_MANIFESTS}/schema-v{version}.json"
 
 
 def current_version(table_dir: str) -> int | None:
@@ -62,47 +79,110 @@ def manifest_entries(table_dir: str, version: int) -> list[dict]:
         return json.load(fh)
 
 
+def _nullable(dt: DataType) -> DataType:
+    """Spark's ``asNullable``: the type a parquet read infers for data
+    written as ``dt`` (every field, array element and map value
+    nullable)."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in dt]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def _write_schema(table_dir: str, version: int, schema: StructType) -> None:
+    """Store a version's read schema; written before ``_commit``, so a
+    published manifest always finds its schema (temp file + rename)."""
+    os.makedirs(f"{table_dir}/{_MANIFESTS}", exist_ok=True)
+    path = _schema_path(table_dir, version)
+    tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
+    with open(tmp, "w") as fh:
+        fh.write(_nullable(schema).json())
+    os.rename(tmp, path)
+
+
+def stored_schema(table_dir: str, version: int) -> StructType | None:
+    """The schema stored with ``version``, or None for a version
+    written before schema files existed."""
+    try:
+        with open(_schema_path(table_dir, version)) as fh:
+            return StructType.fromJson(json.load(fh))
+    except FileNotFoundError:
+        return None
+
+
+def _read_files(
+    spark: SparkSession, schema: StructType | None, paths: list[str]
+) -> DataFrame:
+    """Read data files with the stored schema (no inference job); an
+    empty file list reads as an empty frame of that schema. Without a
+    stored schema Spark infers one, as it always did."""
+    if schema is None:
+        return spark.read.parquet(*paths)
+    if not paths:
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(*paths)
+
+
+def _footer_stats(path: str, key_col: str) -> dict:
+    """Key min/max and row count of one parquet file, from its footer
+    (the key column is read only if a row group holding non-null keys
+    carries no min/max statistics)."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    md = pq.ParquetFile(path).metadata
+    col = next(
+        i for i in range(md.num_columns) if md.schema.column(i).path == key_col
+    )
+    mins, maxs = [], []
+    for g in range(md.num_row_groups):
+        rg = md.row_group(g)
+        st = rg.column(col).statistics
+        if st is not None and st.has_min_max:
+            mins.append(st.min)
+            maxs.append(st.max)
+        elif st is None or st.null_count != rg.num_rows:
+            mm = pc.min_max(pq.read_table(path, columns=[key_col])[key_col]).as_py()
+            mins, maxs = [mm["min"]], [mm["max"]]
+            break
+    return {
+        "min": min(mins) if mins else None,
+        "max": max(maxs) if maxs else None,
+        "rows": md.num_rows,
+    }
+
+
 def _write_files_with_stats(
-    spark: SparkSession, df: DataFrame, table_dir: str, key_col: str, n_files: int
+    df: DataFrame, table_dir: str, key_col: str, n_files: int
 ) -> list[dict]:
     """Write df as n_files range-partitioned parquet files and return
     manifest entries (path, key min/max envelope, rows). Range
     partitioning gives each file a DISJOINT key envelope — that is
     what makes file-level pruning selective (a hash layout would give
-    every file the full key range). In a real format the per-file
-    stats come back from the write commit; here they are read from
-    the parquet footers (a metadata-sized pass)."""
+    every file the full key range). As in a real format, the per-file
+    stats come from the write itself: each part's row count and key
+    min/max are read from its parquet footer with pyarrow, a
+    metadata-sized read with no Spark job."""
     data_dir = f"{table_dir}/data-{uuid.uuid4().hex[:12]}"
     df.repartitionByRange(n_files, key_col).write.parquet(data_dir)
-    # ONE stats job over the whole commit, grouped by source file —
-    # the original per-file .agg().first() loop serialized n_files
-    # full Spark jobs through the driver (~150-200 ms each), which
-    # dominated every multi-file commit's wall clock
-    stats = (
-        spark.read.parquet(data_dir)
-        .groupBy(F.input_file_name().alias("__f"))
-        .agg(
-            F.min(key_col).alias("mn"),
-            F.max(key_col).alias("mx"),
-            F.count("*").alias("rows"),
-        )
-        .collect()
-    )
-    by_name = {os.path.basename(r["__f"]): r for r in stats}
     entries = []
     for fname in sorted(os.listdir(data_dir)):
         if not fname.endswith(".parquet"):
             continue
         path = f"{data_dir}/{fname}"
-        r = by_name.get(fname)
-        if r is None:
-            # an empty part emits no stats row; an unreferenced-but-
-            # on-disk file is indistinguishable from a crash orphan to
-            # orphan_files()/vacuum(), so remove it rather than leave
-            # phantom orphans behind
+        stats = _footer_stats(path, key_col)
+        if stats["rows"] == 0:
+            # an unreferenced-but-on-disk empty part is indistinguishable
+            # from a crash orphan to orphan_files()/vacuum(), so remove
+            # it rather than leave phantom orphans behind
             os.remove(path)
             continue
-        entries.append({"path": path, "min": r.mn, "max": r.mx, "rows": r.rows})
+        entries.append({"path": path, **stats})
     return entries
 
 
@@ -125,7 +205,8 @@ def create_table(
 ) -> int:
     """Create snapshot v0 from df. Returns the committed version."""
     os.makedirs(table_dir, exist_ok=True)
-    entries = _write_files_with_stats(spark, df, table_dir, key_col, n_files)
+    entries = _write_files_with_stats(df, table_dir, key_col, n_files)
+    _write_schema(table_dir, 0, df.schema)
     _commit(table_dir, 0, entries)
     return 0
 
@@ -144,10 +225,11 @@ def merge_commit(
     upserts (update if the key exists anywhere, insert otherwise),
     'D' deletes. Steps:
 
-    1. file-level pruning: join the (tiny) manifest-envelope frame to
-       the delta's distinct keys — a file is TOUCHED iff some delta
-       key falls inside its [min,max]. Only the file list (bounded by
-       file count, metadata-sized) is collected.
+    1. file-level pruning: join the delta's per-key counts to the
+       (tiny, broadcast) manifest-envelope frame — a file is TOUCHED
+       iff some delta key falls inside its [min,max]. ONE action
+       returns one row: the largest per-key count (the duplicate-key
+       check) and the touched file list (bounded by file count).
     2. rewrite touched files ⟕⟖ delta (one equi-join on the key):
        delete marks drop the row, upserts take the delta payload,
        untouched target rows pass through, unmatched 'U' rows insert.
@@ -164,33 +246,31 @@ def merge_commit(
         raise ValueError(f"no table at {table_dir}")
     entries = manifest_entries(table_dir, ver)
 
-    # real MERGE semantics: more than one source row per target key is
-    # an error (Delta: "multiple source rows matched"), not a silent
-    # nondeterministic pick
-    dup = (
-        delta.groupBy(key_col).count().filter(F.col("count") > 1).limit(1).count()
-    )
-    if dup:
-        raise ValueError("merge_commit: delta contains duplicate keys")
-
     ranges = spark.createDataFrame(
         [(e["path"], e["min"], e["max"]) for e in entries],
         "path string, mn long, mx long",
     )
-    dkeys = delta.select(F.col(key_col).cast("long").alias("__dk")).distinct()
-    touched = {
-        r.path
-        for r in ranges.join(
-            dkeys,
-            (F.col("__dk") >= F.col("mn")) & (F.col("__dk") <= F.col("mx")),
-            "left_semi",
-        ).collect()
-    }
+    dk = F.col("__dk").cast("long")
+    probe = (
+        delta.groupBy(F.col(key_col).alias("__dk"))
+        .agg(F.count("*").alias("__n"))
+        .join(F.broadcast(ranges), (dk >= F.col("mn")) & (dk <= F.col("mx")), "left")
+        .agg(F.max("__n").alias("n"), F.collect_set("path").alias("touched"))
+        .first()
+    )
+    # real MERGE semantics: more than one source row per target key is
+    # an error (Delta: "multiple source rows matched"), not a silent
+    # nondeterministic pick
+    if probe.n is not None and probe.n > 1:
+        raise ValueError("merge_commit: delta contains duplicate keys")
+    touched = set(probe.touched)
     untouched = [e for e in entries if e["path"] not in touched]
 
     target_cols = [c for c in delta.columns if c != op_col]
     if touched:
-        target = spark.read.parquet(*sorted(touched))
+        target = _read_files(
+            spark, stored_schema(table_dir, ver), sorted(touched)
+        )
     else:
         target = spark.createDataFrame([], delta.drop(op_col).schema)
     d = delta.select(
@@ -210,9 +290,8 @@ def merge_commit(
             for c in target_cols
         ]
     )
-    new_entries = _write_files_with_stats(
-        spark, merged, table_dir, key_col, n_files
-    )
+    new_entries = _write_files_with_stats(merged, table_dir, key_col, n_files)
+    _write_schema(table_dir, ver + 1, merged.schema)
     _commit(table_dir, ver + 1, untouched + new_entries)
     return ver + 1
 
@@ -230,20 +309,21 @@ def read_snapshot(
     [min,max] envelope intersects [lo,hi] are opened — the Iceberg
     scan-planning step, done driver-side over metadata (never a data
     pass), with the residual predicate still applied to the surviving
-    files' rows. Returns an empty frame (correct schema) when every
-    file prunes away."""
+    files' rows. Returns an empty frame with the stored schema when the
+    version has no files or every file prunes away."""
     ver = current_version(table_dir) if version is None else version
     if ver is None:
         raise ValueError(f"no table at {table_dir}")
     entries = manifest_entries(table_dir, ver)
+    schema = stored_schema(table_dir, ver)
     if key_range is not None:
         lo, hi = key_range
-        entries = [e for e in entries if e["max"] >= lo and e["min"] <= hi]
-        if not entries:
-            any_entry = manifest_entries(table_dir, ver)[0]
-            schema = spark.read.parquet(any_entry["path"]).schema
-            return spark.createDataFrame([], schema)
-    return spark.read.parquet(*[e["path"] for e in entries])
+        kept = [e for e in entries if e["max"] >= lo and e["min"] <= hi]
+        if not kept and entries and schema is None:
+            # a version written before schema files existed
+            schema = spark.read.parquet(entries[0]["path"]).schema
+        entries = kept
+    return _read_files(spark, schema, [e["path"] for e in entries])
 
 
 def pruned_file_count(
@@ -259,9 +339,10 @@ def pruned_file_count(
 
 def vacuum(table_dir: str, keep_latest: int = 1) -> tuple[int, int]:
     """Physically delete data files unreferenced by the newest
-    ``keep_latest`` manifests, plus the expired manifests themselves —
-    Delta's VACUUM / Iceberg's expire_snapshots, the storage-lifecycle
-    op that bounds a copy-on-write table's footprint. Returns
+    ``keep_latest`` manifests, plus the expired manifests themselves
+    and their schema files — Delta's VACUUM / Iceberg's
+    expire_snapshots, the storage-lifecycle op that bounds a
+    copy-on-write table's footprint. Returns
     (data files removed, manifests removed).
 
     Everything here is METADATA-SIZED: the live set is the union of
@@ -314,6 +395,8 @@ def vacuum(table_dir: str, keep_latest: int = 1) -> tuple[int, int]:
         if os.path.exists(mp):
             os.remove(mp)
             removed_manifests += 1
+        if os.path.exists(_schema_path(table_dir, v)):
+            os.remove(_schema_path(table_dir, v))
     return removed_data, removed_manifests
 
 
@@ -389,9 +472,10 @@ def compact(
         bin_expr = F.when(F.col(key_col) <= bin_envs[i][1], F.lit(i)).otherwise(
             bin_expr
         )
-    src = spark.read.parquet(*[e["path"] for e in small]).withColumn(
-        "__mrnej_bin", bin_expr
+    small_df = _read_files(
+        spark, stored_schema(table_dir, ver), [e["path"] for e in small]
     )
+    src = small_df.withColumn("__mrnej_bin", bin_expr)
     (
         src.repartition(len(bins), "__mrnej_bin")
         .sortWithinPartitions("__mrnej_bin", key_col)
@@ -407,6 +491,7 @@ def compact(
             if f.endswith(".parquet")
         )
         new_entries.append({"path": path, "min": mn, "max": mx, "rows": rows})
+    _write_schema(table_dir, ver + 1, small_df.schema)
     _commit(table_dir, ver + 1, keep + new_entries)
     return ver + 1, len(entries), len(keep) + len(new_entries), len(small)
 
@@ -533,7 +618,7 @@ def branch_commit(
     refs = table_refs(table_dir)
     ref = refs.get(name)
     k = 0 if ref is None else ref["tip"] + 1
-    entries = _write_files_with_stats(spark, df, table_dir, key_col, n_files)
+    entries = _write_files_with_stats(df, table_dir, key_col, n_files)
     tmp = _branch_manifest_path(table_dir, name, k) + f".tmp-{uuid.uuid4().hex[:8]}"
     os.makedirs(f"{table_dir}/{_MANIFESTS}", exist_ok=True)
     with open(tmp, "w") as fh:

@@ -719,25 +719,22 @@ def stream_versioned_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (us, eid) writer ordinal beats the stored one — stored as two
         # columns and compared lexicographically, so event_id ties at
         # the same microsecond stay exact (a packed ordinal would drop
-        # bits). The bootstrap v0 manifest is EMPTY (zero files — no
-        # schema to read), so the filter starts at v1.
-        from ..operators.table_format import current_version as _cv
-        from ..operators.table_format import manifest_entries as _me
-
-        if _me(table_dir, _cv(table_dir)):
-            cur = read_snapshot(batch_df.sparkSession, table_dir).select(
-                F.col("user_id").alias("c_uid"),
-                F.col("us").alias("c_us"),
-                F.col("eid").alias("c_eid"),
-            )
-            newer = F.col("c_us").isNull() | (
-                F.struct("us", "eid") >= F.struct("c_us", "c_eid")
-            )
-            last = (
-                last.join(cur, last.user_id == cur.c_uid, "left")
-                .filter(newer)
-                .select("user_id", "last_value", "us", "eid", "op")
-            )
+        # bits). The bootstrap v0 has zero files and reads as an empty
+        # frame of its stored schema, so every key passes the first
+        # epoch.
+        cur = read_snapshot(batch_df.sparkSession, table_dir).select(
+            F.col("user_id").alias("c_uid"),
+            F.col("us").alias("c_us"),
+            F.col("eid").alias("c_eid"),
+        )
+        newer = F.col("c_us").isNull() | (
+            F.struct("us", "eid") >= F.struct("c_us", "c_eid")
+        )
+        last = (
+            last.join(cur, last.user_id == cur.c_uid, "left")
+            .filter(newer)
+            .select("user_id", "last_value", "us", "eid", "op")
+        )
         if last.limit(1).count() > 0:
             merge_commit(batch_df.sparkSession, table_dir, last, "user_id")
 

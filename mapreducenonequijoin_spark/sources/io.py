@@ -10,8 +10,12 @@ without touching operators.
 
 from __future__ import annotations
 
+import os
+from collections import OrderedDict
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 # Fixture tables generated by the driver (TESTDATA.md).
 TABLES = [
@@ -26,6 +30,31 @@ TABLES = [
     "documents",
     "embeddings",
 ]
+
+
+# Spark's inferred schema per table, keyed by _files_key; least recently
+# used entries are evicted past _SCHEMA_MEMO_MAX.
+_SCHEMA_MEMO: OrderedDict[tuple, StructType] = OrderedDict()
+_SCHEMA_MEMO_MAX = 64
+
+
+def _files_key(path: str) -> tuple | None:
+    """(abspath, sorted (relpath, size, mtime_ns) of every file under
+    it) for a local parquet file or directory; None for a path that is
+    not on the local file system, which is then never memoized."""
+    path = os.path.abspath(path)
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return path, ((".", st.st_size, st.st_mtime_ns),)
+    if not os.path.isdir(path):
+        return None
+    files = []
+    for root, _, names in os.walk(path):
+        for n in names:
+            p = os.path.join(root, n)
+            st = os.stat(p)
+            files.append((os.path.relpath(p, path), st.st_size, st.st_mtime_ns))
+    return path, tuple(sorted(files))
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -54,11 +83,29 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     value-identical to the DuckDB oracle when the session time zone is
     UTC, so we pin ``spark.sql.session.timeZone`` here too rather than
     trusting the host TZ of whoever built the session.
+
+    Schema memo: inferring a parquet schema is a Spark job (~0.1 s).
+    The inferred schema is memoized per table, keyed on the absolute
+    path plus every file's (relative path, size, mtime_ns), so an
+    unchanged input is read with ``spark.read.schema`` and no job, and
+    any rewrite of the files re-infers. The memo keeps the 64 most
+    recently used tables.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    key = _files_key(path)
+    schema = _SCHEMA_MEMO.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        if key is not None:
+            _SCHEMA_MEMO[key] = df.schema
+            if len(_SCHEMA_MEMO) > _SCHEMA_MEMO_MAX:
+                _SCHEMA_MEMO.popitem(last=False)
+    else:
+        _SCHEMA_MEMO.move_to_end(key)
+        df = spark.read.schema(schema).parquet(path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     ntz_cols = [c for c, t in df.dtypes if t == "timestamp_ntz"]

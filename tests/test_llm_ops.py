@@ -747,6 +747,27 @@ def test_minhash_pairs_and_local_cc_persist_nothing(spark, sf_dir):
     assert cache.isEmpty()
 
 
+def test_distributed_cc_keeps_only_the_final_checkpoint(spark):
+    """The distributed CC arm releases every superseded round
+    checkpoint and the symmetrized edge frame: on a 600-vertex path
+    (many rounds) only the final labels' checkpoint stays persisted
+    after ``collect()``, and the labels equal the local arm's."""
+    from mapreducenonequijoin_spark.operators.dedup import connected_components
+
+    edges = spark.range(599).select(
+        F.col("id").alias("a"), (F.col("id") + 1).alias("b")
+    )
+    verts = spark.range(600).select(F.col("id").alias("v"))
+    before = _persistent_rdd_ids(spark)
+    dist = connected_components(
+        verts, edges, "v", "a", "b", local_edge_threshold=0
+    ).collect()
+    assert len(_persistent_rdd_ids(spark) - before) <= 1
+    local = connected_components(verts, edges, "v", "a", "b").collect()
+    assert sorted(dist) == sorted(local)
+    assert {r.cluster_rep for r in dist} == {0} and len(dist) == 600
+
+
 def test_image_phash_brightness_invariance(spark, sf_dir):
     """The planted brightness variants (doc_id and doc_id+250 share a
     base raster; the latter is +1-clipped) must collapse to one

@@ -372,8 +372,6 @@ _COLLECT_CENSUS = {
     # _LOCAL_KMEANS_MAX_CELLS (rows x dim)
     "operators/dedup.py": 1,  # CC local arm's toPandas: at most
     # local_edge_threshold // 2 + 1 edge rows
-    "operators/table_format.py": 2,  # manifest paths + per-file
-    # commit stats (one row per written file), both O(#files)
 }
 
 

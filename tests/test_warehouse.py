@@ -204,6 +204,156 @@ def test_versioned_merge_rejects_duplicate_delta_keys(spark, tmp_path):
         merge_commit(spark, d, dup, "k")
 
 
+def _file_stats(spark, path, key_col):
+    from pyspark.sql import functions as F
+
+    r = spark.read.parquet(path).agg(
+        F.min(key_col).alias("min"), F.max(key_col).alias("max"),
+        F.count("*").alias("rows"),
+    ).first()
+    return r.asDict()
+
+
+def test_versioned_chain_metadata_matches_spark(spark, tmp_path):
+    """create -> merge (updates, deletes and an insert beyond every
+    envelope) -> merge (one key in a gap between envelopes, touching
+    no file) -> compact: every version's stored schema equals Spark's
+    inferred schema of its files, and every manifest entry's footer
+    min/max/rows equals a Spark aggregate over that file."""
+    from pyspark.sql import functions as F
+
+    from mapreducenonequijoin_spark.operators.table_format import (
+        compact,
+        create_table,
+        manifest_entries,
+        merge_commit,
+        read_snapshot,
+        stored_schema,
+    )
+
+    d = str(tmp_path / "chain")
+    base = spark.range(0, 1000).select(
+        (F.col("id") * 2).alias("k"),
+        (F.col("id") * 0.5).alias("x"),
+        F.concat(F.lit("s"), F.col("id").cast("string")).alias("s"),
+        F.array(F.col("id")).alias("tags"),
+    )
+    create_table(spark, base, d, "k", n_files=8)
+    cols = "k long, x double, s string, tags array<long>, op string"
+    d1 = spark.createDataFrame(
+        [(k, -1.0, "u", [k], "U") for k in range(0, 100, 4)]
+        + [(k, None, None, None, "D") for k in range(2, 100, 4)]
+        + [(5_001, 7.0, "new", [1], "U")],
+        cols,
+    )
+    assert merge_commit(spark, d, d1, "k", n_files=2) == 1
+    v1 = manifest_entries(d, 1)
+    # keys are even, so max + 1 of some file is in no envelope
+    gap = next(
+        e["max"] + 1 for e in v1
+        if not any(o["min"] <= e["max"] + 1 <= o["max"] for o in v1)
+    )
+    d2 = spark.createDataFrame([(gap, 9.0, "gap", [2], "U")], cols)
+    assert merge_commit(spark, d, d2, "k", n_files=1) == 2
+    v2 = manifest_entries(d, 2)
+    assert {e["path"] for e in v1} <= {e["path"] for e in v2}
+    assert compact(spark, d, "k", small_rows=100, target_rows=200)[0] == 3
+
+    for v in range(4):
+        entries = manifest_entries(d, v)
+        paths = [e["path"] for e in entries]
+        assert stored_schema(d, v) == spark.read.parquet(*paths).schema, v
+        for e in entries:
+            assert _file_stats(spark, e["path"], "k") == {
+                "min": e["min"], "max": e["max"], "rows": e["rows"]
+            }, (v, e)
+    want = {2 * i for i in range(1000)} - set(range(2, 100, 4)) | {5_001, gap}
+    assert {r.k for r in read_snapshot(spark, d).collect()} == want
+
+
+def test_versioned_table_reads_without_schema_files(spark, tmp_path):
+    """A table whose schema files are missing (written before they
+    existed) reads back identically through schema inference: latest,
+    time travel, pruned and fully pruned scans; its next commit stores
+    a schema again."""
+    import glob
+    import os
+
+    from pyspark.sql import functions as F
+
+    from mapreducenonequijoin_spark.operators.table_format import (
+        create_table,
+        merge_commit,
+        read_snapshot,
+        stored_schema,
+    )
+
+    d = str(tmp_path / "legacy")
+    base = spark.range(0, 400).select(
+        F.col("id").alias("k"), F.concat(F.lit("v"), F.col("id")).alias("v")
+    )
+    create_table(spark, base, d, "k", n_files=4)
+    delta = spark.createDataFrame([(3, "w", "U"), (7, None, "D")], "k long, v string, op string")
+    merge_commit(spark, d, delta, "k", n_files=1)
+
+    def reads():
+        frames = [
+            read_snapshot(spark, d),
+            read_snapshot(spark, d, version=0),
+            read_snapshot(spark, d, key_range=(0, 50)),
+            read_snapshot(spark, d, key_range=(10_000, 20_000)),
+        ]
+        return [(f.schema, sorted(f.collect())) for f in frames]
+
+    with_schema = reads()
+    removed = glob.glob(f"{d}/_manifests/schema-v*.json")
+    assert len(removed) == 2
+    for p in removed:
+        os.remove(p)
+    assert stored_schema(d, 1) is None
+    assert reads() == with_schema
+    assert with_schema[3][1] == []
+    merge_commit(spark, d, delta.filter("op = 'U'"), "k", n_files=1)
+    assert stored_schema(d, 2) == with_schema[0][0]
+
+
+def test_empty_snapshot_reads_with_stored_schema(spark, tmp_path):
+    """A zero-file version reads as an empty frame of its stored
+    schema, and merging into it works (the streaming-sink bootstrap)."""
+    from mapreducenonequijoin_spark.operators.table_format import (
+        create_table,
+        manifest_entries,
+        merge_commit,
+        read_snapshot,
+    )
+
+    d = str(tmp_path / "empty")
+    seed = spark.createDataFrame([(-1, -1.0)], "k long, x double").filter("k > 0")
+    create_table(spark, seed, d, "k", n_files=1)
+    assert manifest_entries(d, 0) == []
+    v0 = read_snapshot(spark, d)
+    assert v0.collect() == [] and v0.dtypes == [("k", "bigint"), ("x", "double")]
+    delta = spark.createDataFrame([(5, 1.5, "U")], "k long, x double, op string")
+    assert merge_commit(spark, d, delta, "k", n_files=1) == 1
+    assert [tuple(r) for r in read_snapshot(spark, d).collect()] == [(5, 1.5)]
+    assert read_snapshot(spark, d, version=0).collect() == []
+
+
+def test_load_table_reinfers_after_overwrite(spark, tmp_path):
+    """load_table's schema memo is keyed on the files: overwriting the
+    same path with a different schema is read with the new schema."""
+    from mapreducenonequijoin_spark.sources.io import load_table, sink_parquet
+
+    path = str(tmp_path / "t.parquet")
+    sink_parquet(spark.createDataFrame([(1,)], "a long"), path)
+    assert load_table(spark, str(tmp_path), "t").dtypes == [("a", "bigint")]
+    assert load_table(spark, str(tmp_path), "t").dtypes == [("a", "bigint")]
+    sink_parquet(spark.createDataFrame([("x", 2)], "a string, b int"), path)
+    got = load_table(spark, str(tmp_path), "t")
+    assert got.dtypes == [("a", "string"), ("b", "int")]
+    assert [tuple(r) for r in got.collect()] == [("x", 2)]
+
+
 def test_snapshot_scan_prunes_files(spark):
     """A 10k-wide key-range scan over the sf0.01 versioned table must
     open strictly fewer files than the manifest lists (the min/max
@@ -977,17 +1127,21 @@ def test_table_history_balances(spark, sf_dir):
 def test_vacuum_retains_exactly_live_files(spark, sf_dir):
     """After vacuum(keep_latest=1): the data files on disk are
     EXACTLY the v1 manifest's paths (no live file deleted, no dead
-    file kept), v1 reads identical rows to pre-vacuum, and v0 raises."""
+    file kept), v1 reads identical rows to pre-vacuum, and v0 raises.
+    The expired v0's schema file goes with its manifest; a tagged v0
+    keeps both."""
     import os
     import shutil
 
     import pytest
 
+    from mapreducenonequijoin_spark.operators import table_format as tf
     from mapreducenonequijoin_spark.operators.table_format import (
         clone_table,
         current_version,
         manifest_entries,
         read_snapshot,
+        set_tag,
         vacuum,
     )
     from mapreducenonequijoin_spark.plans.warehouse import _vt_build
@@ -999,6 +1153,12 @@ def test_vacuum_retains_exactly_live_files(spark, sf_dir):
     for v in range(current_version(dst) + 1):
         for e in manifest_entries(dst, v):
             assert e["path"].startswith(dst), e["path"]
+        # a table cached before schema files existed gets them here
+        if tf.stored_schema(dst, v) is None:
+            tf._write_schema(dst, v, read_snapshot(spark, dst, version=v).schema)
+    tagged = dst + "_tagged"
+    clone_table(dst, tagged)
+    set_tag(tagged, "keep-v0", 0)
     before = sorted(
         (r.k, r.cents) for r in read_snapshot(spark, dst).collect()
     )
@@ -1021,7 +1181,14 @@ def test_vacuum_retains_exactly_live_files(spark, sf_dir):
     assert after == before
     with pytest.raises(Exception):
         read_snapshot(spark, dst, version=0)
+    assert not os.path.exists(tf._schema_path(dst, 0))
+    assert tf.stored_schema(dst, 1) is not None
     shutil.rmtree(dst, ignore_errors=True)
+
+    assert vacuum(tagged, keep_latest=1)[1] == 0
+    assert os.path.exists(tf._manifest_path(tagged, 0))
+    assert tf.stored_schema(tagged, 0) is not None
+    shutil.rmtree(tagged, ignore_errors=True)
 
 
 def test_clustering_coefficient_vs_triangle_count(spark, sf_dir):
