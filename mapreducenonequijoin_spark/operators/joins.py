@@ -17,10 +17,13 @@ space — Catalyst still pushes filters/prunes columns through the
 rewritten plan, and AQE re-plans at runtime.
 
 Scale notes (100 TB design):
-- no ``collect()`` anywhere; the only driver-side actions are the
-  O(1)-result statistics steps (``count``/``approxQuantile``) that
-  [OR11] also performs up front, and those can be replaced by catalog
-  stats on a real deployment;
+- no ``collect()`` anywhere; the statistics [OR11] gathers up front
+  come from metadata where they can: a bare parquet scan's row count is
+  the sum of its footers' ``num_rows`` (no Spark job). Any other frame
+  takes one ``count``, and an equi-depth histogram takes one
+  ``percentile_approx`` aggregate, each an O(1)-result driver action
+  memoized per session (catalog stats replace both on a real
+  deployment);
 - replication factors are bounded (×2 for band joins, ×√r for theta,
   ×#buckets only where output is provably of that order);
 - skew-resistant by construction: bucket keys are either uniform by
@@ -30,12 +33,15 @@ Scale notes (100 TB design):
 from __future__ import annotations
 
 import math
+from collections import OrderedDict
 from functools import reduce
 from operator import and_
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..sources.io import scan_row_count
 
 __all__ = [
     "band_join",
@@ -55,38 +61,56 @@ __all__ = [
 # and the bucketing overhead is not worth it (BASELINE.md bench note).
 _NAIVE_PAIR_THRESHOLD = 4_000_000
 
-# [OR11] statistics-step cardinalities, memoized by Catalyst semantic
-# hash: repeated plan builds over the same frame (bench loops, several
-# theta queries on one table in a session) pay the count scan once.
-# On a real deployment this is where catalog/CBO statistics plug in.
-_COUNT_CACHE: dict[tuple[int, int], int] = {}
+# [OR11] statistics step. A bare parquet scan's row count comes from
+# its file footers (``scan_row_count``, no Spark job, no memo); any other
+# frame is counted once and memoized, as are the histogram bounds, keyed
+# by session and Catalyst semantic hash, so repeated plan builds over the
+# same frame in a session pay one scan. A semantic hash does not see a
+# rewrite of the files under a path, which is why bare scans skip the
+# memo. Both memos keep the _STAT_MEMO_MAX most recently used entries.
+_STAT_MEMO_MAX = 64
+_COUNT_CACHE: OrderedDict[tuple[int, int], int] = OrderedDict()
+_QUANTILE_CACHE: OrderedDict[tuple[int, int, int], list] = OrderedDict()
+
+
+def _memoized(memo: OrderedDict, key: tuple, compute):
+    if key in memo:
+        memo.move_to_end(key)
+        return memo[key]
+    value = memo[key] = compute()
+    if len(memo) > _STAT_MEMO_MAX:
+        memo.popitem(last=False)
+    return value
 
 
 def _stat_count(df: DataFrame) -> int:
-    key = (id(df.sparkSession), df.semanticHash())
-    n = _COUNT_CACHE.get(key)
-    if n is None:
-        n = df.count()
-        _COUNT_CACHE[key] = n
-    return n
+    n = scan_row_count(df)
+    if n is not None:
+        return n
+    return _memoized(
+        _COUNT_CACHE, (id(df.sparkSession), df.semanticHash()), df.count
+    )
 
 
-# approxQuantile boundaries memoized the same way: every inequality-join
-# plan build was re-scanning the probe side for the SAME histogram
-# (bench loops, repeated builds in one session). Keyed by the projected
-# frame's semantic hash + the bucket count; catalog/CBO histogram
-# statistics are the production replacement.
-_QUANTILE_CACHE: dict[tuple[int, int, int], list[float]] = {}
+def _stat_quantiles(proj: DataFrame, col: str, b: int) -> list:
+    """Sorted distinct equi-depth bounds of ``col`` (the [OR11]
+    histogram): one ``percentile_approx`` aggregate at relative error
+    1/1000 over the non-NULL, non-NaN values, so the bounds have a total
+    order. Empty when no such value exists."""
 
-
-def _stat_quantiles(proj: DataFrame, col: str, b: int) -> list[float]:
-    key = (id(proj.sparkSession), proj.semanticHash(), b)
-    bounds = _QUANTILE_CACHE.get(key)
-    if bounds is None:
+    def compute() -> list:
         probs = [i / b for i in range(1, b)]
-        bounds = sorted(set(proj.approxQuantile(col, probs, 0.001)))
-        _QUANTILE_CACHE[key] = bounds
-    return bounds
+        c = F.col(col)
+        bounds = (
+            proj.filter(c.isNotNull() & ~F.isnan(c))
+            .agg(F.percentile_approx(c, probs, 1000))
+            .first()[0]
+        )
+        return sorted(set(bounds or []))
+
+    return _memoized(
+        _QUANTILE_CACHE, (id(proj.sparkSession), proj.semanticHash(), b), compute
+    )
 
 
 def _pseudo_block(df: DataFrame, n_blocks: int, seed: int) -> Column:
@@ -127,8 +151,17 @@ def _one_bucket_regions(
     replicated to the ``cs`` regions of that row; each right row draws
     a block-column and is replicated to its ``cr`` regions. Every (l, r)
     pair meets in exactly one region, and the load is balanced under
-    any skew because the assignment ignores the join values. Returns
-    both sides with their region id in ``region_cols``.
+    any skew because the assignment ignores the join values.
+
+    Returns both sides with their region id in ``region_cols``, each
+    hash-repartitioned on it into r partitions, so each reduce task
+    joins about one region. A region's work is quadratic in its input
+    while its shuffle bytes are linear, so AQE's byte-based coalescing
+    would fold a small grid (perfbench's 3×3 regions of 2000×2000
+    comparisons, 0.6 MB in all) into one task that runs the regions one
+    after another; AQE never coalesces a shuffle with an explicit
+    partition count. The join (sort-merge or cogroup) accepts this
+    partitioning as it is, so each side still has one exchange.
     """
     r = num_regions or int(
         left.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
@@ -148,7 +181,7 @@ def _one_bucket_regions(
         .withColumn(region_cols[1], F.col("__tj_r") * cs + F.col("__tj_cb"))
         .drop("__tj_cb", "__tj_r")
     )
-    return lhs, rhs
+    return lhs.repartition(r, region_cols[0]), rhs.repartition(r, region_cols[1])
 
 
 _SALT_COLS = ("__salt_k", "__salt_s")
@@ -421,10 +454,12 @@ def theta_join(
     in exactly one region, so there is no dedup, and the load is
     balanced under any skew.
 
-    Spark mapping: region id is a derived column; the region-equi-join
-    is a shuffled hash/sort-merge join; θ is the residual filter. The
-    two ``count()`` statistics are the same up-front cardinality
-    knowledge [OR11] assumes; on a real cluster use catalog stats.
+    Spark mapping: region id is a derived column; each side is
+    repartitioned on it into r reduce tasks, about one region each, so
+    the quadratic regions run in parallel; the region equi-join is a
+    sort-merge join on that partitioning; θ is the residual filter. |L| and |R| are the up-front cardinality knowledge
+    [OR11] assumes: footer row counts for a bare parquet scan, one
+    memoized ``count()`` otherwise (``_stat_count``).
 
     ``strategy``: 'auto' falls back to Spark's native non-equi plan
     (BNLJ / broadcast) below a small-input threshold, '1bucket' forces
@@ -622,9 +657,10 @@ def inequality_join(
 
     [OR11 §5]'s M-Bucket-I: equi-depth histograms on the join attribute
     prune join-matrix cells that cannot match. Spark mapping: quantile
-    range-bucket both sides (``approxQuantile`` = the equi-depth
-    histogram / statistics step), replicate each left row to every
-    right-bucket it can match, equi-join on bucket, residual filter.
+    range-bucket both sides (one ``percentile_approx`` aggregate = the
+    equi-depth histogram / statistics step), replicate each left row to
+    every right-bucket it can match, equi-join on bucket, residual
+    filter.
 
     Output of an inequality join is Θ(n²) in the worst case, so the
     ×B replication is dominated by the output itself; the rewrite's
@@ -646,10 +682,9 @@ def inequality_join(
     b = num_buckets or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
 
     # Statistics step (the [OR11] histogram): quantile boundaries of the
-    # right side's join attribute. approxQuantile is a driver action
-    # returning O(b) floats — not a data materialization — and the
-    # result is memoized per (frame, b) so repeated plan builds don't
-    # rescan.
+    # right side's join attribute. One aggregate returning O(b) values
+    # — not a data materialization — memoized per (frame, b) so
+    # repeated plan builds don't rescan.
     l_num, l_exact = _numeric(left, left_on)
     r_num, r_exact = _numeric(right, right_on)
     bounds = _stat_quantiles(right.select(r_num.alias("__v")), "__v", b)

@@ -12,9 +12,10 @@ the Delta/Iceberg commit protocol (SURVEY.md §2, ACID-gap closure r7):
   version, byte-identical files) + rewritten entries;
 - **time travel** is reading an older manifest — old versions stay
   valid because commits never mutate or delete referenced files;
-- a **schema file** per version (``_manifests/schema-v<N>.json``, the
-  Spark schema JSON with every field nullable, as Spark infers it on
-  read) is written before the manifest commits. Reads pass it to
+- a **schema file** per version (``_manifests/schema-v<N>.json``, and
+  ``schema-<branch>-v<k>.json`` per branch commit; the Spark schema
+  JSON with every field nullable, as Spark infers it on read) is
+  written before the manifest commits. Reads pass it to
   ``spark.read.schema`` so no schema-inference job runs; a version
   without one (written before schema files existed) falls back to
   inference.
@@ -94,25 +95,33 @@ def _nullable(dt: DataType) -> DataType:
     return dt
 
 
-def _write_schema(table_dir: str, version: int, schema: StructType) -> None:
-    """Store a version's read schema; written before ``_commit``, so a
-    published manifest always finds its schema (temp file + rename)."""
-    os.makedirs(f"{table_dir}/{_MANIFESTS}", exist_ok=True)
-    path = _schema_path(table_dir, version)
+def _write_atomic(path: str, text: str) -> None:
+    """Temp file + rename: a reader sees the whole file or none of it."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
     tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
     with open(tmp, "w") as fh:
-        fh.write(_nullable(schema).json())
+        fh.write(text)
     os.rename(tmp, path)
+
+
+def _write_schema(table_dir: str, version: int, schema: StructType) -> None:
+    """Store a version's read schema; written before ``_commit``, so a
+    published manifest always finds its schema."""
+    _write_atomic(_schema_path(table_dir, version), _nullable(schema).json())
+
+
+def _read_schema(path: str) -> StructType | None:
+    try:
+        with open(path) as fh:
+            return StructType.fromJson(json.load(fh))
+    except FileNotFoundError:
+        return None
 
 
 def stored_schema(table_dir: str, version: int) -> StructType | None:
     """The schema stored with ``version``, or None for a version
     written before schema files existed."""
-    try:
-        with open(_schema_path(table_dir, version)) as fh:
-            return StructType.fromJson(json.load(fh))
-    except FileNotFoundError:
-        return None
+    return _read_schema(_schema_path(table_dir, version))
 
 
 def _read_files(
@@ -189,11 +198,7 @@ def _write_files_with_stats(
 def _commit(table_dir: str, version: int, entries: list[dict]) -> None:
     """Manifest write is the COMMIT POINT: temp file + atomic rename,
     the single-filesystem analogue of the Delta log append."""
-    os.makedirs(f"{table_dir}/{_MANIFESTS}", exist_ok=True)
-    tmp = _manifest_path(table_dir, version) + f".tmp-{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as fh:
-        json.dump(entries, fh)
-    os.rename(tmp, _manifest_path(table_dir, version))
+    _write_atomic(_manifest_path(table_dir, version), json.dumps(entries))
 
 
 def create_table(
@@ -581,10 +586,7 @@ def table_refs(table_dir: str) -> dict:
 
 def _write_refs(table_dir: str, refs: dict) -> None:
     """Atomic temp+rename, same commit discipline as _commit."""
-    tmp = f"{table_dir}/{_REFS}.tmp-{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as fh:
-        json.dump(refs, fh)
-    os.rename(tmp, f"{table_dir}/{_REFS}")
+    _write_atomic(f"{table_dir}/{_REFS}", json.dumps(refs))
 
 
 def set_tag(table_dir: str, name: str, version: int) -> None:
@@ -600,6 +602,11 @@ def _branch_manifest_path(table_dir: str, name: str, k: int) -> str:
     return f"{table_dir}/{_MANIFESTS}/branch-{name}-v{k}.json"
 
 
+def _branch_schema_path(table_dir: str, name: str, k: int) -> str:
+    # not "v*.json", as for _schema_path
+    return f"{table_dir}/{_MANIFESTS}/schema-{name}-v{k}.json"
+
+
 def branch_commit(
     spark: SparkSession,
     table_dir: str,
@@ -611,19 +618,18 @@ def branch_commit(
 ) -> int:
     """BRANCH: a writable fork (Iceberg `create_branch` + a commit on
     it). The branch gets its own manifest chain
-    (_manifests/branch-<name>-v<k>.json) and its own data files; the
-    main chain is never touched, so main readers see snapshot
-    isolation from branch writers by construction. Returns the new
-    branch-chain version."""
+    (_manifests/branch-<name>-v<k>.json, with its read schema in
+    schema-<name>-v<k>.json) and its own data files; the main chain is
+    never touched, so main readers see snapshot isolation from branch
+    writers by construction. Returns the new branch-chain version."""
     refs = table_refs(table_dir)
     ref = refs.get(name)
     k = 0 if ref is None else ref["tip"] + 1
     entries = _write_files_with_stats(df, table_dir, key_col, n_files)
-    tmp = _branch_manifest_path(table_dir, name, k) + f".tmp-{uuid.uuid4().hex[:8]}"
-    os.makedirs(f"{table_dir}/{_MANIFESTS}", exist_ok=True)
-    with open(tmp, "w") as fh:
-        json.dump(entries, fh)
-    os.rename(tmp, _branch_manifest_path(table_dir, name, k))
+    _write_atomic(
+        _branch_schema_path(table_dir, name, k), _nullable(df.schema).json()
+    )
+    _write_atomic(_branch_manifest_path(table_dir, name, k), json.dumps(entries))
     refs[name] = {
         "kind": "branch",
         "tip": k,
@@ -637,7 +643,8 @@ def branch_commit(
 
 def read_ref(spark: SparkSession, table_dir: str, name: str) -> DataFrame:
     """Read the snapshot a named ref points at: tag → main-chain
-    version; branch → the branch chain's tip manifest."""
+    version; branch → the branch chain's tip manifest, with its stored
+    schema (inferred for a branch commit written without one)."""
     ref = table_refs(table_dir).get(name)
     if ref is None:
         raise ValueError(f"no ref {name!r} at {table_dir}")
@@ -645,7 +652,8 @@ def read_ref(spark: SparkSession, table_dir: str, name: str) -> DataFrame:
         return read_snapshot(spark, table_dir, version=ref["version"])
     with open(_branch_manifest_path(table_dir, name, ref["tip"])) as fh:
         entries = json.load(fh)
-    return spark.read.parquet(*[e["path"] for e in entries])
+    schema = _read_schema(_branch_schema_path(table_dir, name, ref["tip"]))
+    return _read_files(spark, schema, [e["path"] for e in entries])
 
 
 def ref_live_paths(table_dir: str) -> set:

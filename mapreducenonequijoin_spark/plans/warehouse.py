@@ -451,11 +451,18 @@ def cluster_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- snapshot-versioned table (copy-on-write MERGE + time travel) -----------
 
+# Layout version of the cached versioned table, part of its directory
+# name: _vt_build returns an existing table as it is, so a change to what
+# a build writes takes a new number, and each fixture's table is rebuilt
+# once. 2: every version has its schema file.
+_VT_LAYOUT = 2
+
+
 def _vt_dir(sf_dir: str) -> str:
     import hashlib
 
     key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    return f"/tmp/mrnej_cache/{key}/versioned_orders"
+    return f"/tmp/mrnej_cache/{key}/versioned_orders_l{_VT_LAYOUT}"
 
 
 def _vt_build(spark: SparkSession, sf_dir: str) -> str:
@@ -3599,10 +3606,9 @@ def warehouse_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _mor_dv2_dir(sf_dir: str) -> str:
-    import hashlib
-
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    return f"/tmp/mrnej_cache/{key}/mor_dv2"
+    # the position deletes address the versioned table's files by path,
+    # so they are cached under that table's layout-numbered name
+    return f"{_vt_dir(sf_dir)}_mor_dv2"
 
 
 def _mor_stamped_v1(spark: SparkSession, sf_dir: str) -> DataFrame:

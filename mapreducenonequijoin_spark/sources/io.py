@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import os
 from collections import OrderedDict
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -55,6 +56,47 @@ def _files_key(path: str) -> tuple | None:
             st = os.stat(p)
             files.append((os.path.relpath(p, path), st.st_size, st.st_mtime_ns))
     return path, tuple(sorted(files))
+
+
+def _local_path(uri: str) -> str | None:
+    """Path of a local file named by a ``file:`` URI (percent-decoded) or
+    a bare path; None for another scheme or a path that is not a local
+    file (the same local-only rule as ``_files_key``)."""
+    parsed = urlparse(uri)
+    if parsed.scheme not in ("", "file"):
+        return None
+    path = unquote(parsed.path)
+    return path if os.path.isfile(path) else None
+
+
+def scan_row_count(df: DataFrame) -> int | None:
+    """Row count of a bare parquet scan, read from the file footers with
+    no Spark job; None for any other plan.
+
+    A count is returned only when ``df``'s optimized logical plan is zero
+    or more ``Project`` nodes (which keep every row) over a parquet
+    ``HadoopFsRelation`` whose files are all on the local file system:
+    the count is then the sum of the footers' ``num_rows``. A filter,
+    limit, sample, union, join or aggregate changes the row count, and a
+    remote file is not read here, so those return None.
+    """
+    import pyarrow.parquet as pq
+
+    node = df._jdf.queryExecution().optimizedPlan()
+    while node.nodeName() == "Project":
+        node = node.child()
+    if node.getClass().getSimpleName() != "LogicalRelation":
+        return None
+    rel = node.relation()
+    if (
+        rel.getClass().getSimpleName() != "HadoopFsRelation"
+        or rel.fileFormat().getClass().getSimpleName() != "ParquetFileFormat"
+    ):
+        return None
+    paths = [_local_path(f) for f in df.inputFiles()]
+    if any(p is None for p in paths):
+        return None
+    return sum(pq.read_metadata(p).num_rows for p in paths)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -51,7 +51,7 @@ def test_theta_join_empty(spark):
 
 
 def test_inequality_join_constant_column(spark):
-    # all right values identical → approxQuantile returns one bound
+    # all right values identical → the histogram has one bound
     left = spark.createDataFrame([(i, float(i)) for i in range(5)], "l_id long, l_x double")
     right = spark.createDataFrame([(i, 2.0) for i in range(3)], "r_id long, r_x double")
     out = inequality_join(left, right, "l_x", "r_x", "<", num_buckets=4)

@@ -574,3 +574,181 @@ def test_spatial_nearest_is_true_minimum(spark, sf_dir):
     for a, (d, b) in got.items():
         assert a != b
         assert (d, b) == want[a]
+
+
+# ------------------------------------------------ [OR11] statistics and regions
+
+
+def test_scan_row_count_reads_footers_of_bare_scans(spark, sf_dir, tmp_path):
+    """Footer row counts equal count() on a one-file scan, a multi-file
+    directory (its path needs URI decoding), a table snapshot and a
+    load_table frame under a cast Project; a plan that can change the
+    row count gets None."""
+    import glob
+
+    from mapreducenonequijoin_spark.operators.table_format import (
+        create_table,
+        read_snapshot,
+    )
+    from mapreducenonequijoin_spark.sources.io import (
+        load_table,
+        scan_row_count,
+        sink_parquet,
+    )
+
+    sink_parquet(spark.range(37).coalesce(1), str(tmp_path / "one"))
+    (one,) = glob.glob(str(tmp_path / "one" / "*.parquet"))
+    multi = str(tmp_path / "multi dir")
+    sink_parquet(spark.range(0, 500, 1, 5), multi)
+    table = str(tmp_path / "tbl")
+    create_table(spark, spark.range(300).withColumnRenamed("id", "k"), table, "k", n_files=3)
+    cast = load_table(spark, sf_dir, "orders").select(
+        F.col("o_totalprice").cast("long").alias("p")
+    )
+    frames = {
+        "one file": spark.read.parquet(one),
+        "directory": spark.read.parquet(multi),
+        "snapshot": read_snapshot(spark, table),
+        "load_table cast": cast,
+    }
+    assert len(frames["directory"].inputFiles()) == 5
+    assert len(frames["snapshot"].inputFiles()) > 1
+    assert cast._jdf.queryExecution().optimizedPlan().nodeName() == "Project"
+    for name, df in frames.items():
+        assert scan_row_count(df) == df.count(), name
+
+    base = frames["directory"]
+    for name, df in {
+        "filter": base.filter("id > 3"),
+        "limit": base.limit(3),
+        "union": base.union(base),
+        "join": base.join(frames["one file"], "id"),
+    }.items():
+        assert scan_row_count(df) is None, name
+
+
+def test_stat_count_sees_overwritten_files(spark, tmp_path):
+    """A count must follow the files under a path, not a memo keyed on
+    the plan: the same path rewritten with 20 rows counts 20."""
+    from mapreducenonequijoin_spark.operators.joins import _stat_count
+    from mapreducenonequijoin_spark.sources.io import sink_parquet
+
+    path = str(tmp_path / "t.parquet")
+    sink_parquet(spark.range(10), path)
+    assert _stat_count(spark.read.parquet(path)) == 10
+    sink_parquet(spark.range(20), path)
+    assert _stat_count(spark.read.parquet(path)) == 20
+
+
+def test_stat_memos_keep_the_most_recently_used():
+    """The statistics memos hold _STAT_MEMO_MAX entries: a hit is not
+    recomputed and becomes most recent; the least recent entry goes."""
+    from collections import OrderedDict
+
+    from mapreducenonequijoin_spark.operators import joins
+
+    memo: OrderedDict = OrderedDict()
+    calls = []
+
+    def value(i):
+        calls.append(i)
+        return i * i
+
+    cap = joins._STAT_MEMO_MAX
+    for i in range(cap):
+        joins._memoized(memo, (i,), lambda i=i: value(i))
+    assert joins._memoized(memo, (0,), lambda: value(-1)) == 0  # a hit
+    joins._memoized(memo, (cap,), lambda: value(cap))
+    assert len(memo) == cap
+    assert (0,) in memo and (1,) not in memo  # (1,) was least recent
+    assert calls == list(range(cap + 1))
+
+
+def _result_stage_tasks(spark, df, group: str) -> int:
+    """Collect ``df`` under a job group and return the task count of
+    the stage that produced the rows (the last stage of the last job)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    last_job = max(st.getJobIdsForGroup(group))
+    return st.getStageInfo(max(st.getJobInfo(last_job).stageIds)).numTasks
+
+
+def test_one_bucket_regions_run_in_parallel_tasks(spark):
+    """Each routed side reaches the region join through exactly one
+    REPARTITION_BY_NUM exchange on its region column (AQE does not
+    coalesce it, and the join needs no second exchange), so the join
+    stage runs more than one reduce task, for the sort-merge theta join
+    and the cogroup IEJoin alike."""
+    import re
+
+    from mapreducenonequijoin_spark.operators.joins import inequality_join_2pred
+
+    left, right = _frames(spark, seed=41, n=300)
+    width = spark.conf.get("spark.sql.shuffle.partitions")
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        cases = {
+            "theta": (
+                theta_join(left, right, F.col("l_x") < F.col("r_x"), strategy="1bucket"),
+                ["__tj_region", "__tj_region2"],
+            ),
+            "iejoin": (
+                inequality_join_2pred(left, right, ("l_x", "<", "r_x"), ("l_k", ">", "r_k")),
+                ["__region", "__region"],
+            ),
+        }
+        for name, (df, region_cols) in cases.items():
+            tasks = _result_stage_tasks(spark, df, f"regions-{name}")
+            plan = df._jdf.queryExecution().executedPlan().executedPlan().toString()
+            exchanges = re.findall(r"Exchange (\w+)\((\w+)#\d+L?, (\d+)\), (\w+)", plan)
+            assert plan.count("Exchange") == 2, (name, plan)
+            assert sorted(exchanges) == [
+                ("hashpartitioning", c, width, "REPARTITION_BY_NUM") for c in region_cols
+            ], (name, plan)
+            assert tasks > 1, (name, tasks)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+
+def test_inequality_joins_with_nan_and_null_keys_match_naive(spark):
+    """NaN and NULL join keys on both sides: the histogram drops them,
+    so its bounds are totally ordered, and M-Bucket-I and M-Bucket-O
+    return exactly the naive plan's pairs (Spark orders NaN above every
+    number, and a NULL key matches nothing)."""
+    import math
+
+    from mapreducenonequijoin_spark.operators.joins import (
+        _stat_quantiles,
+        inequality_join_mbucket_o,
+    )
+
+    nan = float("nan")
+    vals = [nan, None, -2.5, 0.0, 1.0, 1.0, 3.5, 7.25, nan, None]
+    left = spark.createDataFrame(list(enumerate(vals)), "l_id long, l_x double")
+    right = spark.createDataFrame(
+        list(enumerate(reversed(vals))) + [(50 + i, float(i)) for i in range(8)],
+        "r_id long, r_x double",
+    )
+    bounds = _stat_quantiles(right.select(F.col("r_x").alias("__v")), "__v", 4)
+    assert bounds and bounds == sorted(bounds)
+    assert not any(math.isnan(b) for b in bounds)
+    ops = {
+        "<": lambda a, b: a < b,
+        "<=": lambda a, b: a <= b,
+        ">": lambda a, b: a > b,
+        ">=": lambda a, b: a >= b,
+    }
+    for op, cmp in ops.items():
+        want = _pairs(naive_theta_join(left, right, cmp(F.col("l_x"), F.col("r_x"))))
+        got_i = inequality_join(left, right, "l_x", "r_x", op, num_buckets=4)
+        got_o = inequality_join_mbucket_o(
+            left, right, "l_x", "r_x", op, num_buckets=4, num_regions=4
+        )
+        assert _pairs(got_i) == want, op
+        assert _pairs(got_o) == want, op

@@ -354,6 +354,64 @@ def test_load_table_reinfers_after_overwrite(spark, tmp_path):
     assert [tuple(r) for r in got.collect()] == [("x", 2)]
 
 
+def test_branch_commit_stores_its_schema(spark, tmp_path):
+    """A branch commit stores its read schema beside its manifest, out
+    of the main chain's version scan; read_ref reads with it and gets
+    what inference gets, and a branch commit without a schema file
+    falls back to inference."""
+    import json
+    import os
+
+    from pyspark.sql import functions as F
+
+    from mapreducenonequijoin_spark.operators.table_format import (
+        _branch_manifest_path,
+        _branch_schema_path,
+        branch_commit,
+        create_table,
+        current_version,
+        read_ref,
+    )
+
+    d = str(tmp_path / "branched")
+    base = spark.range(0, 300).select(
+        F.col("id").alias("k"), (F.col("id") * 2).cast("int").alias("v")
+    )
+    create_table(spark, base, d, "k", n_files=3)
+    fork = base.filter("k % 3 = 0").withColumn("tag", F.lit("exp"))
+    assert branch_commit(spark, d, "exp", fork, "k", from_version=0, n_files=2) == 0
+    assert current_version(d) == 0
+    assert os.path.exists(_branch_schema_path(d, "exp", 0))
+    with open(_branch_manifest_path(d, "exp", 0)) as fh:
+        branch_paths = [e["path"] for e in json.load(fh)]
+    inferred = spark.read.parquet(*branch_paths)
+    got = read_ref(spark, d, "exp")
+    assert got.schema == inferred.schema
+    assert sorted(got.collect()) == sorted(inferred.collect())
+    os.remove(_branch_schema_path(d, "exp", 0))
+    legacy = read_ref(spark, d, "exp")
+    assert legacy.schema == inferred.schema
+    assert sorted(legacy.collect()) == sorted(inferred.collect())
+
+
+def test_fresh_versioned_table_has_every_schema_file(spark, tmp_path, monkeypatch):
+    """Every version _vt_build writes has its schema file, equal to the
+    schema Spark infers for that version's files."""
+    from mapreducenonequijoin_spark.operators.table_format import (
+        current_version,
+        manifest_entries,
+        stored_schema,
+    )
+    from mapreducenonequijoin_spark.plans import warehouse
+
+    monkeypatch.setattr(warehouse, "_vt_dir", lambda sf: str(tmp_path / "vt"))
+    d = warehouse._vt_build(spark, SF_DIR)
+    assert current_version(d) == 1
+    for v in (0, 1):
+        paths = [e["path"] for e in manifest_entries(d, v)]
+        assert stored_schema(d, v) == spark.read.parquet(*paths).schema
+
+
 def test_snapshot_scan_prunes_files(spark):
     """A 10k-wide key-range scan over the sf0.01 versioned table must
     open strictly fewer files than the manifest lists (the min/max
