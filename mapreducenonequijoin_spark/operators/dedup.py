@@ -408,6 +408,17 @@ def _drop_checkpoint(df: DataFrame) -> None:
     df._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
+def _checkpoint_round(nxt: DataFrame, prev: DataFrame | None) -> DataFrame:
+    """Eagerly ``localCheckpoint`` an iterative loop's next round, then
+    release ``prev``, the checkpoint it supersedes (None in the first
+    round). The next round is materialized before ``prev`` goes, so it
+    may read ``prev``; nothing else may read ``prev`` after."""
+    nxt = nxt.localCheckpoint(eager=True)
+    if prev is not None:
+        _drop_checkpoint(prev)
+    return nxt
+
+
 def _cc_local(
     spark, vertices: DataFrame, edges, vt, vertex_col: str
 ) -> DataFrame:
@@ -528,11 +539,7 @@ def _cc_loop(
             ).alias("__label"),
         )
         # 3. DOWN: two lazy compression jumps, same plan
-        cur = jump(jump(cur))
-        cur = cur.localCheckpoint(eager=True)
-        if ckpt is not None:
-            _drop_checkpoint(ckpt)
-        ckpt = cur
+        cur = ckpt = _checkpoint_round(jump(jump(cur)), ckpt)
         changed = cur.filter(F.col("__prev") != F.col("__label")).count()
         labels = cur.drop("__prev")
         if changed == 0:
@@ -545,8 +552,7 @@ def _cc_loop(
             labels = spark.read.parquet(path)
     if tmpdir is not None:
         # detach the result from the barrier files, then drop them
-        labels = labels.localCheckpoint(eager=True)
-        _drop_checkpoint(ckpt)
+        labels = _checkpoint_round(labels, ckpt)
         shutil.rmtree(tmpdir, ignore_errors=True)
     # the labelled vertices are exactly the edge endpoints
     singles = vertices.select(F.col(vertex_col).alias("__v")).join(

@@ -463,18 +463,11 @@ def theta_join(
 
     ``strategy``: 'auto' falls back to Spark's native non-equi plan
     (BNLJ / broadcast) below a small-input threshold, '1bucket' forces
-    the rewrite, 'naive' forces the native plan, 'broadcast' forces a
-    broadcast nested-loop with the RIGHT side replicated to every
-    executor (correct only when the right side is provably small —
-    the MR map-side-join idiom for theta conditions).
+    the rewrite. ``naive_theta_join`` is the native plan on its own.
     """
     _check_disjoint(left, right)
-    if strategy not in ("auto", "1bucket", "naive", "broadcast"):
+    if strategy not in ("auto", "1bucket"):
         raise ValueError(f"unknown strategy {strategy!r}")
-    if strategy == "naive":
-        return left.join(right, condition, "inner")
-    if strategy == "broadcast":
-        return left.join(F.broadcast(right), condition, "inner")
 
     n_left, n_right = _stat_count(left), _stat_count(right)
     if n_left == 0 or n_right == 0:

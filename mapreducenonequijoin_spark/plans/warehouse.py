@@ -8,9 +8,10 @@ whose shuffle structure is argued for 100 TB in its docstring.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.dedup import _checkpoint_round, _drop_checkpoint
 from ..sources.io import load_table
 from ._scalar import attach_scalar_frame
 from .registry import register
@@ -235,25 +236,80 @@ FROM r3 ORDER BY round(rank, 8) DESC, node LIMIT 25
 """
 
 
+def _node_id(c: str) -> Column:
+    """Display id of a ±(key+1) trade-graph node id column: ``c<k>``
+    for customer key k (ids ≥ 1), ``s<k>`` for supplier key k (ids ≤
+    -1). Both fixture key spaces start at 0, so a bare negation would
+    collide customer 0 with supplier 0 and merge two graph nodes."""
+    return (
+        F.when(F.col(c) > 0, F.concat(F.lit("c"), (F.col(c) - 1).cast("string")))
+        .otherwise(F.concat(F.lit("s"), (-F.col(c) - 1).cast("string")))
+    )
+
+
+def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The sparsified customer→supplier trade graph, one row per line:
+    every 19th order's lines whose l_suppkey ≡ o_custkey (mod 10), as
+    ``src`` = custkey+1, ``dst`` = -(suppkey+1) and the order date
+    ``d``. The 100 supplier hubs would otherwise glue the whole fixture
+    into one component. Not deduplicated: callers take
+    ``select("src", "dst").distinct()``, or split on ``d`` first, and
+    the optimizer prunes ``o_orderdate`` from the scan when ``d`` is
+    dropped."""
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_orderdate"
+    )
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    return (
+        orders.filter(F.col("o_orderkey") % 19 == 0)
+        .join(li, orders.o_orderkey == li.l_orderkey)
+        .filter(F.col("l_suppkey") % 10 == F.col("o_custkey") % 10)
+        .select(
+            (F.col("o_custkey") + 1).cast("long").alias("src"),
+            (-(F.col("l_suppkey") + 1)).cast("long").alias("dst"),
+            F.col("o_orderdate").alias("d"),
+        )
+    )
+
+
+def _co_supply_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The banded co-supply graph, one row per undirected edge: the
+    distinct supplier pairs (s1 < s2) that ship lines of the same order,
+    over every 23rd order and with s2 - s1 ≤ 15. The band keeps the
+    100-supplier fixture graph sparse (~1k edges) instead of
+    near-complete."""
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    a, b = li.alias("a"), li.alias("b")
+    return (
+        a.filter(F.col("a.l_orderkey") % 23 == 0)
+        .join(
+            b,
+            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
+            & (F.col("a.l_suppkey") < F.col("b.l_suppkey"))
+            & (F.col("b.l_suppkey") - F.col("a.l_suppkey") <= 15),
+        )
+        .select(F.col("a.l_suppkey").alias("s1"), F.col("b.l_suppkey").alias("s2"))
+        .distinct()
+    )
+
+
+def _co_supply_sym(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Both directions (u, v) of every ``_co_supply_edges`` edge."""
+    e = _co_supply_edges(spark, sf_dir)
+    return e.select(F.col("s1").alias("u"), F.col("s2").alias("v")).unionByName(
+        e.select(F.col("s2").alias("u"), F.col("s1").alias("v"))
+    )
+
+
 def _sym_trade_edges(spark: SparkSession, sf_dir: str, p: int) -> DataFrame:
-    """Undirected customer↔supplier trade edge list — the shared
-    prefix of graph_pagerank / graph_katz_centrality /
-    graph_personalized_pagerank — persisted hash-partitioned p-ways on
-    ``src`` (the vertex-cut layout every per-round join/agg keys on).
-
-    Node key is a signed int64: customers = key+1 (≥1), suppliers =
-    -(key+1) (≤-1) — BOTH fixture key spaces start at 0, so a bare
-    negation would collide customer 0 with supplier 0 and silently
-    merge two graph nodes.
-
-    r14-opt (guide §2.4): BOTH directions explode out of the join
-    projection and ONE src-keyed exchange serves the duplicate drop
-    (hashpartitioning(src) satisfies the (src, dst) clustering) and
-    every downstream consumer. The old build shuffled the edge stream
-    twice — (src, dst) for the directed dedup, then src for the
-    symmetrized list — and persisted the directed half besides; A/B
-    at sf0.1 (pagerank, 4 alternating cycles): 4.28-7.18 s →
-    3.23-4.96 s warm, rank output identical."""
+    """Undirected customer↔supplier trade edge list (every order, ±(key+1)
+    node ids as in ``_node_id``), deduplicated and persisted
+    hash-partitioned p-ways on ``src``, the key every per-round join and
+    aggregate of the power-iteration queries uses. Both directions
+    explode out of the join projection, so one src-keyed exchange
+    serves the duplicate drop (hashpartitioning(src) satisfies the
+    (src, dst) clustering) and every downstream consumer. The caller
+    unpersists it."""
     orders = (
         load_table(spark, sf_dir, "orders")
         .select("o_orderkey", "o_custkey")
@@ -285,57 +341,66 @@ def _sym_trade_edges(spark: SparkSession, sf_dir: str, p: int) -> DataFrame:
     return both.repartition(p, "src").dropDuplicates().persist()
 
 
+def _power_rounds(
+    edges: DataFrame,
+    nodes: DataFrame,
+    score: DataFrame,
+    contrib: Column,
+    update: Column,
+    p: int,
+) -> DataFrame:
+    """Three synchronous power-iteration rounds. A round joins the
+    directed ``edges`` (src, dst, ...) with the nonzero rows of
+    ``score`` (node, score) on src, sums ``contrib`` per dst into ``s``
+    (one p-way exchange on dst, which the aggregate reuses), left-joins
+    the sums onto ``nodes`` (node, ...) and takes ``update`` as the next
+    score. A zero score adds nothing to any sum, so its rows are not
+    shuffled. p is set in the plan rather than inherited from
+    ``spark.sql.shuffle.partitions``, whose vanilla 200 turns every
+    round into hundreds of tiny tasks. Each round is eagerly
+    checkpointed, so round k+1 plans against a materialized frame
+    instead of k rounds of joins, and the round it replaces is
+    released: the result is the last round's checkpoint and reads
+    nothing else."""
+    ckpt = None
+    for _ in range(3):
+        live = score.filter(F.col("score") != 0)
+        sums = (
+            edges.join(live, edges.src == live.node)
+            .repartition(p, "dst")
+            .groupBy("dst")
+            .agg(contrib.alias("s"))
+        )
+        score = ckpt = _checkpoint_round(
+            nodes.join(sums, nodes.node == sums.dst, "left").select(
+                "node", update.alias("score")
+            ),
+            ckpt,
+        )
+    return score
+
+
 @register("graph_pagerank", oracle=_PAGERANK_ORACLE)
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-iteration PageRank (3 rounds, d=0.85) over the bipartite
     customer↔supplier trade graph (edges = distinct custkey/suppkey
-    pairs that share an order, made undirected so no node dangles).
-    The iterative-graph-algorithm showcase: each round is
-    edges ⋈ ranks on src → groupBy dst partial-summed contributions →
-    left join back to nodes — every join/agg keys on the node id, so
-    one hash partitioning serves the whole round and Spark reuses the
-    Exchange across the joins. At 100 TB-scale graphs the same loop
-    runs with ranks/deg co-partitioned with edges (graph systems'
-    vertex-cut is exactly this layout) and localCheckpoint every round
-    to cut lineage. Partition sizing is set IN the plan (explicit
-    ``repartition(p, key)`` with p = cluster parallelism) rather than
-    inherited from ``spark.sql.shuffle.partitions`` — under a vanilla
-    session the default 200 turns each of the 3 unrolled rounds into
-    hundreds of tiny tasks (measured 37 s → <5 s at sf0.01), and a
-    graph loop must never depend on session conf it didn't set. Each
-    round ends in an eager ``localCheckpoint`` so round k+1's plan
-    starts from a materialized 1-round frame instead of re-planning k
-    rounds of joins (Exchange census 54 → ~12). Ranks round to 8dp (values
-    ~1e-4, float-sum noise ~1e-18) and the top-25 cut orders by the
-    ROUNDED rank with a node-id tiebreak, so selection is
-    deterministic across engines."""
-    # partition width chosen by the plan, not the session (set before
-    # first use): every shuffle below is an explicit repartition(p, key)
-    # so the whole build runs p-ways even when the session left
-    # spark.sql.shuffle.partitions at the vanilla 200 — at sf0.01 that
-    # default costs ~15 s of pure empty-task overhead across the
-    # unrolled rounds.
+    pairs that share an order, made undirected so no node dangles),
+    run by ``_power_rounds``: every join and aggregate keys on the node
+    id, so one p-way hash partitioning serves each round. The edge,
+    node and degree frames are persisted for the rounds and released
+    before return; the result reads only the last round's checkpoint.
+    Ranks round to 8dp (values ~1e-4, float-sum noise ~1e-18) and the
+    top-25 cut orders by the ROUNDED rank with a node-id tiebreak, so
+    selection is deterministic across engines."""
     p = max(spark.sparkContext.defaultParallelism, 4)
-    # undirected edge list hashed p-ways on src (see _sym_trade_edges:
-    # node-id encoding, single shared exchange, persisted once): deg
-    # (groupBy src), nodes (distinct over src) and the per-round
-    # contribution join all key on src, so ONE Exchange serves every
-    # downstream consumer — the vertex-cut layout graph systems use.
-    # Every shuffle/join/compare below runs on 8-byte ints instead of
-    # strings; the display id is stringified only on the final 25 rows.
     edges = _sym_trade_edges(spark, sf_dir, p)
     nodes = edges.select(F.col("src").alias("node")).distinct().persist()
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count("*").cast("double").alias("outdeg")
     )
-    # the static per-round inputs (edge list with share denominators,
-    # node set) are PERSISTED, hash-partitioned p-ways on their join
-    # keys: the unrolled loop references them once per round, every
-    # round's join/agg keys on the node id, so the stored partitioning
-    # satisfies the joins' required distribution — no re-shuffle of the
-    # static side per round. Without materialization each round
-    # re-derives the whole orders⋈lineitem→distinct pipeline (measured
-    # 24 s → ~3 s at sf0.1).
+    # persisted on the src partitioning every round joins on: without
+    # it each round re-derives the whole orders⋈lineitem→distinct
+    # pipeline (measured 24 s → ~3 s at sf0.1)
     edges_deg = (
         edges.join(deg, edges.src == deg.node).select("src", "dst", "outdeg").persist()
     )
@@ -343,40 +408,22 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # [OR11] statistics step (operators/joins._stat_count)
     n = float(nodes.count())
     if n == 0:  # empty graph: no nodes, no ranks (guards the 1/n below)
-        return spark.createDataFrame([], "node_id string, rank double")
-    ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
-    for _ in range(3):
-        contribs = (
-            edges_deg.join(ranks, edges_deg.src == ranks.node)
-            # contributions shuffle once, p-ways, onto the destination
-            # node; the groupBy then aggregates in place (required
-            # distribution already satisfied) instead of planning a
-            # second 200-partition Exchange under vanilla conf
-            .repartition(p, "dst")
-            .groupBy("dst")
-            .agg(F.sum(F.col("rank") / F.col("outdeg")).alias("s"))
+        out = spark.createDataFrame([], "node_id string, rank double")
+    else:
+        ranks = _power_rounds(
+            edges_deg,
+            nodes,
+            nodes.select("node", F.lit(1.0 / n).alias("score")),
+            F.sum(F.col("score") / F.col("outdeg")),
+            F.lit(0.15 / n) + F.lit(0.85) * F.coalesce(F.col("s"), F.lit(0.0)),
+            p,
         )
-        ranks = nodes.join(contribs, nodes.node == contribs.dst, "left").select(
-            "node",
-            (
-                F.lit(0.15 / n) + F.lit(0.85) * F.coalesce(F.col("s"), F.lit(0.0))
-            ).alias("rank"),
-        )
-        # eager localCheckpoint: truncates lineage so round k+1 plans
-        # against a materialized p-partition frame, not k rounds of
-        # joins — the vanilla-session fix (54 Exchanges → ~12) and the
-        # standard iterative-algorithm hygiene at any scale
-        ranks = ranks.localCheckpoint()
-    display = (
-        F.when(
-            F.col("node") > 0,
-            F.concat(F.lit("c"), (F.col("node") - 1).cast("string")),
-        )
-        .otherwise(F.concat(F.lit("s"), (-F.col("node") - 1).cast("string")))
-        .alias("node_id")
-    )
-    out = ranks.select(display, F.round("rank", 8).alias("rank"))
-    return out.orderBy(F.desc("rank"), "node_id").limit(25)
+        out = ranks.select(
+            _node_id("node").alias("node_id"), F.round("score", 8).alias("rank")
+        ).orderBy(F.desc("rank"), "node_id").limit(25)
+    for df in (edges, nodes, edges_deg):
+        df.unpersist()
+    return out
 
 
 # fixed 2D centroids (model state, as literals so the assignment step's
@@ -741,45 +788,27 @@ FROM reach GROUP BY v
 
 @register("graph_connected_components", oracle=_CC_ORACLE)
 def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components over a sparsified customer↔supplier trade
-    graph: every 19th order's edges, restricted to congruent key
-    classes (l_suppkey ≡ o_custkey mod 10) — the 100 supplier hubs
-    would otherwise glue the whole fixture into ONE component; the
-    restriction yields 33 components over 339 vertices at sf0.01, so
-    a split/merge bug has something to break. Computed with the
-    pointer-jumping min-label propagation kernel
+    """Connected components over the sparsified customer↔supplier
+    trade graph (``_trade_edges``: 33 components over 339 vertices at
+    sf0.01, so a split/merge bug has something to break). Computed
+    with the pointer-jumping min-label propagation kernel
     (operators/dedup.connected_components — Shiloach–Vishkin path
     halving, O(log diameter) rounds, two shuffle joins per round).
     The oracle is a recursive CTE computing min-reachable-label per
     vertex — exact ground truth, so a propagation bug (a component
-    split or merged) fails the hash. Node ids use the ±(key+1)
-    encoding (both fixture key spaces start at 0; bare negation would
-    collide c0 with s0 — SURVEY §5.4)."""
+    split or merged) fails the hash."""
     from ..operators.dedup import connected_components
 
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    e0 = (
-        orders.filter(F.col("o_orderkey") % 19 == 0)
-        .join(li, orders.o_orderkey == li.l_orderkey)
-        .filter(F.col("l_suppkey") % 10 == F.col("o_custkey") % 10)
-        .select(
-            (F.col("o_custkey") + 1).cast("long").alias("src"),
-            (-(F.col("l_suppkey") + 1)).cast("long").alias("dst"),
-        )
-        .distinct()
-    )
+    e0 = _trade_edges(spark, sf_dir).select("src", "dst").distinct()
     verts = (
         e0.select(F.col("src").alias("v"))
         .unionByName(e0.select(F.col("dst").alias("v")))
         .distinct()
     )
     cc = connected_components(verts, e0, "v", "src", "dst")
-    disp = lambda c: (  # noqa: E731
-        F.when(F.col(c) > 0, F.concat(F.lit("c"), (F.col(c) - 1).cast("string")))
-        .otherwise(F.concat(F.lit("s"), (-F.col(c) - 1).cast("string")))
+    return cc.select(
+        _node_id("v").alias("node_id"), _node_id("cluster_rep").alias("component")
     )
-    return cc.select(disp("v").alias("node_id"), disp("cluster_rep").alias("component"))
 
 
 _TRI_ORACLE = """
@@ -803,13 +832,9 @@ GROUP BY node
 
 @register("graph_triangle_count", oracle=_TRI_ORACLE)
 def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-node triangle counts over the co-supply graph: suppliers
-    are adjacent when they ship lines of the same (sampled, mod-23)
-    order AND their keys lie within a 15-wide band — the band keeps
-    the 100-supplier fixture graph sparse enough that triangle
-    structure is non-trivial (~1k edges) instead of near-complete.
-    Algorithm: the standard oriented-edge join — every edge stored
-    once as (lo, hi), a triangle found exactly once as
+    """Per-node triangle counts over the banded co-supply graph
+    (``_co_supply_edges``). Algorithm: the standard oriented-edge
+    join — every edge stored once as (lo, hi), a triangle found exactly once as
     (a<b<c) via e(a,b) ⋈ e(b,c) ⋈ e(a,c). The orientation bounds join
     fan-out by the out-degree of the LOWER endpoint, which is the
     degree-splitting idea behind every distributed triangle counter;
@@ -817,26 +842,10 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(Σ d(v)²) candidate wedges hashed on the closing edge — no
     broadcast of the edge set, no driver state. The per-node rollup
     unions the three corner roles and reuses the same hash key."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    a = li.alias("a")
-    b = li.alias("b")
-    e = (
-        a.filter(F.col("a.l_orderkey") % 23 == 0)
-        .join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_suppkey") < F.col("b.l_suppkey"))
-            & (F.col("b.l_suppkey") - F.col("a.l_suppkey") <= 15),
-        )
-        .select(
-            F.col("a.l_suppkey").alias("s1"), F.col("b.l_suppkey").alias("s2")
-        )
-        .distinct()
-        # e feeds all three triangle-join legs; without the persist
-        # Spark recomputes the lineitem self-join + distinct once per
-        # leg (measured: 18 parquet scans, 0 ReusedExchange)
-        .persist()
-    )
+    # e feeds all three triangle-join legs; without the persist Spark
+    # recomputes the lineitem self-join + distinct once per leg
+    # (measured: 18 parquet scans, 0 ReusedExchange)
+    e = _co_supply_edges(spark, sf_dir).persist()
     x = e.select(F.col("s1").alias("ta"), F.col("s2").alias("tb"))
     y = e.select(F.col("s1").alias("ub"), F.col("s2").alias("tc"))
     z = e.select(F.col("s1").alias("va"), F.col("s2").alias("vc"))
@@ -886,57 +895,43 @@ def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     loop is level-synchronous frontier expansion — the Pregel
     iteration pattern: per round, frontier ⋈ edges proposes
     neighbors, an anti-join against the settled-distance table keeps
-    only first discoveries, and the new frontier is localCheckpointed
-    so round k+1's plan does not replay rounds 1..k (the pagerank
-    lesson — in-plan repartition sizing, never the session default).
-    Exactly H=4 rounds ⇒ 2 shuffle joins per round on the vertex
-    key; frontier size is monotonically bounded by the reachable
-    set, the settled table by |V| — no driver state beyond loop
-    control. Oracle: bounded recursive CTE, min hop per vertex —
-    exact, so any premature-settle or missed-frontier bug fails the
-    value hash, not just a row count."""
+    only first discoveries, and the settled table plus the new
+    frontier is eagerly checkpointed as the next round (the frontier
+    is its rows at the current depth), so round k+1's plan does not
+    replay rounds 1..k and the round it replaces is released. Exactly
+    H=4 rounds ⇒ 2 shuffle joins per round on the vertex key;
+    frontier size is monotonically bounded by the reachable set, the
+    settled table by |V| — no driver state beyond loop control. The
+    persisted edge frame is released before return, so the result
+    reads only the last round's checkpoint. Oracle: bounded recursive CTE, min hop
+    per vertex — exact, so any premature-settle or missed-frontier
+    bug fails the value hash, not just a row count."""
     p = max(spark.sparkContext.defaultParallelism, 8)
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    e0 = (
-        orders.filter(F.col("o_orderkey") % 19 == 0)
-        .join(li, orders.o_orderkey == li.l_orderkey)
-        .filter(F.col("l_suppkey") % 10 == F.col("o_custkey") % 10)
-        .select(
-            (F.col("o_custkey") + 1).cast("long").alias("src"),
-            (-(F.col("l_suppkey") + 1)).cast("long").alias("dst"),
-        )
-        .distinct()
-    )
+    e0 = _trade_edges(spark, sf_dir).select("src", "dst").distinct()
     edges = (
         e0.unionByName(e0.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .repartition(p, "src")
         .persist()
     )
-    dist = (
+    dist = _checkpoint_round(
         edges.filter((F.col("src") > 0) & ((F.col("src") - 1) % 7 == 0))
         .select(F.col("src").alias("v"))
         .distinct()
-        .withColumn("d", F.lit(0))
-        .localCheckpoint()
+        .withColumn("d", F.lit(0)),
+        None,
     )
-    frontier = dist.select("v")
     for depth in range(1, 5):
+        frontier = dist.filter(F.col("d") == depth - 1)
         nxt = (
             frontier.join(edges, frontier.v == edges.src)
             .select(F.col("dst").alias("v"))
             .distinct()
             .join(dist.select("v"), "v", "left_anti")
             .withColumn("d", F.lit(depth))
-            .localCheckpoint()
         )
-        dist = dist.unionByName(nxt).localCheckpoint()
-        frontier = nxt.select("v")
-    disp = (
-        F.when(F.col("v") > 0, F.concat(F.lit("c"), (F.col("v") - 1).cast("string")))
-        .otherwise(F.concat(F.lit("s"), (-F.col("v") - 1).cast("string")))
-    )
-    return dist.select(disp.alias("node_id"), F.col("d").cast("long").alias("dist"))
+        dist = _checkpoint_round(dist.unionByName(nxt), dist)
+    edges.unpersist()
+    return dist.select(_node_id("v").alias("node_id"), F.col("d").cast("long").alias("dist"))
 
 
 _JACC_ORACLE = """
@@ -977,27 +972,7 @@ def graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs BEFORE the degree join — at 100 TB that filter is the
     difference between a feature table and a cartesian blowup. One
     IEEE division per surviving pair, rounded for display only."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    a_ = li.alias("a")
-    b_ = li.alias("b")
-    e0 = (
-        a_.filter(F.col("a.l_orderkey") % 23 == 0)
-        .join(
-            b_,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_suppkey") < F.col("b.l_suppkey"))
-            & (F.col("b.l_suppkey") - F.col("a.l_suppkey") <= 15),
-        )
-        .select(
-            F.col("a.l_suppkey").alias("s1"), F.col("b.l_suppkey").alias("s2")
-        )
-        .distinct()
-    )
-    e = (
-        e0.select(F.col("s1").alias("u"), F.col("s2").alias("v"))
-        .unionByName(e0.select(F.col("s2").alias("u"), F.col("s1").alias("v")))
-        .persist()  # feeds degrees AND both wedge legs
-    )
+    e = _co_supply_sym(spark, sf_dir).persist()  # feeds degrees AND both wedge legs
     deg = e.groupBy("u").agg(F.count("*").alias("d"))
     x = e.select(F.col("u").alias("a"), F.col("v").alias("w"))
     y = e.select(F.col("u").alias("b"), F.col("v").alias("w2"))
@@ -1080,18 +1055,7 @@ def _lpa_frames(
     """(e0, sym, labels): the sparsified undirected trade graph (one
     row per edge / both directions) and its 3-round synchronous-LPA
     labels — the Spark mirror of ``_LPA_CTE``."""
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    e0 = (
-        orders.filter(F.col("o_orderkey") % 19 == 0)
-        .join(li, orders.o_orderkey == li.l_orderkey)
-        .filter(F.col("l_suppkey") % 10 == F.col("o_custkey") % 10)
-        .select(
-            (F.col("o_custkey") + 1).cast("long").alias("src"),
-            (-(F.col("l_suppkey") + 1)).cast("long").alias("dst"),
-        )
-        .distinct()
-    )
+    e0 = _trade_edges(spark, sf_dir).select("src", "dst").distinct()
     sym = e0.unionByName(
         e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).localCheckpoint(eager=True)
@@ -1130,13 +1094,11 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounds, and the window input is bounded by the vertex's DISTINCT
     neighbour labels (≤ degree), never the corpus. Same sparsified
     trade graph and ±(key+1) node encoding as
-    graph_connected_components (SURVEY §5.4)."""
+    graph_connected_components."""
     _, _, labels = _lpa_frames(spark, sf_dir)
-    disp = lambda c: (  # noqa: E731
-        F.when(F.col(c) > 0, F.concat(F.lit("c"), (F.col(c) - 1).cast("string")))
-        .otherwise(F.concat(F.lit("s"), (-F.col(c) - 1).cast("string")))
+    return labels.select(
+        _node_id("v").alias("node_id"), _node_id("label").alias("community")
     )
-    return labels.select(disp("v").alias("node_id"), disp("label").alias("community"))
 
 
 @register(
@@ -1317,29 +1279,14 @@ def graph_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     test). Each round is one degree hash-agg plus two semi-joins on
     the node key — all hash-partitioned on the same key so the
     Exchange is reused across rounds, and the edge frame only ever
-    SHRINKS (peeling is monotone). localCheckpoint truncates the
-    per-round lineage (the graph_pagerank round-6 lesson: never let an
-    unrolled loop replay rounds 1..k-1 under a vanilla conf)."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    a, b = li.alias("a"), li.alias("b")
-    e = (
-        a.filter(F.col("a.l_orderkey") % 23 == 0)
-        .join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_suppkey") < F.col("b.l_suppkey"))
-            & (F.col("b.l_suppkey") - F.col("a.l_suppkey") <= 15),
-        )
-        .select(F.col("a.l_suppkey").alias("u"), F.col("b.l_suppkey").alias("v"))
-        .distinct()
-    )
-    # in-plan partition sizing (the graph_pagerank lesson): every
-    # shuffle below is an explicit repartition(p, key), so a vanilla
-    # session's shuffle.partitions=200 never inflates the unrolled
-    # rounds with empty-task overhead
+    SHRINKS (peeling is monotone). Each round is eagerly checkpointed
+    and the round it replaces released, so no round replays rounds
+    1..k-1 and the result reads only the last round's checkpoint."""
+    # in-plan partition sizing: every shuffle below is an explicit
+    # repartition(p, key), so a vanilla session's shuffle.partitions=200
+    # never inflates the unrolled rounds with empty-task overhead
     p = max(spark.sparkContext.defaultParallelism, 4)
-    d = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    d = d.repartition(p, "u").localCheckpoint()
+    d = _checkpoint_round(_co_supply_sym(spark, sf_dir).repartition(p, "u"), None)
     for _ in range(_KCORE_ROUNDS):
         # d is hash-partitioned by u ⇒ the degree agg and the first
         # semi-join reuse that Exchange; only the v-side semi-join
@@ -1347,7 +1294,7 @@ def graph_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
         keep = d.groupBy("u").agg(F.count("*").alias("deg")).filter(
             F.col("deg") >= _KCORE_K
         ).select(F.col("u").alias("node"))
-        d = (
+        d = _checkpoint_round(
             d.join(keep.withColumnRenamed("node", "u"), "u", "left_semi")
             .repartition(p, "v")
             .join(
@@ -1356,8 +1303,9 @@ def graph_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "left_semi",
             )
             .select("u", "v")
+            .repartition(p, "u"),
+            d,
         )
-        d = d.repartition(p, "u").localCheckpoint()
     return d.groupBy("u").agg(F.count("*").cast("long").alias("core_degree")).select(
         F.col("u").alias("node_id"), "core_degree"
     )
@@ -1393,22 +1341,8 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph_k_core round 0), then the |distinct degrees|-row histogram.
     All integers, no windows, no collect; at 100 TB the histogram is
     the cheapest possible whole-graph summary."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    a, b = li.alias("a"), li.alias("b")
-    e = (
-        a.filter(F.col("a.l_orderkey") % 23 == 0)
-        .join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_suppkey") < F.col("b.l_suppkey"))
-            & (F.col("b.l_suppkey") - F.col("a.l_suppkey") <= 15),
-        )
-        .select(F.col("a.l_suppkey").alias("u"), F.col("b.l_suppkey").alias("v"))
-        .distinct()
-    )
     deg = (
-        e.select("u")
-        .unionAll(e.select(F.col("v").alias("u")))
+        _co_supply_sym(spark, sf_dir)
         .groupBy("u")
         .agg(F.count("*").cast("long").alias("degree"))
     )
@@ -1542,20 +1476,7 @@ def graph_cc_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     one delta-sized CC; the base frame is touched once, map-side."""
     from ..operators.dedup import connected_components
 
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderdate"
-    )
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    e_all = (
-        orders.filter(F.col("o_orderkey") % 19 == 0)
-        .join(li, orders.o_orderkey == li.l_orderkey)
-        .filter(F.col("l_suppkey") % 10 == F.col("o_custkey") % 10)
-        .select(
-            (F.col("o_custkey") + 1).cast("long").alias("src"),
-            (-(F.col("l_suppkey") + 1)).cast("long").alias("dst"),
-            F.col("o_orderdate").alias("d"),
-        )
-    )
+    e_all = _trade_edges(spark, sf_dir)
     base_e = e_all.filter(F.col("d") < F.lit(_CC_INC_CUTOFF)).select(
         "src", "dst"
     ).distinct()
@@ -1611,11 +1532,7 @@ def graph_cc_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("v", F.coalesce("slab2", "b").alias("lab"))
     )
-    disp = lambda c: (  # noqa: E731
-        F.when(F.col(c) > 0, F.concat(F.lit("c"), (F.col(c) - 1).cast("string")))
-        .otherwise(F.concat(F.lit("s"), (-F.col(c) - 1).cast("string")))
-    )
-    return lab.select(disp("v").alias("node_id"), disp("lab").alias("component"))
+    return lab.select(_node_id("v").alias("node_id"), _node_id("lab").alias("component"))
 
 
 @register(
@@ -1908,25 +1825,9 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical cost envelope to graph_triangle_count —
     O(Σ d(v)²) hashed wedges, plain shuffled equi-joins, no broadcast
     of the edge set; the rollups reuse the node hash key."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    a = li.alias("a")
-    b = li.alias("b")
-    e = (
-        a.filter(F.col("a.l_orderkey") % 23 == 0)
-        .join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_suppkey") < F.col("b.l_suppkey"))
-            & (F.col("b.l_suppkey") - F.col("a.l_suppkey") <= 15),
-        )
-        .select(
-            F.col("a.l_suppkey").alias("s1"), F.col("b.l_suppkey").alias("s2")
-        )
-        .distinct()
-        # feeds degree + three triangle legs; without the persist the
-        # lineitem self-join recomputes per leg (triangle_count lesson)
-        .persist()
-    )
+    # feeds degree + three triangle legs; without the persist the
+    # lineitem self-join recomputes once per leg
+    e = _co_supply_edges(spark, sf_dir).persist()
     deg = (
         e.select(F.col("s1").alias("node"))
         .unionAll(e.select(F.col("s2").alias("node")))
@@ -2789,50 +2690,29 @@ def graph_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     would need β rescaling, documented here, irrelevant at fixture
     masses.
 
-    Scale: same vertex-cut layout as graph_pagerank — ONE p-way hash
-    partitioning on the node id serves every round's join+agg (edges
-    persisted partitioned; Exchange reused); per-round localCheckpoint
-    cuts the unrolled lineage. Only (node, score) pairs shuffle,
-    never fact rows; O(nodes) frame, top-25 out."""
+    Scale: the same ``_power_rounds`` loop and vertex-cut layout as
+    graph_pagerank — ONE p-way hash partitioning on the node id serves
+    every round's join+agg, each round is checkpointed and the one it
+    replaces released, and the persisted edge and node frames are
+    released before return. Only (node, score) pairs shuffle, never
+    fact rows; O(nodes) frame, top-25 out."""
     p = max(spark.sparkContext.defaultParallelism, 4)
     edges = _sym_trade_edges(spark, sf_dir, p)
     nodes = edges.select(F.col("src").alias("node")).distinct().persist()
-    x = nodes.select(
-        "node", F.lit(1_000_000).cast("long").alias("x")
-    ).localCheckpoint()
-    for _ in range(3):
-        contrib = (
-            edges.join(x, edges.src == x.node)
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("x").cast("long").alias("s"))
-        )
-        x = (
-            nodes.join(contrib, "node", "left")
-            .select(
-                "node",
-                (
-                    F.lit(1_000_000)
-                    + F.expr("coalesce(s, 0L) div 8")
-                )
-                .cast("long")
-                .alias("x"),
-            )
-            .localCheckpoint()
-        )
+    x = _power_rounds(
+        edges,
+        nodes,
+        nodes.select("node", F.lit(1_000_000).cast("long").alias("score")),
+        F.sum("score").cast("long"),
+        (F.lit(1_000_000) + F.expr("coalesce(s, 0L) div 8")).cast("long"),
+        p,
+    )
+    for df in (edges, nodes):
+        df.unpersist()
     return (
-        x.orderBy(F.col("x").desc(), F.col("node").asc())
+        x.orderBy(F.col("score").desc(), F.col("node").asc())
         .limit(25)
-        .select(
-            F.when(
-                F.col("node") > 0,
-                F.concat(F.lit("c"), (F.col("node") - 1).cast("string")),
-            )
-            .otherwise(
-                F.concat(F.lit("s"), (-F.col("node") - 1).cast("string"))
-            )
-            .alias("node_id"),
-            F.col("x").alias("katz_micro"),
-        )
+        .select(_node_id("node").alias("node_id"), F.col("score").alias("katz_micro"))
     )
 
 
@@ -2895,8 +2775,11 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     replaced the SMJ that AQE picked blind on the stats-less
     checkpoint scan). Past ~10⁷ nodes drop the two F.broadcast hints
     and the SAME plan degrades gracefully to the partitioned O(E)-per-
-    round equi-join every other graph row uses. Per-half-round
-    localCheckpoint cuts the unrolled lineage; top-25 out."""
+    round equi-join every other graph row uses. Each half-round's raw
+    aggregate is eagerly checkpointed and the one it replaces
+    released; the edge checkpoint goes once the last half-round is
+    materialized, so the result reads only that half-round's
+    checkpoint. Top-25 out."""
     p = max(spark.sparkContext.defaultParallelism, 4)
     orders = (
         load_table(spark, sf_dir, "orders")
@@ -2942,26 +2825,24 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     # executes exactly once per half-round (inside the checkpoint
     # materialization), and the two _norm branches replay only the
     # skinny checkpointed frame.
-    a = _norm(
-        edges.groupBy("s")
-        .agg((F.count("*") * 1_000_000).cast("long").alias("a"))
-        .localCheckpoint(),
-        "a",
+    raw = _checkpoint_round(
+        edges.groupBy("s").agg((F.count("*") * 1_000_000).cast("long").alias("a")),
+        None,
     )
-    h = _norm(
-        edges.join(F.broadcast(a), "s")
+    raw = _checkpoint_round(
+        edges.join(F.broadcast(_norm(raw, "a")), "s")
         .groupBy("c")
-        .agg(F.sum("a").cast("long").alias("h"))
-        .localCheckpoint(),
-        "h",
+        .agg(F.sum("a").cast("long").alias("h")),
+        raw,
     )
-    a = _norm(
-        edges.join(F.broadcast(h), "c")
+    raw = _checkpoint_round(
+        edges.join(F.broadcast(_norm(raw, "h")), "c")
         .groupBy("s")
-        .agg(F.sum("h").cast("long").alias("a"))
-        .localCheckpoint(),
-        "a",
+        .agg(F.sum("h").cast("long").alias("a")),
+        raw,
     )
+    _drop_checkpoint(edges)
+    a = _norm(raw, "a")
     return (
         a.orderBy(F.col("a").desc(), F.col("s").asc())
         .limit(25)
@@ -3346,15 +3227,14 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     mass concentrated on a SEED set (customers with custkey % 100 == 0)
     instead of spread uniformly — the recommendation / trust-propagation
     workhorse ("rank suppliers from THESE customers' point of view";
-    Jeh & Widom WWW'03). Same plan economics as graph_pagerank
-    (docstring there: one persisted vertex-cut edge layout, every
-    per-round join keyed on the node id, explicit repartition(p, key),
-    eager localCheckpoint per round); the only deltas are the sparse
-    restart vector (a broadcast-joined seed flag) and a sparse r0 —
-    rank mass stays on the seeds' neighborhoods, so early rounds
-    shuffle only reached-node contributions (the WHERE rank <> 0
-    pruning both engines apply). Ranks round to 8dp, zero-mass nodes
-    drop, top-25 by (rounded rank, node id)."""
+    Jeh & Widom WWW'03). The same ``_power_rounds`` loop and persisted
+    frames as graph_pagerank, all released before return; the only
+    deltas are the sparse restart vector (a broadcast-joined seed
+    flag) and a sparse r0 — rank mass stays on the seeds'
+    neighborhoods, so early rounds shuffle only reached-node
+    contributions (the WHERE rank <> 0 pruning both engines apply).
+    Ranks round to 8dp, zero-mass nodes drop, top-25 by (rounded
+    rank, node id)."""
     p = max(spark.sparkContext.defaultParallelism, 4)
     edges = _sym_trade_edges(spark, sf_dir, p)
     nodes = edges.select(F.col("src").alias("node")).distinct().persist()
@@ -3373,48 +3253,38 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ns = float(seeds.count())
     if ns == 0:
-        return spark.createDataFrame([], "node_id string, rank double")
-    flagged = nodes.join(
-        F.broadcast(seeds), nodes.node == seeds.seed, "left"
-    ).select("node", F.col("seed").isNotNull().alias("is_seed"))
-    ranks = flagged.select(
-        "node",
-        F.when(F.col("is_seed"), F.lit(1.0 / ns)).otherwise(F.lit(0.0)).alias(
-            "rank"
-        ),
-    )
-    for _ in range(3):
-        contribs = (
-            edges_deg.join(
-                ranks.filter(F.col("rank") != 0.0),
-                edges_deg.src == F.col("node"),
-            )
-            .repartition(p, "dst")
-            .groupBy("dst")
-            .agg(F.sum(F.col("rank") / F.col("outdeg")).alias("s"))
+        out = spark.createDataFrame([], "node_id string, rank double")
+    else:
+        flagged = nodes.join(
+            F.broadcast(seeds), nodes.node == seeds.seed, "left"
+        ).select("node", F.col("seed").isNotNull().alias("is_seed"))
+        ranks = _power_rounds(
+            edges_deg,
+            flagged,
+            flagged.select(
+                "node",
+                F.when(F.col("is_seed"), F.lit(1.0 / ns))
+                .otherwise(F.lit(0.0))
+                .alias("score"),
+            ),
+            F.sum(F.col("score") / F.col("outdeg")),
+            F.when(F.col("is_seed"), F.lit(0.15 / ns)).otherwise(F.lit(0.0))
+            + F.lit(0.85) * F.coalesce(F.col("s"), F.lit(0.0)),
+            p,
         )
-        ranks = flagged.join(contribs, flagged.node == contribs.dst, "left").select(
-            "node",
-            (
-                F.when(F.col("is_seed"), F.lit(0.15 / ns)).otherwise(F.lit(0.0))
-                + F.lit(0.85) * F.coalesce(F.col("s"), F.lit(0.0))
-            ).alias("rank"),
+        out = (
+            ranks.withColumn("r8", F.round("score", 8))
+            .filter(F.col("r8") > 0)
+            .select(_node_id("node").alias("node_id"), F.col("r8").alias("rank"))
+            .orderBy(F.desc("rank"), F.asc("node_id"))
+            .limit(25)
         )
-        ranks = ranks.localCheckpoint(eager=True)
-    disp = F.when(
-        F.col("node") > 0, F.concat(F.lit("c"), (F.col("node") - 1).cast("string"))
-    ).otherwise(F.concat(F.lit("s"), (-F.col("node") - 1).cast("string")))
-    out = (
-        ranks.withColumn("r8", F.round("rank", 8))
-        .filter(F.col("r8") > 0)
-        .select(disp.alias("node_id"), F.col("r8").alias("rank"))
-        .orderBy(F.desc("rank"), F.asc("node_id"))
-        .limit(25)
-    )
+    for df in (edges, nodes, edges_deg, seeds):
+        df.unpersist()
     return out
 
 
-# --- Adamic–Adar link prediction (round 12) ------------------------------------
+# --- Adamic–Adar link prediction ----------------------------------------------
 
 _AA_ORACLE = """
 WITH e0 AS (
@@ -3461,27 +3331,7 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines and the display value is one rounded division. Wedge
     centers always have degree ≥ 2 (they neighbor both a and b), so
     ln > 0 unconditionally."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    a_ = li.alias("a")
-    b_ = li.alias("b")
-    e0 = (
-        a_.filter(F.col("a.l_orderkey") % 23 == 0)
-        .join(
-            b_,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_suppkey") < F.col("b.l_suppkey"))
-            & (F.col("b.l_suppkey") - F.col("a.l_suppkey") <= 15),
-        )
-        .select(
-            F.col("a.l_suppkey").alias("s1"), F.col("b.l_suppkey").alias("s2")
-        )
-        .distinct()
-    )
-    e = (
-        e0.select(F.col("s1").alias("u"), F.col("s2").alias("v"))
-        .unionByName(e0.select(F.col("s2").alias("u"), F.col("s1").alias("v")))
-        .persist()
-    )
+    e = _co_supply_sym(spark, sf_dir).persist()
     terms = (
         e.groupBy("u")
         .agg(F.count("*").cast("long").alias("d"))

@@ -76,8 +76,8 @@ STATE_PARTITIONS = 8
 #: executor heap (100 TB streams). Windowed aggregates keep the
 #: default in-memory store — their watermark-bounded state is tiny and
 #: the in-memory store measured faster at fixture scale (SCALE.md).
-#: stateOperators entries of the most recent _run() stream, for
-#: tools/state_audit.py (a list so the reference stays stable across
+#: stateOperators entries of the most recent _run() stream, read by
+#: tests (a list so the reference stays stable across
 #: reassignment-free updates)
 LAST_STATE_OPERATORS: list[dict] = []
 
@@ -158,8 +158,8 @@ def _run(
     try:
         q.processAllAvailable()
         # observability hook: record the final state-store footprint so
-        # tools/state_audit.py can report it for EVERY registry stream
-        # query without re-implementing the queries (stateOperators =
+        # a caller can report it for EVERY registry stream query
+        # without re-implementing the queries (stateOperators =
         # rows/bytes held per stateful operator — the number that
         # decides survival on unbounded input). Zero-cost when nobody
         # reads it.

@@ -1621,6 +1621,31 @@ def test_graph_hits_matches_python_recompute(spark, sf_dir):
     assert got == exp
 
 
+def test_iterative_graph_loops_keep_only_their_result_checkpoint(spark, sf_dir):
+    """The eager graph loops release every round they supersede and
+    every persisted static frame their result no longer reads: after a
+    noop write, each key has added at most one persistent RDD, its
+    result's own checkpoint."""
+    from mapreducenonequijoin_spark.plans import QUERIES
+
+    def persistent() -> set[int]:
+        return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
+
+    added = {}
+    for key in (
+        "graph_pagerank",
+        "graph_personalized_pagerank",
+        "graph_katz_centrality",
+        "graph_bfs_distance",
+        "graph_k_core",
+        "graph_hits",
+    ):
+        before = persistent()
+        QUERIES[key].fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
+        added[key] = len(persistent() - before)
+    assert all(n <= 1 for n in added.values()), added
+
+
 def test_branch_refs_isolation_and_vacuum_retention(spark, sf_dir):
     """Refs properties beyond the oracle row: branch files are not
     orphans, the tag keeps v0 readable after vacuum(keep_latest=1),

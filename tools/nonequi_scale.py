@@ -31,6 +31,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from mapreducenonequijoin_spark.operators.joins import (  # noqa: E402
     band_join,
+    naive_theta_join,
     theta_join,
 )
 from mapreducenonequijoin_spark.session import get_spark  # noqa: E402
@@ -165,7 +166,7 @@ def main() -> None:
             F.col("l_ts") < F.col("r_ts")
         ) & (F.col("l_ts") + 120.0 > F.col("r_ts"))
         t_1b = timed(theta_join(lf, rf, cond, strategy="1bucket"))
-        t_bnlj = timed(theta_join(lf, rf, cond, strategy="naive"))
+        t_bnlj = timed(naive_theta_join(lf, rf, cond))
         # region balance: inputs replicated to regions; with value-
         # independent assignment every region sees ~equal input by
         # construction — measure it rather than assert it
