@@ -208,16 +208,15 @@ def main() -> None:
 
     warmup(spark)
 
-    # Recycle the session every N queries in BOTH modes: measured r6,
-    # queries read up to 3x slower after ~100 prior executions in one
-    # JVM (accumulated heap/codegen-cache pressure — AUDIT.md round-6
-    # notes), which poisoned round-over-round sweep diffs. Headline
-    # mode was single-session while the set was ≤ ~35 queries; at 57
-    # (r9) the tail entries were paying the same old-JVM tax (measured:
-    # text_ngram_novelty 7.1 s as query #54 in-headline vs 1.3 s
-    # isolated median — 5.5x pure JVM age). The recycle bound keeps
-    # every measurement within a comparable JVM age; no stream_* query
-    # sits directly after a boundary (they'd pay state-store re-init).
+    # Recycle the session every N queries in BOTH modes, so every
+    # measurement runs in a JVM of comparable age. Three headline pairs
+    # at sf0.1 on 4 cores, recycle 25 vs one session (N=1000), keys
+    # #26-#86 judged by the larger of each key's two noise floors: the
+    # sums agree on a quiet host (56.5 vs 55.1 s), but sim_pq_search
+    # (0.95-1.12 vs 1.10-1.59 s) and multimodal_audio_decode (0.36-0.42
+    # vs 0.42-0.54 s) read slower in the one session in all three
+    # pairs, outside their floors in two. No stream_* query sits
+    # directly after a boundary (they'd pay state-store re-init).
     recycle = int(os.environ.get("SPARK_GRAFT_BENCH_RECYCLE", "25"))
 
     timings: dict[str, float] = {}

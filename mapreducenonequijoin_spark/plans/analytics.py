@@ -121,6 +121,25 @@ def retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _gap_flagged(ev: DataFrame, *cols: str) -> DataFrame:
+    """``cols`` of ``ev`` plus ts_us (epoch µs) and is_new: 1 where the
+    event opens a session (a user's first event, or more than 30 min
+    after the previous one in (ts, event_id) order), else 0."""
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    ts_us = F.unix_micros("ts")
+    return ev.select(
+        *cols,
+        ts_us.alias("ts_us"),
+        F.when(
+            F.lag(ts_us).over(w).isNull()
+            | (ts_us - F.lag(ts_us).over(w) > 1800 * 1_000_000),
+            F.lit(1),
+        )
+        .otherwise(F.lit(0))
+        .alias("is_new"),
+    )
+
+
 @register(
     "sessionize_events",
     oracle="""
@@ -164,24 +183,13 @@ def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     while DuckDB's epoch cast rounds, a real sub-second parity trap)
     for bit-exact cross-engine session boundaries."""
     ev = load_table(spark, sf_dir, "events").select("user_id", "event_id", "ts")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    ts_us = F.unix_micros("ts")
-    flagged = ev.select(
-        "user_id",
-        "event_id",
-        "ts",
-        ts_us.alias("ts_us"),
-        F.when(
-            F.lag(ts_us).over(w).isNull()
-            | (ts_us - F.lag(ts_us).over(w) > 1800 * 1_000_000),
-            F.lit(1),
-        )
-        .otherwise(F.lit(0))
-        .alias("is_new"),
-    )
-    sess = flagged.withColumn(
+    sess = _gap_flagged(ev, "user_id", "event_id", "ts").withColumn(
         "session_no",
-        F.sum("is_new").over(w.rowsBetween(Window.unboundedPreceding, 0)),
+        F.sum("is_new").over(
+            Window.partitionBy("user_id")
+            .orderBy("ts", "event_id")
+            .rowsBetween(Window.unboundedPreceding, 0)
+        ),
     )
     return sess.groupBy("user_id", F.col("session_no").cast("long").alias("session_no")).agg(
         F.count("*").alias("n_events"),
@@ -2052,7 +2060,7 @@ def timeseries_stl_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly. The series is quantized at DECI-units (×10, one decade
     coarser than the cents idiom) so n·Σr₀² clears int64 through the
     sf1.0 spot-bench (the cents variant overflowed EXACTLY there —
-    caught live by tools/sf1_scale.py; next decade ~10⁸
+    caught by the sf1.0 scaling study, in git history; next decade ~10⁸
     deci-units/bucket, coarsen again). The emitted ratio is the
     fixed-parenthesization (num·10⁶)/ssd over BIGINT→DOUBLE casts
     (single IEEE conversions — exact-equal across engines, unlike
@@ -2106,6 +2114,21 @@ def timeseries_stl_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _hourly_deci(spark: SparkSession, sf_dir: str, *keys: str) -> DataFrame:
+    """(``keys``, t, y): events summed per ``keys`` and epoch hour t,
+    the value in exact int64 deci-units."""
+    return (
+        load_table(spark, sf_dir, "events")
+        .groupBy(
+            *keys,
+            F.expr(
+                "unix_micros(date_trunc('hour', ts)) div 3600000000"
+            ).alias("t"),
+        )
+        .agg(F.sum(F.round(F.col("value") * 10).cast("long")).alias("y"))
+    )
+
+
 # --- Theil–Sen robust trend ------------------------------------------------------
 
 _TSEN_K = 64  # trailing buckets in the estimation frame
@@ -2151,15 +2174,7 @@ def timeseries_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the fact table collapses to |hours| rows in ONE map-side
     agg before anything else; everything after is O(K²) = O(1)."""
-    hourly = (
-        load_table(spark, sf_dir, "events")
-        .groupBy(
-            F.expr(
-                "unix_micros(date_trunc('hour', ts)) div 3600000000"
-            ).alias("t")
-        )
-        .agg(F.sum(F.round(F.col("value") * 10).cast("long")).alias("y"))
-    )
+    hourly = _hourly_deci(spark, sf_dir)
     lastk = hourly.orderBy(F.col("t").desc()).limit(_TSEN_K)
     a = lastk.select(F.col("t").alias("ta"), F.col("y").alias("ya"))
     b = lastk.select(F.col("t").alias("tb"), F.col("y").alias("yb"))
@@ -2228,15 +2243,7 @@ def timeseries_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the fact table collapses to |hours| in one map-side agg;
     everything after is O(K²) = O(1)."""
-    hourly = (
-        load_table(spark, sf_dir, "events")
-        .groupBy(
-            F.expr(
-                "unix_micros(date_trunc('hour', ts)) div 3600000000"
-            ).alias("t")
-        )
-        .agg(F.sum(F.round(F.col("value") * 10).cast("long")).alias("y"))
-    )
+    hourly = _hourly_deci(spark, sf_dir)
     lastk = hourly.orderBy(F.col("t").desc()).limit(_TSEN_K)
     a = lastk.select(F.col("t").alias("ta"), F.col("y").alias("ya"))
     b = lastk.select(F.col("t").alias("tb"), F.col("y").alias("yb"))
@@ -2331,16 +2338,7 @@ def eval_forecast_smape_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one map-side hourly collapse, one lag window per series
     key, one agg; O(series) output."""
-    hourly = (
-        load_table(spark, sf_dir, "events")
-        .groupBy(
-            "event_type",
-            F.expr(
-                "unix_micros(date_trunc('hour', ts)) div 3600000000"
-            ).alias("t"),
-        )
-        .agg(F.sum(F.round(F.col("value") * 10).cast("long")).alias("y"))
-    )
+    hourly = _hourly_deci(spark, sf_dir, "event_type")
     w = Window.partitionBy("event_type").orderBy("t")
     lagged = hourly.select(
         "event_type", "y", F.lag("y").over(w).alias("f")
@@ -2398,16 +2396,7 @@ def eval_forecast_mase_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one map-side hourly collapse + ONE window pass per series
     producing both lags + one agg; O(series) output."""
-    hourly = (
-        load_table(spark, sf_dir, "events")
-        .groupBy(
-            "event_type",
-            F.expr(
-                "unix_micros(date_trunc('hour', ts)) div 3600000000"
-            ).alias("t"),
-        )
-        .agg(F.sum(F.round(F.col("value") * 10).cast("long")).alias("y"))
-    )
+    hourly = _hourly_deci(spark, sf_dir, "event_type")
     w = Window.partitionBy("event_type").orderBy("t")
     lagged = hourly.select(
         "event_type",
@@ -2953,21 +2942,7 @@ def pipeline_user_journey(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_id", "event_type", "ts"
     )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    ts_us = F.unix_micros("ts")
-    flagged = ev.select(
-        "user_id",
-        "event_id",
-        "event_type",
-        ts_us.alias("ts_us"),
-        F.when(
-            F.lag(ts_us).over(w).isNull()
-            | (ts_us - F.lag(ts_us).over(w) > 1800 * 1_000_000),
-            F.lit(1),
-        )
-        .otherwise(F.lit(0))
-        .alias("is_new"),
-    )
+    flagged = _gap_flagged(ev, "user_id", "event_id", "event_type")
     # ts_us is a monotone bijection of ts, so this is the same order
     w2 = (
         Window.partitionBy("user_id")

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.io import load_table
@@ -133,6 +133,20 @@ def eval_auc_rank_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tot.select("n_pos", "n_neg", F.round(auc, 6).alias("auc"))
 
 
+def _confusion_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One row (tp, fp, fn, tn) at the 0.5 score cut: a single
+    4-counter aggregate over the scored embeddings."""
+    s = _scored(spark, sf_dir)
+    pred = F.col("score") >= 0.5
+    pos = F.col("label") == _POS_LABEL
+    return s.agg(
+        F.count_if(pred & pos).cast("long").alias("tp"),
+        F.count_if(pred & ~pos).cast("long").alias("fp"),
+        F.count_if(~pred & pos).cast("long").alias("fn"),
+        F.count_if(~pred & ~pos).cast("long").alias("tn"),
+    )
+
+
 @register(
     "eval_confusion_metrics",
     oracle=f"""
@@ -163,15 +177,7 @@ def eval_confusion_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded once. The F1 uses the algebraic 2tp/(2tp+fp+fn) form — one
     division instead of the harmonic mean's three, so there is exactly
     one float op to agree on."""
-    s = _scored(spark, sf_dir)
-    pred = F.col("score") >= 0.5
-    pos = F.col("label") == _POS_LABEL
-    cm = s.agg(
-        F.count_if(pred & pos).cast("long").alias("tp"),
-        F.count_if(pred & ~pos).cast("long").alias("fp"),
-        F.count_if(~pred & pos).cast("long").alias("fn"),
-        F.count_if(~pred & ~pos).cast("long").alias("tn"),
-    )
+    cm = _confusion_counts(spark, sf_dir)
     dbl = lambda c: F.col(c).cast("double")  # noqa: E731
     return cm.select(
         "tp", "fp", "fn", "tn",
@@ -297,6 +303,50 @@ _RRF_TOPK = 20
 _RRF_TERMS = ["join", "window", "scan"]  # same fixed query as BM25
 
 
+def _rank_pools(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The two retrieval arms' top-``_RRF_POOL`` pools: lexical
+    (doc_id, lex_rank) by integer tf over ``_RRF_TERMS``, and dense
+    (doc_id, vec_rank) by the 6dp-rounded cosine to vector 0. Each pool
+    is a TakeOrdered top-k, ranked by row_number over (score DESC,
+    doc_id)."""
+    docs = load_table(spark, sf_dir, "documents")
+    tf = (
+        docs.select("doc_id", F.explode(F.split("text", " ")).alias("w"))
+        .filter(F.col("w").isin(_RRF_TERMS))
+        .groupBy("doc_id")
+        .agg(F.count("*").cast("long").alias("tf"))
+    )
+    emb = load_table(spark, sf_dir, "embeddings")
+    q = emb.filter(F.col("vec_id") == 0).select(
+        F.col("embedding").cast("array<double>").alias("q_emb"),
+        F.col("vec_id").alias("q_anchor"),
+    )
+    cand = emb.filter(F.col("vec_id") != 0).select(
+        F.col("vec_id").alias("doc_id"),
+        F.col("embedding").cast("array<double>").alias("c_emb"),
+    )
+    scored = attach_scalar_frame(cand, "doc_id", q, "q_anchor").select(
+        "doc_id",
+        F.round(
+            F.aggregate(
+                F.zip_with("q_emb", "c_emb", lambda x, y: x * y),
+                F.lit(0.0),
+                lambda acc, x: acc + x,
+            ),
+            6,
+        ).alias("cosine"),
+    )
+
+    def ranked(frame: DataFrame, score: str, rank: str) -> DataFrame:
+        order = (F.col(score).desc(), "doc_id")
+        return frame.orderBy(*order).limit(_RRF_POOL).select(
+            "doc_id",
+            F.row_number().over(Window.orderBy(*order)).cast("long").alias(rank),
+        )
+
+    return ranked(tf, "tf", "lex_rank"), ranked(scored, "cosine", "vec_rank")
+
+
 @register(
     "retrieval_rrf_fusion",
     oracle=f"""
@@ -352,51 +402,7 @@ def retrieval_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-term float sum rounded once. NULL lex_rank/vec_rank mark
     single-arm hits, int ranks elsewhere; ties in rrf break by
     doc_id."""
-    docs = load_table(spark, sf_dir, "documents")
-    tf = (
-        docs.select("doc_id", F.explode(F.split("text", " ")).alias("w"))
-        .filter(F.col("w").isin(_RRF_TERMS))
-        .groupBy("doc_id")
-        .agg(F.count("*").cast("long").alias("tf"))
-    )
-    lex_pool = tf.orderBy(F.col("tf").desc(), "doc_id").limit(_RRF_POOL)
-    lex = lex_pool.select(
-        "doc_id",
-        F.row_number()
-        .over(Window.orderBy(F.col("tf").desc(), "doc_id"))
-        .cast("long")
-        .alias("lex_rank"),
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").cast("array<double>").alias("q_emb"),
-        F.col("vec_id").alias("q_anchor"),
-    )
-    cand = emb.filter(F.col("vec_id") != 0).select(
-        F.col("vec_id").alias("doc_id"),
-        F.col("embedding").cast("array<double>").alias("c_emb"),
-    )
-    scored = attach_scalar_frame(cand, "doc_id", q, "q_anchor").select(
-        "doc_id",
-        F.round(
-            F.aggregate(
-                F.zip_with("q_emb", "c_emb", lambda x, y: x * y),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            6,
-        ).alias("cosine"),
-    )
-    vec_pool = scored.orderBy(F.col("cosine").desc(), "doc_id").limit(_RRF_POOL)
-    vec = vec_pool.select(
-        "doc_id",
-        F.row_number()
-        .over(Window.orderBy(F.col("cosine").desc(), "doc_id"))
-        .cast("long")
-        .alias("vec_rank"),
-    )
-
+    lex, vec = _rank_pools(spark, sf_dir)
     fused = lex.join(vec, "doc_id", "full_outer").select(
         "doc_id",
         "lex_rank",
@@ -421,6 +427,25 @@ def retrieval_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CAL_BINS = 10
 _CAL_SCALE = 8.0  # sharpening temperature 1/T: spreads the near-0.5 raw
 # sigmoids across the deciles so the diagram exercises every bin
+
+
+def _calibration_per_bin(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(bin, n, n_pos, sm) per decile of the ``_CAL_SCALE``-sharpened
+    score: row count, positives, and the sum of micro-unit scores. The
+    top edge folds into the last bin."""
+    binned = _scored(spark, sf_dir, _CAL_SCALE).select(
+        F.least(
+            F.floor(F.col("score") * _CAL_BINS).cast("long"),
+            F.lit(_CAL_BINS - 1).cast("long"),
+        ).alias("bin"),
+        (F.col("label") == _POS_LABEL).alias("pos"),
+        F.round(F.col("score") * 1_000_000).cast("long").alias("s_micro"),
+    )
+    return binned.groupBy("bin").agg(
+        F.count("*").cast("long").alias("n"),
+        F.count_if("pos").cast("long").alias("n_pos"),
+        F.sum("s_micro").cast("long").alias("sm"),
+    )
 
 
 @register(
@@ -460,19 +485,7 @@ def eval_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     (least(⌊10s⌋, 9)), the standard closed-right convention. The 1/T logit
     sharpening applied first IS temperature scaling (Guo '17), the
     knob this diagram exists to tune."""
-    binned = _scored(spark, sf_dir, _CAL_SCALE).select(
-        F.least(
-            F.floor(F.col("score") * _CAL_BINS).cast("long"),
-            F.lit(_CAL_BINS - 1).cast("long"),
-        ).alias("bin"),
-        (F.col("label") == _POS_LABEL).alias("pos"),
-        F.round(F.col("score") * 1_000_000).cast("long").alias("s_micro"),
-    )
-    per_bin = binned.groupBy("bin").agg(
-        F.count("*").cast("long").alias("n"),
-        F.count_if("pos").cast("long").alias("n_pos"),
-        F.sum("s_micro").cast("long").alias("sm"),
-    )
+    per_bin = _calibration_per_bin(spark, sf_dir)
     return per_bin.select(
         "bin",
         "n",
@@ -842,55 +855,7 @@ def eval_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     (≤1,225 pairs FOREVER — a bounded BNLJ, whitelisted with the
     same rationale as the scalar broadcasts); rank windows run over
     the pools only."""
-    docs = load_table(spark, sf_dir, "documents")
-    tf = (
-        docs.select("doc_id", F.explode(F.split("text", " ")).alias("w"))
-        .filter(F.col("w").isin(_RRF_TERMS))
-        .groupBy("doc_id")
-        .agg(F.count("*").cast("long").alias("tf"))
-    )
-    lex = (
-        tf.orderBy(F.col("tf").desc(), "doc_id")
-        .limit(_RRF_POOL)
-        .select(
-            "doc_id",
-            F.row_number()
-            .over(Window.orderBy(F.col("tf").desc(), "doc_id"))
-            .cast("long")
-            .alias("lex_rank"),
-        )
-    )
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").cast("array<double>").alias("q_emb"),
-        F.col("vec_id").alias("q_anchor"),
-    )
-    cand = emb.filter(F.col("vec_id") != 0).select(
-        F.col("vec_id").alias("doc_id"),
-        F.col("embedding").cast("array<double>").alias("c_emb"),
-    )
-    scored = attach_scalar_frame(cand, "doc_id", q, "q_anchor").select(
-        "doc_id",
-        F.round(
-            F.aggregate(
-                F.zip_with("q_emb", "c_emb", lambda x, y: x * y),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            6,
-        ).alias("cosine"),
-    )
-    vec = (
-        scored.orderBy(F.col("cosine").desc(), "doc_id")
-        .limit(_RRF_POOL)
-        .select(
-            "doc_id",
-            F.row_number()
-            .over(Window.orderBy(F.col("cosine").desc(), "doc_id"))
-            .cast("long")
-            .alias("vec_rank"),
-        )
-    )
+    lex, vec = _rank_pools(spark, sf_dir)
     common = lex.join(vec, "doc_id")
     a = common.alias("a")
     b = common.alias("b")
@@ -1160,6 +1125,20 @@ def eval_wilson_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _pred_ref_pairs(
+    spark: SparkSession, sf_dir: str, pred: Column, ref: Column
+) -> DataFrame:
+    """(pair_id, pred, ref): every 50th document is a prediction and
+    the next doc_id its reference; ``pred`` and ``ref`` are projections
+    of ``documents.text`` for each side."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    return (
+        docs.filter(F.col("doc_id") % 50 == 0)
+        .select(F.col("doc_id").alias("pair_id"), pred)
+        .join(docs.select((F.col("doc_id") - 1).alias("pair_id"), ref), "pair_id")
+    )
+
+
 @register(
     "eval_token_f1",
     oracle="""
@@ -1208,14 +1187,9 @@ def eval_token_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(tokens) with no row wider than a (pair_id, tok, c) triple; the
     per-pair rollups are O(pairs). 100 TB story: identical to
     wordcount + one co-partitioned join."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    pred = docs.filter(F.col("doc_id") % 50 == 0).select(
-        F.col("doc_id").alias("pair_id"), F.col("text").alias("ptext")
+    pairs = _pred_ref_pairs(
+        spark, sf_dir, F.col("text").alias("ptext"), F.col("text").alias("rtext")
     )
-    ref = docs.select(
-        (F.col("doc_id") - 1).alias("pair_id"), F.col("text").alias("rtext")
-    )
-    pairs = pred.join(ref, "pair_id")
 
     def _counts(col: str, out: str) -> DataFrame:
         return (
@@ -1250,6 +1224,49 @@ def eval_token_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
             / (F.col("n_pred") + F.col("n_ref")).cast("double"),
             6,
         ).alias("f1"),
+    )
+
+
+def _clipped_overlaps(pairs: DataFrame, base: DataFrame) -> DataFrame:
+    """``base`` (keyed by pair_id) with ov1/ov2: the clipped unigram and
+    bigram overlaps Σ min(c_pred, c_ref) between the ``pw`` and ``rw``
+    token arrays of ``pairs``, 0 where a pair shares no gram."""
+
+    def grams(col: str, n: int) -> DataFrame:
+        # explode_outer + null filter: plain explode's inferred
+        # non-empty predicate would inline the bigram transform into
+        # the scan filter (10x slower on text_ngram_novelty at sf0.1)
+        if n == 1:
+            g = F.explode_outer(F.col(col))
+        else:
+            g = F.explode_outer(
+                F.expr(
+                    f"CASE WHEN size({col}) >= 2 THEN transform("
+                    f"sequence(0, size({col}) - 2),"
+                    f" i -> concat_ws(' ', {col}[i], {col}[i+1]))"
+                    " ELSE array() END"
+                )
+            )
+        return (
+            pairs.select("pair_id", g.alias("g"))
+            .filter(F.col("g").isNotNull())
+            .groupBy("pair_id", "g")
+            .agg(F.count("*").alias("c"))
+        )
+
+    def overlap(p: DataFrame, r: DataFrame, out: str) -> DataFrame:
+        return (
+            p.withColumnRenamed("c", "pc")
+            .join(r.withColumnRenamed("c", "rc"), ["pair_id", "g"])
+            .groupBy("pair_id")
+            .agg(F.sum(F.least("pc", "rc")).cast("long").alias(out))
+        )
+
+    return (
+        base.join(overlap(grams("pw", 1), grams("rw", 1), "ov1"), "pair_id", "left")
+        .join(overlap(grams("pw", 2), grams("rw", 2), "ov2"), "pair_id", "left")
+        .withColumn("ov1", F.coalesce("ov1", F.lit(0)))
+        .withColumn("ov2", F.coalesce("ov2", F.lit(0)))
     )
 
 
@@ -1323,62 +1340,16 @@ def eval_bleu2(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two (pair, gram)-keyed map-side-combined count aggs + two
     co-partitioned equi-joins — wordcount shape, O(tokens), no row
     wider than (pair_id, gram, count)."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    pairs = (
-        docs.filter(F.col("doc_id") % 50 == 0)
-        .select(
-            F.col("doc_id").alias("pair_id"),
-            F.split("text", " ").alias("pw"),
-        )
-        .join(
-            docs.select(
-                (F.col("doc_id") - 1).alias("pair_id"),
-                F.split("text", " ").alias("rw"),
-            ),
+    words = F.split("text", " ")
+    pairs = _pred_ref_pairs(spark, sf_dir, words.alias("pw"), words.alias("rw"))
+
+    j = _clipped_overlaps(
+        pairs,
+        pairs.select(
             "pair_id",
-        )
-    )
-
-    def grams(col: str, n: int) -> DataFrame:
-        # explode_outer + null filter: plain explode's inferred
-        # non-empty predicate would inline the bigram transform into
-        # the scan filter (the measured 10x novelty regression class)
-        if n == 1:
-            g = F.explode_outer(F.col(col))
-        else:
-            g = F.explode_outer(
-                F.expr(
-                    f"CASE WHEN size({col}) >= 2 THEN transform("
-                    f"sequence(0, size({col}) - 2),"
-                    f" i -> concat_ws(' ', {col}[i], {col}[i+1]))"
-                    " ELSE array() END"
-                )
-            )
-        return (
-            pairs.select("pair_id", g.alias("g"))
-            .filter(F.col("g").isNotNull())
-            .groupBy("pair_id", "g")
-            .agg(F.count("*").alias("c"))
-        )
-
-    def overlap(p: DataFrame, r: DataFrame, out: str) -> DataFrame:
-        return (
-            p.withColumnRenamed("c", "pc")
-            .join(r.withColumnRenamed("c", "rc"), ["pair_id", "g"])
-            .groupBy("pair_id")
-            .agg(F.sum(F.least("pc", "rc")).cast("long").alias(out))
-        )
-
-    base = pairs.select(
-        "pair_id",
-        F.size("pw").cast("long").alias("c_len"),
-        F.size("rw").cast("long").alias("r_len"),
-    )
-    j = (
-        base.join(overlap(grams("pw", 1), grams("rw", 1), "ov1"), "pair_id", "left")
-        .join(overlap(grams("pw", 2), grams("rw", 2), "ov2"), "pair_id", "left")
-        .withColumn("ov1", F.coalesce("ov1", F.lit(0)))
-        .withColumn("ov2", F.coalesce("ov2", F.lit(0)))
+            F.size("pw").cast("long").alias("c_len"),
+            F.size("rw").cast("long").alias("r_len"),
+        ),
     )
     dbl = lambda c: F.col(c).cast("double")  # noqa: E731
     p1 = dbl("ov1") / dbl("c_len")
@@ -1839,62 +1810,16 @@ def eval_rouge_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts, clipped overlap Σ min(c_pred, c_ref) via co-partitioned
     equi-joins, INTEGER counts, exactly one rounded division per
     metric — with the r_len = 1 bigram denominator CASE-guarded in
-    BOTH engines (the eval_kendall_tau sf0.1 lesson: guard every
-    division whose emptiness depends on data, not schema).
+    BOTH engines (every division whose emptiness depends on data,
+    not schema, is guarded: an unguarded 0/0 raises under ANSI mode).
 
     Scale: O(tokens) wordcount shape, rows never wider than
     (pair_id, gram, count); per-pair rollups O(pairs)."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    pairs = (
-        docs.filter(F.col("doc_id") % 50 == 0)
-        .select(
-            F.col("doc_id").alias("pair_id"),
-            F.split("text", " ").alias("pw"),
-        )
-        .join(
-            docs.select(
-                (F.col("doc_id") - 1).alias("pair_id"),
-                F.split("text", " ").alias("rw"),
-            ),
-            "pair_id",
-        )
-    )
+    words = F.split("text", " ")
+    pairs = _pred_ref_pairs(spark, sf_dir, words.alias("pw"), words.alias("rw"))
 
-    def grams(col: str, n: int) -> DataFrame:
-        # explode_outer + null filter (not plain explode): keeps the
-        # bigram transform out of the scan's inferred non-empty filter
-        if n == 1:
-            g = F.explode_outer(F.col(col))
-        else:
-            g = F.explode_outer(
-                F.expr(
-                    f"CASE WHEN size({col}) >= 2 THEN transform("
-                    f"sequence(0, size({col}) - 2),"
-                    f" i -> concat_ws(' ', {col}[i], {col}[i+1]))"
-                    " ELSE array() END"
-                )
-            )
-        return (
-            pairs.select("pair_id", g.alias("g"))
-            .filter(F.col("g").isNotNull())
-            .groupBy("pair_id", "g")
-            .agg(F.count("*").alias("c"))
-        )
-
-    def overlap(p: DataFrame, r: DataFrame, out: str) -> DataFrame:
-        return (
-            p.withColumnRenamed("c", "pc")
-            .join(r.withColumnRenamed("c", "rc"), ["pair_id", "g"])
-            .groupBy("pair_id")
-            .agg(F.sum(F.least("pc", "rc")).cast("long").alias(out))
-        )
-
-    base = pairs.select("pair_id", F.size("rw").cast("long").alias("r_len"))
-    j = (
-        base.join(overlap(grams("pw", 1), grams("rw", 1), "ov1"), "pair_id", "left")
-        .join(overlap(grams("pw", 2), grams("rw", 2), "ov2"), "pair_id", "left")
-        .withColumn("ov1", F.coalesce("ov1", F.lit(0)))
-        .withColumn("ov2", F.coalesce("ov2", F.lit(0)))
+    j = _clipped_overlaps(
+        pairs, pairs.select("pair_id", F.size("rw").cast("long").alias("r_len"))
     )
     return j.select(
         "pair_id",
@@ -1966,19 +1891,7 @@ def eval_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: same ONE scan → ≤10-group hash agg as the bins query, then
     a 10-row rollup; single-row output."""
-    binned = _scored(spark, sf_dir, _CAL_SCALE).select(
-        F.least(
-            F.floor(F.col("score") * _CAL_BINS).cast("long"),
-            F.lit(_CAL_BINS - 1).cast("long"),
-        ).alias("bin"),
-        (F.col("label") == _POS_LABEL).alias("pos"),
-        F.round(F.col("score") * 1_000_000).cast("long").alias("s_micro"),
-    )
-    per_bin = binned.groupBy("bin").agg(
-        F.count("*").cast("long").alias("n"),
-        F.count_if("pos").cast("long").alias("n_pos"),
-        F.sum("s_micro").cast("long").alias("sm"),
-    )
+    per_bin = _calibration_per_bin(spark, sf_dir)
     s = per_bin.agg(
         F.count("*").cast("long").alias("n_bins"),
         F.sum("n").cast("long").alias("n_total"),
@@ -2000,6 +1913,42 @@ _FLEISS_C = 4  # categories
 # P(rater echoes the item's true label) = 0.7 ⇒ first-8-hex threshold
 # floor(0.7 · 16⁸) = 0xb3333333 (string compare, no hex parsing).
 _FLEISS_AGREE_HEX = "b3333333"
+
+
+def _rating_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, cat, c): the (item, category) count matrix of the
+    generated ratings. Each of ``_FLEISS_R`` raters echoes the item's
+    true label (doc_id % ``_FLEISS_C``) when the first 8 hex digits of
+    a keyed md5 fall below ``_FLEISS_AGREE_HEX``, else picks the
+    category the next 8 hex digits select uniformly."""
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", (F.col("doc_id") % _FLEISS_C).alias("t")
+    )
+    r = docs.select(
+        "doc_id",
+        "t",
+        F.explode(F.sequence(F.lit(0), F.lit(_FLEISS_R - 1))).alias("r"),
+    )
+    h = F.md5(
+        F.concat(
+            F.lit("fl"),
+            F.col("doc_id").cast("string"),
+            F.lit(":"),
+            F.col("r").cast("string"),
+        )
+    )
+    cat = (
+        F.when(F.substring(h, 1, 8) < _FLEISS_AGREE_HEX, F.col("t"))
+        .when(F.substring(h, 9, 8) < "40000000", F.lit(0))
+        .when(F.substring(h, 9, 8) < "80000000", F.lit(1))
+        .when(F.substring(h, 9, 8) < "c0000000", F.lit(2))
+        .otherwise(F.lit(3))
+    )
+    return (
+        r.select("doc_id", cat.cast("long").alias("cat"))
+        .groupBy("doc_id", "cat")
+        .agg(F.count("*").cast("long").alias("c"))
+    )
 
 
 @register(
@@ -2068,34 +2017,7 @@ def eval_fleiss_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one generated-ratings scan → (item, cat) hash agg → two
     skinny rollups (1-row + C-row) joined via the unfoldable-key
     broadcast; 1-row output."""
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", (F.col("doc_id") % _FLEISS_C).alias("t")
-    )
-    r = docs.select(
-        "doc_id",
-        "t",
-        F.explode(F.sequence(F.lit(0), F.lit(_FLEISS_R - 1))).alias("r"),
-    )
-    h = F.md5(
-        F.concat(
-            F.lit("fl"),
-            F.col("doc_id").cast("string"),
-            F.lit(":"),
-            F.col("r").cast("string"),
-        )
-    )
-    cat = (
-        F.when(F.substring(h, 1, 8) < _FLEISS_AGREE_HEX, F.col("t"))
-        .when(F.substring(h, 9, 8) < "40000000", F.lit(0))
-        .when(F.substring(h, 9, 8) < "80000000", F.lit(1))
-        .when(F.substring(h, 9, 8) < "c0000000", F.lit(2))
-        .otherwise(F.lit(3))
-    )
-    nij = (
-        r.select("doc_id", cat.cast("long").alias("cat"))
-        .groupBy("doc_id", "cat")
-        .agg(F.count("*").cast("long").alias("c"))
-    )
+    nij = _rating_counts(spark, sf_dir)
     s1 = nij.agg(
         F.sum(F.col("c") * (F.col("c") - 1)).cast("long").alias("s1"),
         F.sum("c").cast("long").alias("total"),
@@ -2268,12 +2190,11 @@ def eval_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ALWAYS be used; Welch 1947): t = (x̄₁−x̄₂)/√(v₁/n₁+v₂/n₂) with
     Welch–Satterthwaite df.
 
-    Six exact int64 moments (n, Σm, Σm² per group, DECI-units —
-    requantized from milli in r10 after the sf1.0 materialization
-    soak hit ARITHMETIC_OVERFLOW live in n·Σm²: at 10× event mass
-    the milli-unit power sum passes 2⁶³; deci buys ~600× headroom at
-    sf1.0, next decade coarsen again — the timeseries_stl_strength
-    lesson applied to this op);
+    Six exact int64 moments (n, Σm, Σm² per group, DECI-units — a
+    milli-unit n·Σm² raises ARITHMETIC_OVERFLOW at sf1.0, where the
+    10× event mass pushes the power sum past 2⁶³; deci buys ~600×
+    headroom at sf1.0, next decade coarsen again, as
+    timeseries_stl_strength does);
     sample variance over n enters as the all-integer
     (n·Σm²−(Σm)²)/(n²(n−1)) with ONE BIGINT→DOUBLE cast each; t and
     df are each ONE fixed parenthesization TRUNCATED (t's sign is
@@ -2334,6 +2255,41 @@ def eval_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _chi_square_cells(
+    o: DataFrame, row: str, col: str
+) -> tuple[DataFrame, DataFrame]:
+    """For a (``row``, ``col``, o) count table: one row (n_cells,
+    chi2_micro, dr, dc) — observed cells, the summed micro-unit
+    (o−e)²/e terms with e_milli = (1000·r·c) DIV n (cells with
+    e_milli = 0 skipped), and the row/column degrees of freedom — plus
+    the 1-row total frame (n)."""
+    r = o.groupBy(row).agg(F.sum("o").cast("long").alias("r"))
+    c = o.groupBy(col).agg(F.sum("o").cast("long").alias("c"))
+    n = o.agg(F.sum("o").cast("long").alias("n"))
+    cells = o.join(F.broadcast(r), row).join(F.broadcast(c), col)
+    cells = (
+        attach_scalar_frame(cells, "o", n, "n")
+        .select("o", F.expr("(1000 * r * c) div n").alias("e_milli"))
+        .filter(F.col("e_milli") > 0)
+        .select(
+            F.expr(
+                "(1000 * o - e_milli) * (1000 * o - e_milli) * 1000"
+                " div e_milli"
+            ).alias("term")
+        )
+    )
+    dof_r = r.agg((F.count("*") - 1).cast("long").alias("dr"))
+    dof_c = c.agg((F.count("*") - 1).cast("long").alias("dc"))
+    s = cells.agg(
+        F.count("*").cast("long").alias("n_cells"),
+        F.sum("term").cast("long").alias("chi2_micro"),
+    )
+    j = attach_scalar_frame(
+        attach_scalar_frame(s, "n_cells", dof_r, "dr"), "n_cells", dof_c, "dc"
+    )
+    return j, n
+
+
 @register(
     "eval_chi_square",
     oracle="""
@@ -2365,9 +2321,8 @@ def eval_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not, a per-source sampler silently skews the language mix).
 
     The textbook Σ(o−e)²/e with e = r·c/N clears all FLOAT divisions
-    via a two-stage integer quantization (r10 reformulation — the
-    original single-expression (o·N−r·c)²·10⁶ form hit
-    ARITHMETIC_OVERFLOW live at sf1.0 in the materialization soak:
+    via a two-stage integer quantization (the single-expression
+    (o·N−r·c)²·10⁶ form raises ARITHMETIC_OVERFLOW at sf1.0:
     (oN−rc)² alone passes 2⁶³ once N·max(o) > 3·10⁹):
     e_milli = (1000·r·c) DIV N, then per-cell
     term = (1000·o − e_milli)²·1000 DIV e_milli — micro-units of
@@ -2386,35 +2341,7 @@ def eval_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
     R-, C-, and 1-row frames broadcast back; 1-row output."""
     docs = load_table(spark, sf_dir, "documents")
     o = docs.groupBy("lang", "source").agg(F.count("*").cast("long").alias("o"))
-    r = o.groupBy("lang").agg(F.sum("o").cast("long").alias("r"))
-    c = o.groupBy("source").agg(F.sum("o").cast("long").alias("c"))
-    n = o.agg(F.sum("o").cast("long").alias("n"))
-    cells = (
-        o.join(F.broadcast(r), "lang")
-        .join(F.broadcast(c), "source")
-    )
-    cells = (
-        attach_scalar_frame(cells, "o", n, "n")
-        .select(
-            "o", F.expr("(1000 * r * c) div n").alias("e_milli")
-        )
-        .filter(F.col("e_milli") > 0)
-        .select(
-            F.expr(
-                "(1000 * o - e_milli) * (1000 * o - e_milli) * 1000"
-                " div e_milli"
-            ).alias("term")
-        )
-    )
-    dof_r = r.agg((F.count("*") - 1).cast("long").alias("dr"))
-    dof_c = c.agg((F.count("*") - 1).cast("long").alias("dc"))
-    s = cells.agg(
-        F.count("*").cast("long").alias("n_cells"),
-        F.sum("term").cast("long").alias("chi2_micro"),
-    )
-    j = attach_scalar_frame(
-        attach_scalar_frame(s, "n_cells", dof_r, "dr"), "n_cells", dof_c, "dc"
-    )
+    j, _ = _chi_square_cells(o, "lang", "source")
     return j.select(
         "n_cells",
         (F.col("dr") * F.col("dc")).cast("long").alias("dof"),
@@ -2485,34 +2412,7 @@ def eval_krippendorff_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: identical cascade to eval_fleiss_kappa — generated-ratings
     scan → (item, cat) hash agg → two skinny rollups; 1-row output."""
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", (F.col("doc_id") % _FLEISS_C).alias("t")
-    )
-    r = docs.select(
-        "doc_id",
-        "t",
-        F.explode(F.sequence(F.lit(0), F.lit(_FLEISS_R - 1))).alias("r"),
-    )
-    h = F.md5(
-        F.concat(
-            F.lit("fl"),
-            F.col("doc_id").cast("string"),
-            F.lit(":"),
-            F.col("r").cast("string"),
-        )
-    )
-    cat = (
-        F.when(F.substring(h, 1, 8) < _FLEISS_AGREE_HEX, F.col("t"))
-        .when(F.substring(h, 9, 8) < "40000000", F.lit(0))
-        .when(F.substring(h, 9, 8) < "80000000", F.lit(1))
-        .when(F.substring(h, 9, 8) < "c0000000", F.lit(2))
-        .otherwise(F.lit(3))
-    )
-    nij = (
-        r.select("doc_id", cat.cast("long").alias("cat"))
-        .groupBy("doc_id", "cat")
-        .agg(F.count("*").cast("long").alias("c"))
-    )
+    nij = _rating_counts(spark, sf_dir)
     o = nij.agg(
         F.sum(F.col("c") * (_FLEISS_R - F.col("c")))
         .cast("long")
@@ -2600,41 +2500,8 @@ def eval_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderpriority").alias("pri"),
         F.col("o_orderstatus").alias("st"),
     ).agg(F.count("*").cast("long").alias("o"))
-    r = o.groupBy("pri").agg(F.sum("o").cast("long").alias("r"))
-    c = o.groupBy("st").agg(F.sum("o").cast("long").alias("c"))
-    n = o.agg(F.sum("o").cast("long").alias("n"))
-    cells = (
-        o.join(F.broadcast(r), "pri")
-        .join(F.broadcast(c), "st")
-    )
-    cells = (
-        attach_scalar_frame(cells, "o", n, "n")
-        .select("o", F.expr("(1000 * r * c) div n").alias("e_milli"))
-        .filter(F.col("e_milli") > 0)
-        .select(
-            F.expr(
-                "(1000 * o - e_milli) * (1000 * o - e_milli) * 1000"
-                " div e_milli"
-            ).alias("term")
-        )
-    )
-    dof_r = r.agg((F.count("*") - 1).cast("long").alias("dr"))
-    dof_c = c.agg((F.count("*") - 1).cast("long").alias("dc"))
-    s = cells.agg(
-        F.count("*").cast("long").alias("n_cells"),
-        F.sum("term").cast("long").alias("chi2_micro"),
-    )
-    j = attach_scalar_frame(
-        attach_scalar_frame(
-            attach_scalar_frame(s, "n_cells", dof_r, "dr"),
-            "n_cells",
-            dof_c,
-            "dc",
-        ),
-        "n_cells",
-        n,
-        "n",
-    )
+    j, n = _chi_square_cells(o, "pri", "st")
+    j = attach_scalar_frame(j, "n_cells", n, "n")
     return j.filter(F.least("dr", "dc") > 0).select(
         "n_cells",
         (F.col("dr") * F.col("dc")).cast("long").alias("dof"),
@@ -2644,6 +2511,34 @@ def eval_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- cumulative gains / lift table ----------------------------------------------
+
+
+def _score_groups(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """Per distinct 6dp score, highest first: (cnt, pos, cum_before)
+    with cum_before the rows in strictly higher score groups; plus the
+    1-row totals (n, p)."""
+    s = _scored(spark, sf_dir).select(
+        "score", (F.col("label") == _POS_LABEL).cast("long").alias("y")
+    )
+    g = s.groupBy("score").agg(
+        F.count("*").cast("long").alias("cnt"),
+        F.sum("y").cast("long").alias("pos"),
+    )
+    w = Window.orderBy(F.col("score").desc()).rowsBetween(
+        Window.unboundedPreceding, -1
+    )
+    cum = g.select(
+        "cnt",
+        "pos",
+        F.coalesce(F.sum("cnt").over(w), F.lit(0))
+        .cast("long")
+        .alias("cum_before"),
+    )
+    tot = g.agg(
+        F.sum("cnt").cast("long").alias("n"),
+        F.sum("pos").cast("long").alias("p"),
+    )
+    return cum, tot
 
 
 @register(
@@ -2703,27 +2598,7 @@ def eval_gain_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-domain bound shared with eval_auc_rank_sum, whitelisted),
     one skinny cumulative pass over score groups, then a ≤10-row
     decile frame; 10-row output."""
-    s = _scored(spark, sf_dir).select(
-        "score", (F.col("label") == _POS_LABEL).cast("long").alias("y")
-    )
-    g = s.groupBy("score").agg(
-        F.count("*").cast("long").alias("cnt"),
-        F.sum("y").cast("long").alias("pos"),
-    )
-    w = Window.orderBy(F.col("score").desc()).rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    cum = g.select(
-        "cnt",
-        "pos",
-        F.coalesce(F.sum("cnt").over(w), F.lit(0))
-        .cast("long")
-        .alias("cum_before"),
-    )
-    tot = g.agg(
-        F.sum("cnt").cast("long").alias("n"),
-        F.sum("pos").cast("long").alias("p"),
-    )
+    cum, tot = _score_groups(spark, sf_dir)
     d = (
         attach_scalar_frame(cum, "cnt", tot, "n")
         .select(
@@ -2969,11 +2844,11 @@ def eval_bootstrap_ci_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     #     digest window LEXICOGRAPHICALLY (fixed-width lowercase hex
     #     orders identically to its numeric value — the
     #     _FLEISS_AGREE_HEX idiom), dropping conv()'s per-row parse;
-    # (c) r14-opt (guide §2.3 "aggregate before you shuffle"): the
-    #     four digest windows become four k COLUMNS aggregated in the
-    #     SAME pass (8 int64 sums grouped by d, unpivoted to the 16
-    #     replicates with stack() afterwards) instead of a second ×4
-    #     explode — the old plan materialized 9.6M rows each carrying
+    # (c) aggregate before the shuffle: the four digest windows
+    #     become four k COLUMNS aggregated in the SAME pass (8 int64
+    #     sums grouped by d, unpivoted to the 16 replicates with
+    #     stack() afterwards) instead of a second ×4 explode — the
+    #     old plan materialized 9.6M rows each carrying
     #     the 32-char hex before the aggregate; int64 sums are
     #     order-independent, so the replicate means are bit-identical.
     def case_sql(w: int) -> str:
@@ -3084,27 +2959,7 @@ def eval_roc_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical plan shape to eval_gain_lift — one score hash
     agg, one skinny cumulative pass, a ≤10-row decile frame; 10-row
     output."""
-    s = _scored(spark, sf_dir).select(
-        "score", (F.col("label") == _POS_LABEL).cast("long").alias("y")
-    )
-    g = s.groupBy("score").agg(
-        F.count("*").cast("long").alias("cnt"),
-        F.sum("y").cast("long").alias("pos"),
-    )
-    w = Window.orderBy(F.col("score").desc()).rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    cum = g.select(
-        "cnt",
-        "pos",
-        F.coalesce(F.sum("cnt").over(w), F.lit(0))
-        .cast("long")
-        .alias("cum_before"),
-    )
-    tot = g.agg(
-        F.sum("cnt").cast("long").alias("n"),
-        F.sum("pos").cast("long").alias("p"),
-    )
+    cum, tot = _score_groups(spark, sf_dir)
     d = (
         attach_scalar_frame(cum, "cnt", tot, "n")
         .select(
@@ -3137,7 +2992,7 @@ def eval_roc_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- Matthews correlation + log loss (round-11 scoreboard additions) ----------
+# --- Matthews correlation + log loss ------------------------------------------
 
 
 @register(
@@ -3175,15 +3030,7 @@ def eval_matthews_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical cross-engine) and one rounded division. ONE scan,
     ONE 4-counter map-side-combined aggregate — O(1) output at any
     input scale."""
-    s = _scored(spark, sf_dir)
-    pred = F.col("score") >= 0.5
-    pos = F.col("label") == _POS_LABEL
-    cm = s.agg(
-        F.count_if(pred & pos).cast("long").alias("tp"),
-        F.count_if(pred & ~pos).cast("long").alias("fp"),
-        F.count_if(~pred & pos).cast("long").alias("fn"),
-        F.count_if(~pred & ~pos).cast("long").alias("tn"),
-    )
+    cm = _confusion_counts(spark, sf_dir)
     num = (F.col("tp") * F.col("tn") - F.col("fp") * F.col("fn")).cast("double")
     den = F.sqrt(
         (
@@ -3262,7 +3109,7 @@ def eval_log_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- composed retrieval-eval pipeline (round 12, VERDICT r11 item 6) ---------
+# --- composed retrieval-eval pipeline ------------------------------------------
 
 _PREV_K = 10          # depth of each arm and of the fused list
 _PREV_NQ = 32         # probe-query count (vec_id < 32)
@@ -3408,7 +3255,7 @@ def pipeline_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- rank-biased overlap (round 12) ------------------------------------------
+# --- rank-biased overlap ------------------------------------------------------
 
 _RBO_K = 20          # evaluation depth of both rankings
 _RBO_NQ = 32         # probe queries (vec_id < 32)
@@ -3516,8 +3363,8 @@ def eval_rank_biased_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # "absent": left-join the overlap aggregate back onto the distinct
     # probe-id set of the unfiltered biscore output (the oracle's
     # DISTINCT q_id FROM ranked) and coalesce to 0 so zero-overlap
-    # queries still contribute a row to n_queries/min/mean (ADVICE r12:
-    # nothing guarantees overlap >= 1 on non-normalized embeddings).
+    # queries still contribute a row to n_queries/min/mean (nothing
+    # guarantees overlap >= 1 on non-normalized embeddings).
     per_q = (
         both.select("q_id")
         .distinct()
@@ -3538,7 +3385,7 @@ def eval_rank_biased_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- regression metrics scoreboard (round 12) ---------------------------------
+# --- regression metrics scoreboard --------------------------------------------
 
 # fixed literal linear model: price_hat = A + B*qty, in integer DOLLARS
 # (dollars, not cents: SSE in cents-squared overflows int64 past ~5e5

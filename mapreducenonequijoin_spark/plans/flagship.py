@@ -33,6 +33,24 @@ GROUP BY 1, 2
 """
 
 
+def _purchase_error_sides(
+    p_src: DataFrame, e_src: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """The flagship join's two inputs: ``p_src``'s purchases as
+    (p_event_id, p_user_id, p_ts) and ``e_src``'s errors as
+    (e_event_id, e_user_id, e_ts). Batch and streaming callers alike
+    pass their own sources (one frame twice, or two streams)."""
+
+    def side(src: DataFrame, event_type: str, prefix: str) -> DataFrame:
+        return src.filter(F.col("event_type") == event_type).select(
+            F.col("event_id").alias(f"{prefix}_event_id"),
+            F.col("user_id").alias(f"{prefix}_user_id"),
+            F.col("ts").alias(f"{prefix}_ts"),
+        )
+
+    return side(p_src, "purchase", "p"), side(e_src, "error", "e")
+
+
 @register("join_self_band", oracle=_FLAGSHIP_ORACLE)
 def purchase_error_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Errors-in-the-preceding-hour per purchase event.
@@ -44,16 +62,7 @@ def purchase_error_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final left join restores purchases with zero errors.
     """
     ev = load_table(spark, sf_dir, "events")
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("p_event_id"),
-        F.col("user_id").alias("p_user_id"),
-        F.col("ts").alias("p_ts"),
-    )
-    errors = ev.filter(F.col("event_type") == "error").select(
-        F.col("event_id").alias("e_event_id"),
-        F.col("user_id").alias("e_user_id"),
-        F.col("ts").alias("e_ts"),
-    )
+    purchases, errors = _purchase_error_sides(ev, ev)
     # e_ts ∈ [p_ts - 1h, p_ts)  ⟺  (e_ts - p_ts) ∈ [-3600s, 0s)
     pairs = band_join(
         purchases,

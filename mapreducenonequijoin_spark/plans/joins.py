@@ -23,6 +23,7 @@ from ..operators.joins import (
     theta_join,
 )
 from ..sources.io import load_table
+from .flagship import _purchase_error_sides
 from .registry import register
 
 
@@ -163,6 +164,24 @@ def join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- as-of --------------------------------------------------------------------
 
 
+def _asof_inputs(
+    spark: SparkSession, sf_dir: str, value_alias: str
+) -> tuple[DataFrame, DataFrame]:
+    """The as-of queries' two inputs from ``events``: purchases as
+    (event_id, user_id, ts) and clicks as (c_user, c_ts, value under
+    ``value_alias``)."""
+    ev = load_table(spark, sf_dir, "events")
+    purchases = ev.filter(F.col("event_type") == "purchase").select(
+        "event_id", "user_id", "ts"
+    )
+    clicks = ev.filter(F.col("event_type") == "click").select(
+        F.col("user_id").alias("c_user"),
+        F.col("ts").alias("c_ts"),
+        F.col("value").alias(value_alias),
+    )
+    return purchases, clicks
+
+
 @register(
     "join_asof",
     oracle="""
@@ -177,15 +196,7 @@ def join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Each purchase enriched with the value of the user's latest
     prior (or simultaneous) click; null when none. Union-tag + window
     rewrite: one shuffle on the key, zero replication."""
-    ev = load_table(spark, sf_dir, "events")
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts"
-    )
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        F.col("user_id").alias("c_user"),
-        F.col("ts").alias("c_ts"),
-        F.col("value").alias("click_value"),
-    )
+    purchases, clicks = _asof_inputs(spark, sf_dir, "click_value")
     out = asof_join(
         purchases, clicks, "ts", "c_ts", "user_id", "c_user", ["click_value"]
     )
@@ -210,15 +221,7 @@ def join_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     the matched row's timestamp travels inside the payload struct, so
     the bound is one post-projection null-out over the same
     single-shuffle union-tag window rewrite."""
-    ev = load_table(spark, sf_dir, "events")
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts"
-    )
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        F.col("user_id").alias("c_user"),
-        F.col("ts").alias("c_ts"),
-        F.col("value").alias("click_value"),
-    )
+    purchases, clicks = _asof_inputs(spark, sf_dir, "click_value")
     out = asof_join(
         purchases, clicks, "ts", "c_ts", "user_id", "c_user",
         ["click_value", "c_ts"],
@@ -431,16 +434,7 @@ def join_outer_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.joins import band_join_outer
 
     ev = load_table(spark, sf_dir, "events")
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("p_event_id"),
-        F.col("user_id").alias("p_user_id"),
-        F.col("ts").alias("p_ts"),
-    )
-    errors = ev.filter(F.col("event_type") == "error").select(
-        F.col("event_id").alias("e_event_id"),
-        F.col("user_id").alias("e_user_id"),
-        F.col("ts").alias("e_ts"),
-    )
+    purchases, errors = _purchase_error_sides(ev, ev)
     out = band_join_outer(
         purchases, errors, "p_ts", "e_ts", lower=-3600, upper=0,
         left_key="p_event_id",
@@ -568,7 +562,7 @@ def join_bloom_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- round-6 additions: forward as-of, equi-prefixed band, spatial grid ------
+# --- forward as-of, equi-prefixed band, spatial grid --------------------------
 
 
 @register(
@@ -588,15 +582,7 @@ def join_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the backward variant — the window just scans from the other
     side (unbounded-following first instead of unbounded-preceding
     last); still one shuffle on the key and zero replication."""
-    ev = load_table(spark, sf_dir, "events")
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts"
-    )
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        F.col("user_id").alias("c_user"),
-        F.col("ts").alias("c_ts"),
-        F.col("value").alias("next_click_value"),
-    )
+    purchases, clicks = _asof_inputs(spark, sf_dir, "next_click_value")
     out = asof_join(
         purchases, clicks, "ts", "c_ts", "user_id", "c_user",
         ["next_click_value"], direction="forward",
@@ -790,15 +776,7 @@ def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     travel in the payload structs so the nearer side is a pure
     epoch-µs projection, no extra join. The oracle mirrors the same
     composition with DuckDB's two ASOF directions."""
-    ev = load_table(spark, sf_dir, "events")
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts"
-    )
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        F.col("user_id").alias("c_user"),
-        F.col("ts").alias("c_ts"),
-        F.col("value").alias("c_val"),
-    )
+    purchases, clicks = _asof_inputs(spark, sf_dir, "c_val")
     bwd = asof_join(
         purchases, clicks, "ts", "c_ts", "user_id", "c_user",
         ["c_val", "c_ts"], direction="backward",

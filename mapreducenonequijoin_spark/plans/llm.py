@@ -2093,8 +2093,8 @@ def dedup_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     a broadcast count-aggregate, a-side lane by id hash, b-side
     replicated s ways, pair set provably unchanged
     (tests/test_llm_ops.py::test_blocked_er_salt_pair_equality) with
-    measured max/median partition-load collapse in
-    tools/dedup_skew.py --er (SCALE.md row). The registry form keeps
+    measured max/median partition-load collapse recorded in SCALE.md
+    (the dedup_skew.py --er study, in git history). The registry form keeps
     salt_hot=0 — at fixture scale the join broadcasts and no block
     nears hot_block_min."""
     from ..operators.dedup import blocked_self_pairs

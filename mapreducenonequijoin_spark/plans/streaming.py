@@ -20,6 +20,7 @@ from ..streaming.windows import (
     sliding_counts,
     tumbling_counts,
 )
+from .flagship import _purchase_error_sides
 from .registry import register
 
 import os
@@ -38,6 +39,22 @@ def tws_runtime_available() -> bool:
         return True
     except ImportError:
         return False
+
+
+def _stream_band_join(p_src: DataFrame, e_src: DataFrame, how: str) -> DataFrame:
+    """The flagship band join as a stream-stream interval join of type
+    ``how``: purchases of ``p_src`` with the same user's errors of
+    ``e_src`` in the preceding hour, each side under a 10-minute
+    watermark so the engine can evict join state."""
+    p, e = _purchase_error_sides(p_src, e_src)
+    return p.withWatermark("p_ts", "10 minutes").join(
+        e.withWatermark("e_ts", "10 minutes"),
+        F.expr(
+            "p_user_id = e_user_id "
+            "AND e_ts >= p_ts - INTERVAL 1 HOUR AND e_ts < p_ts"
+        ),
+        how,
+    )
 
 
 @register(
@@ -135,8 +152,8 @@ def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_late_accounting_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quantitative late-row-accounting gate for watermark drop
     semantics — promotes `stream_watermark_late` (rows-only) to a
-    hash-checkable claim, the same move sim_knn_recall_gate made for
-    ANN recall in round 9.
+    hash-checkable claim, the same move sim_knn_recall_gate makes for
+    ANN recall.
 
     A three-micro-batch replay (full fixture → filler → 64 earliest
     rows re-sent weeks late) runs a 1-hour windowed count under a
@@ -245,33 +262,8 @@ def stream_stream_band_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark clears them) is the largest state any operator here
     carries, and RocksDB keeps it off-heap/spillable — the 100 TB
     deployment default for this operator (SCALE.md)."""
-    p = (
-        events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("p_event_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "10 minutes")
-    )
-    e = (
-        events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "error")
-        .select(
-            F.col("event_id").alias("e_event_id"),
-            F.col("user_id").alias("e_user_id"),
-            F.col("ts").alias("e_ts"),
-        )
-        .withWatermark("e_ts", "10 minutes")
-    )
-    joined = p.join(
-        e,
-        F.expr(
-            "p_user_id = e_user_id "
-            "AND e_ts >= p_ts - INTERVAL 1 HOUR AND e_ts < p_ts"
-        ),
-        "inner",
+    joined = _stream_band_join(
+        events_stream(spark, sf_dir), events_stream(spark, sf_dir), "inner"
     ).select("p_event_id", "e_event_id")
     return run_streaming_append_to_df(joined, spark, state_provider=ROCKSDB_PROVIDER)
 
@@ -434,7 +426,7 @@ def funnel_stages_over(ev: DataFrame, spark: SparkSession) -> DataFrame:
     """,
 )
 def stream_funnel_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming funnel / CEP-lite (round 5): per-user sequential
+    """Streaming funnel / CEP-lite: per-user sequential
     pattern detection (signup → view strictly after → purchase
     strictly after) executed by the STREAMING engine with arbitrary
     per-key state — the continuous twin of the batch
@@ -474,10 +466,10 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics guarantee regardless of how the engine slices the
     batches.
 
-    r15-opt (guide §1 empirical loop, VERDICT item 3): per-batch
-    profile showed each micro-batch pays ~0.45-0.65 s of fixed planner
-    + addBatch + offset/WAL-commit cost regardless of rows, so batch
-    count and state-partition count are the whole wall. step 100→250
+    Batch sizing: a per-batch profile shows each micro-batch pays
+    ~0.45-0.65 s of fixed planner + addBatch + offset/WAL-commit cost
+    regardless of rows, so batch count and state-partition count are
+    the whole wall. step 100→250
     (10→4 batches, still a genuine multi-batch replay) and 2 state
     partitions for the 10-key bucket state (store open/commit is
     per-partition per-batch; 8 partitions for 10 keys is pure
@@ -520,7 +512,7 @@ def stream_sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame
     source, which lists recursively) must equal the closed-form
     source range.
 
-    r15-opt (VERDICT item 3): same per-batch fixed-cost profile as
+    Batch sizing: same per-batch fixed-cost profile as
     stream_python_datasource — step 100→250 cuts the replay from 10
     to 4 micro-batches (4 epochs, still a real multi-epoch two-phase
     commit); the epoch read-back union is split-invariant."""
@@ -577,10 +569,10 @@ def cdc_apply_over(ev: DataFrame, spark: SparkSession) -> DataFrame:
     included, as markers. The final result then keeps only the LATEST
     snapshot per key and drops keys whose latest state is deleted, so
     the answer is identical under ANY micro-batch split: an earlier
-    batch's emission can never survive a later upsert or delete (the
-    ADVICE r6 hazard — append-mode per-batch emissions would otherwise
-    duplicate keys or resurrect pre-delete rows once the staged input
-    arrives in more than one batch)."""
+    batch's emission can never survive a later upsert or delete
+    (append-mode per-batch emissions would otherwise duplicate keys or
+    resurrect pre-delete rows once the staged input arrives in more
+    than one batch)."""
     import pandas as pd
 
     def apply_cdc(key, pdfs, state):
@@ -782,32 +774,9 @@ def stream_left_outer_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.windows import events_stream_sentineled
 
     src = events_stream_sentineled(spark, sf_dir)
-    p = (
-        src.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("p_event_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "10 minutes")
+    joined = _stream_band_join(src, src, "left_outer").select(
+        "p_event_id", "e_event_id"
     )
-    e = (
-        src.filter(F.col("event_type") == "error")
-        .select(
-            F.col("event_id").alias("e_event_id"),
-            F.col("user_id").alias("e_user_id"),
-            F.col("ts").alias("e_ts"),
-        )
-        .withWatermark("e_ts", "10 minutes")
-    )
-    joined = p.join(
-        e,
-        F.expr(
-            "p_user_id = e_user_id "
-            "AND e_ts >= p_ts - INTERVAL 1 HOUR AND e_ts < p_ts"
-        ),
-        "left_outer",
-    ).select("p_event_id", "e_event_id")
     # Sentinels are filtered from the SINK CONTENTS, never inside the
     # streaming plan: a pre-sink filter on p_event_id would be pushed
     # below the left EventTimeWatermark node, the sentinel purchase
@@ -1102,32 +1071,9 @@ def stream_full_outer_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.windows import events_stream_sentineled
 
     src = events_stream_sentineled(spark, sf_dir)
-    p = (
-        src.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("p_event_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "10 minutes")
+    joined = _stream_band_join(src, src, "full_outer").select(
+        "p_event_id", "e_event_id"
     )
-    e = (
-        src.filter(F.col("event_type") == "error")
-        .select(
-            F.col("event_id").alias("e_event_id"),
-            F.col("user_id").alias("e_user_id"),
-            F.col("ts").alias("e_ts"),
-        )
-        .withWatermark("e_ts", "10 minutes")
-    )
-    joined = p.join(
-        e,
-        F.expr(
-            "p_user_id = e_user_id "
-            "AND e_ts >= p_ts - INTERVAL 1 HOUR AND e_ts < p_ts"
-        ),
-        "full_outer",
-    ).select("p_event_id", "e_event_id")
     res = run_streaming_append_to_df(
         joined, spark, state_provider=ROCKSDB_PROVIDER
     )
@@ -1157,8 +1103,8 @@ def stream_full_outer_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def pipeline_stream_alerting(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """COMPOSED streaming pipeline (r12 — the first composed row on the
-    STREAMING side; the four batch compositions have no stream twin):
+    """COMPOSED streaming pipeline (a composed row on the STREAMING
+    side, next to the batch compositions):
     watermarked tumbling window counts -> stream-static broadcast
     enrichment against a per-type threshold dimension -> alert
     classification, all in ONE continuous query. This is the canonical
@@ -1233,9 +1179,9 @@ def pipeline_stream_alerting(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def pipeline_stream_incident_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """COMPOSED streaming pipeline #2 (VERDICT r13 item 5 — the
-    flagship band join in its composed continuous form): watermarked
-    purchases x errors TIME-INTERVAL stream-stream join -> windowed
+    """COMPOSED streaming pipeline #2 (the flagship band join in its
+    composed continuous form): watermarked purchases x errors
+    TIME-INTERVAL stream-stream join -> windowed
     per-user incident accounting -> stateless severity classification,
     all in ONE continuous query with TWO chained stateful operators
     (join state + window-agg state; Spark >= 3.5 multiple-stateful
@@ -1262,31 +1208,8 @@ def pipeline_stream_incident_funnel(spark: SparkSession, sf_dir: str) -> DataFra
     watermark per user (not by stream length); agg state by live
     windows; both evict monotonically. Integer-seconds lag arithmetic
     (int64) keeps every emitted quantity hash-exact."""
-    p = (
-        events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "10 minutes")
-    )
-    e = (
-        events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "error")
-        .select(
-            F.col("user_id").alias("e_user_id"),
-            F.col("ts").alias("e_ts"),
-        )
-        .withWatermark("e_ts", "10 minutes")
-    )
-    joined = p.join(
-        e,
-        F.expr(
-            "p_user_id = e_user_id "
-            "AND e_ts >= p_ts - INTERVAL 1 HOUR AND e_ts < p_ts"
-        ),
-        "inner",
+    joined = _stream_band_join(
+        events_stream(spark, sf_dir), events_stream(spark, sf_dir), "inner"
     )
     accounted = (
         joined.groupBy(

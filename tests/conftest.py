@@ -3,11 +3,13 @@ from __future__ import annotations
 import sys
 from pathlib import Path
 
+import duckdb
 import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from mapreducenonequijoin_spark.session import get_spark  # noqa: E402
+from mapreducenonequijoin_spark.sources.io import TABLES  # noqa: E402
 
 SF_SMOKE = "/root/testdata/sf0.001"
 
@@ -21,3 +23,14 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMOKE
+
+
+@pytest.fixture(scope="session")
+def duck(sf_dir):
+    """DuckDB views over the smoke fixture's tables, for oracle SQL."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    return con

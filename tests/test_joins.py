@@ -1,3 +1,7 @@
+import pytest
+
+from mapreducenonequijoin_spark.plans import QUERIES
+from tools.verify_local import _compare
 
 
 def test_asof_interpolated_matches_python_recompute(spark, sf_dir):
@@ -40,3 +44,23 @@ def test_asof_interpolated_matches_python_recompute(spark, sf_dir):
         for r in join_asof_interpolated(spark, sf_dir).collect()
     }
     assert got == want and len(got) > 0
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "join_asof",
+        "join_asof_tolerance",
+        "join_asof_forward",
+        "join_asof_nearest",
+        "stream_stream_band_join",
+    ],
+)
+def test_asof_and_stream_band_join_match_oracle(spark, sf_dir, duck, name):
+    """The as-of family and the streaming flagship band join agree with
+    their DuckDB oracles (the verify_local comparison: row count,
+    columns, dtypes, order-insensitive values)."""
+    qd = QUERIES[name]
+    got = qd.fn(spark, sf_dir).toPandas()
+    assert len(got) > 0
+    assert _compare(name, got, duck.execute(qd.oracle).fetchdf()) == []

@@ -14,11 +14,9 @@ from __future__ import annotations
 
 import re
 
-import duckdb
 import pytest
 
 from mapreducenonequijoin_spark.plans import QUERIES
-from mapreducenonequijoin_spark.sources.io import TABLES
 
 SF = "/root/testdata/sf0.001"
 
@@ -28,16 +26,6 @@ _EAGER = re.compile(
     r"^(stream_|sim_ivf_search|join_theta$|join_inequality|sim_join_threshold|"
     r"scan_csv_json|sink_|dedup_clusters)"
 )
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')"
-        )
-    return con
 
 
 @pytest.fixture(scope="module")

@@ -49,12 +49,12 @@ GLOBAL_WINDOW_OK: dict[str, dict[str, str]] = {
     "retrieval_rrf_fusion": {
         "bounded_by": "top-k-limit",
         "bound_rows": "K<=50 per ranker (TakeOrdered precedes each rank window)",
-        "site": "plans/evalmetrics.py:300",
+        "site": "plans/evalmetrics.py (_rank_pools)",
     },
     "eval_kendall_tau": {
         "bounded_by": "top-k-limit",
         "bound_rows": "K<=50 (same TakeOrdered pools as rrf_fusion)",
-        "site": "plans/evalmetrics.py:786",
+        "site": "plans/evalmetrics.py (_rank_pools, shared with rrf_fusion)",
     },
     "text_bm25_search": {
         "bounded_by": "top-k-limit",
